@@ -144,8 +144,15 @@ object Queries {
       .orderBy("category")
   }
 
+  /** Only the length rule is validated: the subset is the input rule set,
+    * so the plan carries no referential predicate and no uniqueness
+    * shuffle.
+    */
   def rLengthMismatch(spark: SparkSession, dir: String): DataFrame =
-    graft.report.ReportOps.extractLengthMismatch(detailed(spark, dir))
+    graft.report.ReportOps.extractLengthMismatch(Validator.violations(
+        tok(spark, dir),
+        ruleSet.copy(rules = ruleSet.rules.filter(_.id == "len_consistency")),
+        dims(spark)))
       .orderBy("doc_id", "declared", "actual")
 
   def rHistPivot(spark: SparkSession, dir: String): DataFrame =
@@ -156,8 +163,9 @@ object Queries {
   /** Routed multi-rule-set pass (§2 rows 8/15, VERDICT r1 #4): source 'R'
     * is routed to a lenient 2-rule set, everything else gets the strict
     * default — parsed from the same JSON shape as the reference's
-    * validation_mapping.json, evaluated in ONE scan with per-rule source
-    * gates; uniqueness/referential run per routed slice.
+    * validation_mapping.json, evaluated in ONE scan with per-set gates
+    * (the rule compiler, [[Validator.violations]]); uniqueness runs per
+    * routed slice.
     */
   private val routingJson: String =
     """{ "ruleSets": {
@@ -181,7 +189,7 @@ object Queries {
   def vRoutedMatrix(spark: SparkSession, dir: String): DataFrame = {
     val routing = graft.rules.RuleSetLoader.parse(routingJson)
     Validator.ruleMatrix(
-        Validator.violationsRouted(tok(spark, dir), routing, dims(spark)))
+        Validator.violations(tok(spark, dir), routing, dims(spark)))
       .orderBy("source", "rule_id")
   }
 
@@ -221,20 +229,19 @@ object Queries {
     TokenTable.tokensWide(spark, dir, nSets)
 
   /** Wide routed dispatch: 400 rule sets in ONE scan through the
-    * PARAMETERIZED routing compiler ([[Validator.violationsRoutedWide]] —
-    * the homogeneous family collapses to 2 shared rules + 1 broadcast-
+    * PARAMETERIZED routing compiler ([[Validator.violations]] — the
+    * homogeneous family collapses to 2 shared rules + 1 broadcast-
     * parameterized bounds template + 1 default rule, so per-row cost and
     * generated-code size are independent of rule-set count). Codegen health
     * of the plan (whole-stage compiled, JIT-sized methods, single scan) is
-    * asserted by WideRoutingSpec, which also pins the chunk-staged GATED
-    * path ([[Validator.violationsRouted]]) equal at the same width; this
-    * query pins the result against a closed-form oracle.
+    * asserted by WideRoutingSpec, which also drives a heterogeneous
+    * 400-set config through the chunk-staged row pass; this query pins the
+    * result against a closed-form oracle.
     */
   def vRoutedWide(spark: SparkSession, dir: String): DataFrame = {
     val routing = graft.rules.RuleSetLoader.parse(wideRoutingJson(400))
     Validator.ruleMatrix(
-        Validator.violationsRoutedWide(tokWide(spark, dir, 400), routing,
-          dims(spark)))
+        Validator.violations(tokWide(spark, dir, 400), routing, dims(spark)))
       .orderBy("source", "rule_id")
   }
 
@@ -604,7 +611,8 @@ object Queries {
       ConditionalRule("cond_n_token_bounds", "source", "N",
         TokenBoundsRule("inner_bounds", "tokens", 0, TokenTable.Vocab),
         severity = "warning"))
-    Validator.rowViolations(tok(spark, dir), rules)
+    Validator.violations(tok(spark, dir), RuleSet("conditional", rules),
+        Map.empty)
       .groupBy("rule_id", "severity").agg(count(lit(1)).as("cnt"))
       .orderBy("rule_id")
   }

@@ -92,7 +92,7 @@ object Pipeline {
     val vDir = s"${manifestPath}_violations"
     val result = ValidationRunner.runResumableWith(
       spark, repaired,
-      df => Validator.violationsRoutedWide(df, routing, dims),
+      df => Validator.violations(df, routing, dims),
       manifestPath, snapshotId, Some(vDir))
 
     // 4. quarantine split flags against the PERSISTED violations (no

@@ -42,25 +42,16 @@ object Repair {
     case _ => false
   }
 
-  private def gate(rule: Rule, pred: Column): Column = rule.appliesTo match {
-    case Some(s) => col("source") === lit(s) && pred
-    case None    => pred
-  }
-
-  /** (violated-predicate, target column, fixed-value expression). */
-  private def fix(rule: Rule): (Column, String, Column) = rule match {
+  /** (target column, fixed-value expression); the violated predicate is
+    * the rule compiler's own ([[RuleCompiler.compileRow]]).
+    */
+  private def fix(rule: Rule): (String, Column) = rule match {
     case LengthConsistencyRule(_, arr, len, _, _) =>
-      (gate(rule, col(arr).isNotNull && size(col(arr)) =!= col(len)),
-        len, size(col(arr)).cast("int"))
-    case CharLengthConsistencyRule(_, txt, len, _, _) =>
-      (gate(rule, col(txt).isNotNull && length(col(txt)) =!= col(len)),
-        len, length(col(txt)))
+      (len, size(col(arr)).cast("int"))
+    case CharLengthConsistencyRule(_, txt, len, _, _) => (len, length(col(txt)))
     case RangeRule(_, c, lo, hi, _, _) =>
-      (gate(rule, col(c).isNotNull && (col(c) < lit(lo) || col(c) >= lit(hi))),
-        c, when(col(c) < lit(lo), lit(lo)).otherwise(lit(hi - 1)))
-    case FixedValueRule(_, c, expected, _, _) =>
-      (gate(rule, col(c).isNotNull && col(c) =!= lit(expected)),
-        c, lit(expected))
+      (c, when(col(c) < lit(lo), lit(lo)).otherwise(lit(hi - 1)))
+    case FixedValueRule(_, c, expected, _, _) => (c, lit(expected))
     case r => throw new IllegalArgumentException(
       s"rule ${r.id} (${r.getClass.getSimpleName}) is not auto-repairable")
   }
@@ -73,7 +64,7 @@ object Repair {
 
   /** Repair under per-source rule-set ROUTING — each set's repairable
     * rules fire only on the rows routed to that set (same null-safe gate
-    * semantics as [[Validator.violationsRouted]]: a NULL source belongs to
+    * semantics as [[Validator.violations]]: a NULL source belongs to
     * the default set). Still one codegen'd projection chain: the gates are
     * conjuncts on the fix predicates, not extra passes.
     */
@@ -102,7 +93,8 @@ object Repair {
     val start = df.withColumn("_repairs",
       array().cast("array<string>"))
     rules.foldLeft(start) { case (acc, (rule, setGate)) =>
-      val (violated0, target, value) = fix(rule)
+      val (target, value) = fix(rule)
+      val violated0 = RuleCompiler.compileRow(rule).violated
       val violated = setGate.map(_ && violated0).getOrElse(violated0)
       // the fold stays column-level: each step's predicate reads the
       // PREVIOUS step's columns, so Catalyst collapses the chain into one

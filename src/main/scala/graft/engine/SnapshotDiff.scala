@@ -70,7 +70,7 @@ object SnapshotDiff {
       .where(col("n_rows") > 0)
 
   /** Sentinel standing for the NULL source slice in [[changedSources]]
-    * output. NULL is a real routing key — [[Validator.violationsRouted]]
+    * output. NULL is a real routing key — [[Validator.violations]]
     * sends null-source rows to the default rule set — so a changed
     * null-source row must flag its slice for re-validation rather than
     * silently escape it (ADVICE r5). Use [[sliceFilter]] to turn the

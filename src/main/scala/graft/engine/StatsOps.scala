@@ -120,10 +120,6 @@ object StatsOps {
           (col("sum_n_tok").cast("double") / col("n_rows")))
           .as("var_n_tok"))
 
-  /** Distribution counts: total per source (main.py:276-278 analogue). */
-  def totalsPerSource(tokens: DataFrame): DataFrame =
-    tokens.groupBy("source").agg(count(lit(1)).as("total"))
-
   /** Per-(source, bucket) histogram of sequence lengths — the analogue of the
     * reference's per-(type, code-system) counts (main.py:279-292), with
     * n_tok bucketed by 10.

@@ -24,35 +24,38 @@ import graft.rules._
   */
 object Validator {
 
-  /** Violations from row-level rules: single pass, whole-stage codegen.
-    * Output: (doc_id, rule_id, detail, severity, source).
-    */
-  def rowViolations(df: DataFrame, rules: Seq[Rule]): DataFrame =
-    rowViolationsGated(df, rules.map(r => (r, None)))
-
-  /** Row-rule pass with an optional extra gate per rule (the routed-dispatch
-    * path: the gate is a `source`-membership predicate, so ALL rule sets
-    * still evaluate in ONE scan — rule-set count must not multiply I/O, the
-    * Spark analogue of the reference dispatching 827 per-code profiles
-    * without re-reading pages, maps/validation_mapping.json:4-833).
-    */
   /** Above this many gated rules, the single-projection hits expression is
-    * chunk-staged: whole-stage codegen inlines ALL expression code into one
-    * `doConsume` method (variable-mode codegen cannot split), and past a few
-    * hundred 3-part rules that method exceeds Janino's 64 KB limit
-    * (measured: 1200 gated rules fail to compile in one WSCG projection).
+    * chunk-staged. Unchunked, whole-stage codegen inlines ALL rule code into
+    * one method (variable-mode codegen cannot split) — twice, since
+    * InferFiltersFromGenerate re-inlines the hits expression into a
+    * scan-side Filter. Measured on 3-part routed rules (not-null, length,
+    * range, each gated by cluster) with the rule matrix's partial aggregate
+    * fused into the stage: 9 KB of bytecode at 12 rules, 34 KB at 48, and
+    * past Janino's 64 KB limit at 96. The chunked form only pays off once it
+    * leaves whole-stage codegen ([[GatedRuleChunks]]), which takes ≥ 33
+    * chunk columns: 32 is the largest rule count kept as one projection.
     */
-  private val GatedRuleChunkThreshold = 192
+  private val GatedRuleChunkThreshold = 32
 
   /** >= spark.sql.codegen.maxFields (100): a staged projection this wide is
-    * EXCLUDED from whole-stage codegen, so it compiles as a row-based
-    * UnsafeProjection — which CAN split generated code into JIT-sized
-    * methods. Row-based expression codegen, not interpretation: the cost vs
-    * WSCG is the row-materialization boundary, not a 24× interpreter drop.
+    * EXCLUDED from whole-stage codegen (an array<struct<rule_id, detail,
+    * severity>> chunk column counts 3 nested fields, so ≥ 33 chunks already
+    * suffice), so it compiles as a row-based UnsafeProjection — which CAN
+    * split generated code into JIT-sized methods (measured: 730 bytes at
+    * 48 to 1200 rules). Row-based expression codegen, not interpretation:
+    * the cost vs WSCG is the row-materialization boundary, not a 24×
+    * interpreter drop.
     */
   private val GatedRuleChunks = 101
 
-  def rowViolationsGated(
+  /** The shared row-rule pass: every row rule, each with an optional extra
+    * gate (a rule-set membership predicate under routing), in ONE scan —
+    * rule-set count must not multiply I/O, the Spark analogue of the
+    * reference dispatching 827 per-code profiles without re-reading pages
+    * (maps/validation_mapping.json:4-833).
+    * Output: (doc_id, rule_id, detail, severity, source).
+    */
+  private def rowPass(
       df: DataFrame, rules: Seq[(Rule, Option[Column])]): DataFrame = {
     // The hits array is a CONCAT of per-rule conditional sub-arrays (empty
     // when the rule passes), not `array(when…)` + a higher-order `filter`:
@@ -128,25 +131,6 @@ object Validator {
     */
   private val SmallDimMaxValues = 10000
 
-  /** Referential violations against a SMALL dimension (the reference's
-    * value-set membership check, SURVEY.md §2 row 10).
-    *
-    * A value set is driver-small by definition — a broadcast join collects
-    * it to the driver anyway — so the membership check compiles to a
-    * STATIC `NOT IN` predicate instead of a broadcast anti-join. The
-    * difference at scale is pruning: an anti-join cannot prune anything
-    * (dynamic partition pruning does not apply to anti-joins), while the
-    * static predicate prunes PARTITIONS when the checked column is the
-    * partition key and pushes to row-group stats otherwise. Measured at
-    * 38.4M rows / 8 threads: 0.12 s vs 3.1 s for the anti-join — and the
-    * anti-join's cost was flat from 2 to 8 threads (it reads everything).
-    *
-    * NULL keys are violations (a null can't be in any value set) — the
-    * `isNull ||` term matches the anti-join's null semantics exactly.
-    * Dimensions larger than [[SmallDimMaxValues]] fall back to the
-    * broadcast anti-join; truly large dimensions belong to
-    * [[referentialViolationsBigDim]].
-    */
   /** The dimension's non-null value list when it is small enough to
     * compile into a static predicate; None → anti-join territory. Null dim
     * entries are dropped: a NULL in the isin literal list makes `!isin`
@@ -169,6 +153,25 @@ object Validator {
   private def valueSetRule(rule: ReferentialRule, values: Seq[Any]): Rule =
     ValueSetRule(rule.id, rule.column, values, rule.dimension, rule.severity)
 
+  /** Referential violations against a SMALL dimension (the reference's
+    * value-set membership check, SURVEY.md §2 row 10).
+    *
+    * A value set is driver-small by definition — a broadcast join collects
+    * it to the driver anyway — so the membership check compiles to a
+    * STATIC `NOT IN` predicate instead of a broadcast anti-join. The
+    * difference at scale is pruning: an anti-join cannot prune anything
+    * (dynamic partition pruning does not apply to anti-joins), while the
+    * static predicate prunes PARTITIONS when the checked column is the
+    * partition key and pushes to row-group stats otherwise. Measured at
+    * 38.4M rows / 8 threads: 0.12 s vs 3.1 s for the anti-join — and the
+    * anti-join's cost was flat from 2 to 8 threads (it reads everything).
+    *
+    * NULL keys are violations (a null can't be in any value set) — the
+    * `isNull ||` term matches the anti-join's null semantics exactly.
+    * Dimensions larger than [[SmallDimMaxValues]] fall back to the
+    * broadcast anti-join; truly large dimensions belong to
+    * [[referentialViolationsBigDim]].
+    */
   def referentialViolations(
       df: DataFrame, rule: ReferentialRule, dim: DataFrame): DataFrame = {
     val base = smallDimValues(dim) match {
@@ -218,11 +221,19 @@ object Validator {
     * alternative — the rejoin loses because duplicate sets are NOT small
     * under skew (collapsed keys), which is exactly when uniqueness matters.
     */
-  def uniqueViolations(df: DataFrame, rule: UniqueRule): DataFrame = {
-    val keys = rule.keyColumns
+  def uniqueViolations(df: DataFrame, rule: UniqueRule): DataFrame =
+    uniqueViolationsPer(df, rule, Nil)
+
+  /** [[uniqueViolations]] with extra grouping keys that partition the
+    * frame into independent slices (the routed compiler passes the rule-set
+    * name): a key duplicated across two slices is not a violation of
+    * either. The slice keys never reach the rendered doc_id or detail.
+    */
+  private def uniqueViolationsPer(
+      df: DataFrame, rule: UniqueRule, sliceKeys: Seq[Column]): DataFrame =
     // the internal alias keeps the aggregate distinct from a grouping
     // column when `source` is itself part of a composite key
-    df.groupBy(keys.map(col): _*)
+    df.groupBy(sliceKeys ++ rule.keyColumns.map(col): _*)
       .agg(count(lit(1)).as("cnt"), min(col("source")).as("_src"))
       .where(col("cnt") > 1)
       .select(uniqueKeyRendered(rule).as("doc_id"),
@@ -230,7 +241,6 @@ object Validator {
         concat(lit(s"${uniqueKeyLabel(rule)} occurs "),
           col("cnt").cast("string"), lit(" times")).as("detail"),
         lit(rule.severity).as("severity"), col("_src").as("source"))
-  }
 
   /** Composite keys render `|`-joined into the violation's doc_id slot
     * (single-column keys keep the exact cast-to-string form, including
@@ -244,123 +254,31 @@ object Validator {
     if (rule.moreColumns.isEmpty) rule.column
     else rule.keyColumns.mkString("(", ",", ")")
 
-  /** Full rule-set pass → detailed violations
-    * (doc_id, rule_id, detail, severity, source).
-    *
-    * Round 7: small-dimension referential rules compile into the SAME
-    * single-scan row pass (guide §2.4 — each previously paid its own
-    * corpus scan as a union branch; the value set was already collected
-    * at plan time either way). Large dimensions keep the anti-join leg.
+  /** Full pass of ONE rule set → detailed violations
+    * (doc_id, rule_id, detail, severity, source): the one-set routing
+    * (no routed family), so it compiles to exactly one row pass plus one
+    * aggregate per unique rule and one anti-join per big-dimension
+    * referential rule.
     */
-  /** The rule set's row rules with every small-dimension referential rule
-    * fused in as a [[graft.rules.ValueSetRule]], plus the big-dimension
-    * referential rules left for the anti-join leg — the shared split
-    * behind [[violations]] and the one-pass subset diff
-    * ([[graft.report.ReportOps.diffReportSubset]]).
-    */
-  def fusedRowRules(ruleSet: RuleSet, dims: Map[String, DataFrame])
-      : (Seq[Rule], Seq[ReferentialRule]) = {
-    val resolved = ruleSet.referentialRules
-      .map(r => r -> smallDimValues(dims(r.dimension)))
-    (ruleSet.rowRules ++ resolved.collect {
-      case (r, Some(values)) => valueSetRule(r, values)
-    }, resolved.collect { case (r, None) => r })
-  }
-
   def violations(
       df: DataFrame, ruleSet: RuleSet,
-      dims: Map[String, DataFrame]): DataFrame = {
-    val (fusedRow, bigRefs) = fusedRowRules(ruleSet, dims)
-    val row = rowViolations(df, fusedRow)
-    val refs = bigRefs.map(r => referentialViolations(df, r, dims(r.dimension)))
-    val uniq = ruleSet.uniqueRules.map(uniqueViolations(df, _))
-    (Seq(row) ++ refs ++ uniq).reduce(_ unionByName _)
-  }
+      dims: Map[String, DataFrame]): DataFrame =
+    violations(df, RuleSetLoader.Routing(
+      Map(ruleSet.name -> ruleSet), Map.empty, ruleSet.name), dims)
 
-  /** Full pass under per-source rule-set ROUTING (SURVEY.md §2 rows 8/15;
-    * the reference's validation_mapping.json dispatch). Semantics: a source
-    * routed to rule set S is validated by S's rules only; unrouted sources
-    * get `routing.defaultRuleSet`.
+  /** The rule compiler: a full pass under per-source rule-set ROUTING
+    * (SURVEY.md §2 rows 8/15; the reference's validation_mapping.json
+    * dispatch) → detailed violations (doc_id, rule_id, detail, severity,
+    * source). Semantics: a source routed to rule set S is validated by S's
+    * rules only; every other source — a NULL source included — gets
+    * `routing.defaultRuleSet`. Uniqueness is per set by definition: a
+    * duplicate across differently-routed sources violates neither set.
     *
-    * Shape: every rule set's ROW rules evaluate in the same single scan,
-    * gated by a source-membership predicate (no per-set passes). Dataset
-    * rules (referential / uniqueness) run on the gated SLICE — uniqueness
-    * under routing is per-slice by definition (a duplicate across
-    * differently-routed sources is not a violation of either set).
-    */
-  def violationsRouted(
-      df: DataFrame, routing: RuleSetLoader.Routing,
-      dims: Map[String, DataFrame]): DataFrame = {
-    // Fail fast on dangling config: a source routed to a nonexistent rule
-    // set would otherwise be excluded from the default gate yet get no
-    // rules — silently skipping validation for that slice.
-    val unknown = routing.routing.collect {
-      case (src, set) if !routing.ruleSets.contains(set) => s"$src -> $set"
-    }
-    require(unknown.isEmpty,
-      s"routing targets missing from ruleSets: ${unknown.mkString(", ")}")
-    require(routing.ruleSets.contains(routing.defaultRuleSet),
-      s"defaultRuleSet '${routing.defaultRuleSet}' missing from ruleSets")
-    val routedTo: Map[String, Seq[String]] =
-      routing.routing.groupBy(_._2).view.mapValues(_.keys.toSeq.sorted).toMap
-    val routedElsewhere: Map[String, Seq[String]] =
-      routing.ruleSets.keys.map { name =>
-        name -> routing.routing.collect {
-          case (src, s) if s != name => src
-        }.toSeq.sorted
-      }.toMap
-
-    // Null-safe default gate: `!isin` yields NULL for a NULL source, which
-    // would drop the row from EVERY rule set — a row silently escaping all
-    // validation, the validator's core failure mode. A NULL source is by
-    // definition unrouted, so it belongs to the default set (whose notNull
-    // rules are exactly what should see it).
-    def gateFor(setName: String): Option[Column] =
-      if (setName == routing.defaultRuleSet) {
-        val others = routedElsewhere(setName)
-        if (others.isEmpty) None
-        else Some(coalesce(!col("source").isin(others: _*), lit(true)))
-      } else Some(col("source").isin(routedTo.getOrElse(setName, Nil): _*))
-
-    val sets = routing.ruleSets.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        name == routing.defaultRuleSet || routedTo.contains(name)
-      }
-    // small-dim referential rules ride the shared row-rule scan with the
-    // set's gate as their predicate gate (round 7 — previously one corpus
-    // scan per (set, referential rule) as a union branch); large dims keep
-    // the per-slice anti-join
-    val resolvedRefs = sets.map { case (name, rs) =>
-      (name, rs, rs.referentialRules
-        .map(r => r -> smallDimValues(dims(r.dimension))))
-    }
-    val gatedRows = resolvedRefs.flatMap { case (name, rs, refs) =>
-      rs.rowRules.map(r => (r, gateFor(name))) ++
-        refs.collect { case (r, Some(values)) =>
-          (valueSetRule(r, values), gateFor(name))
-        }
-    }
-    val rowPart = rowViolationsGated(df, gatedRows)
-    val bigRefs = resolvedRefs.flatMap { case (name, _, refs) =>
-      refs.collect { case (r, None) =>
-        referentialViolations(
-          gateFor(name).map(df.where).getOrElse(df), r, dims(r.dimension))
-      }
-    }
-    val uniq = sets.flatMap { case (name, rs) =>
-      val slice = gateFor(name).map(df.where).getOrElse(df)
-      rs.uniqueRules.map(uniqueViolations(slice, _))
-    }
-    (Seq(rowPart) ++ bigRefs ++ uniq).reduce(_ unionByName _)
-  }
-
-  /** Routed dispatch at HIGH rule-set cardinality — the reference's actual
-    * shape: its 827 per-LOINC profiles share one structure and differ only
-    * in parameters (maps/validation_mapping.json:4-833). Instead of gating
-    * each set's rules (per-row cost O(#sets × #rules), and a generated-code
-    * size that grows with the config), the family is CLUSTERED by rule-set
-    * signature (the rule list with RangeRule bounds erased) and each
-    * cluster compiles to one template instantiation:
+    * The routed family (every set some source is routed to, bar the
+    * default) is CLUSTERED by rule-set signature — the reference's 827
+    * per-LOINC profiles share one structure and differ only in parameters
+    * (maps/validation_mapping.json:4-833) — and each cluster compiles to
+    * one template instantiation:
     *
     *  - rules IDENTICAL across a cluster's sets → evaluated once, gated by
     *    cluster membership (`_grp` from the broadcast parameter dimension);
@@ -371,40 +289,43 @@ object Validator {
     *  - the default rule set's rules → gated by NOT-routed (null-safe).
     *
     * One scan + one broadcast hash join for ALL row rules; per-row cost
-    * O(#signature-clusters × #template-rules), INDEPENDENT of rule-set
-    * count — 827 or 80,000 profiles over a handful of shapes cost the same
-    * per row, and the generated code grows with the cluster count, not the
+    * O(#signature-clusters × #template-rules), independent of rule-set
+    * count, and the generated code grows with the cluster count, not the
     * config (WideRoutingSpec asserts whole-stage codegen with JIT-sized
-    * methods at 400 sets). Dataset-level rules collapse per DISTINCT rule,
-    * across clusters: uniqueness is per-slice BY DEFINITION, so every
-    * cluster sharing a unique rule pools into ONE aggregate on the
-    * compound key (set, column) — a single shuffle however many sets — and
-    * referential rules (row-local) pool into one membership check over the
-    * union of their clusters' rows. The gated path runs one aggregate per
-    * SLICE; this runs one per distinct dataset rule.
+    * methods at 400 sets). A fully heterogeneous config degenerates to one
+    * gated template per set; past [[GatedRuleChunkThreshold]] gated rules
+    * the row pass is chunk-staged. An empty family adds no join and no
+    * gates: a single rule set compiles to its plain one-set plan.
     *
-    * A fully heterogeneous config (every set its own signature) still
-    * compiles — it degenerates to one gated template per set, the same
-    * per-row work as [[violationsRouted]] with the gates supplied by the
-    * broadcast join instead of literal source lists. Only an empty routed
-    * family falls back.
+    * Dataset-level rules collapse per DISTINCT rule across clusters and the
+    * default set: a small-dimension referential rule becomes a
+    * [[graft.rules.ValueSetRule]] in the shared row pass (the value set is
+    * collected at plan time either way, and fusing saves one corpus scan
+    * per referential rule), a large one keeps a broadcast
+    * anti-join over its carriers' rows, and a unique rule runs ONE
+    * [[uniqueViolations]] aggregate over its carriers' rows with the set
+    * name as an extra grouping key — one shuffle however many sets carry
+    * it. Fusion interleaves referential hits with row-rule hits, so the
+    * frame's row order is unspecified; every consumer aggregates or sorts.
     */
-  def violationsRoutedWide(
+  def violations(
       df: DataFrame, routing: RuleSetLoader.Routing,
       dims: Map[String, DataFrame]): DataFrame = {
+    // Fail fast on dangling config: a source routed to a nonexistent rule
+    // set, or a missing default, would otherwise silently skip validation
+    // for that slice.
     val dangling = routing.routing.collect {
       case (src, set) if !routing.ruleSets.contains(set) => s"$src -> $set"
     }
     require(dangling.isEmpty,
       s"routing targets missing from ruleSets: ${dangling.mkString(", ")}")
+    require(routing.ruleSets.contains(routing.defaultRuleSet),
+      s"defaultRuleSet '${routing.defaultRuleSet}' missing from ruleSets")
+    val defaultSet = routing.ruleSets(routing.defaultRuleSet)
     val routedSets = routing.routing.values.toSet
     val family = routing.ruleSets.view
       .filterKeys(n => routedSets.contains(n) && n != routing.defaultRuleSet)
       .toMap
-    val defaultSet = routing.ruleSets.get(routing.defaultRuleSet)
-    if (family.isEmpty) return violationsRouted(df, routing, dims)
-
-    val spark = df.sparkSession
 
     // Signature: the rule list with RangeRule bounds erased (id/column/
     // severity/appliesTo kept — a per-set appliesTo restriction is part of
@@ -415,21 +336,19 @@ object Validator {
       case other => other
     }
     // deterministic cluster order: by lexicographically-first member name
-    val clusters: Seq[(Seq[(String, RuleSet)], Int)] =
+    val clusters: Seq[Seq[(String, RuleSet)]] =
       family.toSeq.sortBy(_._1)
         .groupBy { case (_, rs) => signature(rs) }
-        .values.toSeq.sortBy(_.head._1).zipWithIndex
-    val setToGrp: Map[String, Int] = clusters.flatMap {
+        .values.toSeq.sortBy(_.head._1)
+    val setToGrp: Map[String, Int] = clusters.zipWithIndex.flatMap {
       case (members, gi) => members.map { case (name, _) => name -> gi }
     }.toMap
 
-    // Per cluster: the template, and which of its RangeRules actually VARY
-    // in bounds across the cluster (constant ranges stay literal rules —
-    // smaller generated code, pushable predicates).
-    final case class Cluster(
-        gi: Int, members: Seq[(String, RuleSet)],
-        paramTpl: Seq[RangeRule], shared: RuleSet)
-    val compiled = clusters.map { case (members, gi) =>
+    // Per cluster: which of its template's RangeRules actually VARY in
+    // bounds across the cluster (constant ranges stay literal rules —
+    // smaller generated code, pushable predicates), and the rest.
+    final case class Cluster(gi: Int, paramTpl: Seq[RangeRule], shared: RuleSet)
+    val compiled = clusters.zipWithIndex.map { case (members, gi) =>
       val template = members.head._2.rules
       val paramTpl = template.collect {
         case r: RangeRule if members.exists(_._2.rules.exists {
@@ -438,118 +357,107 @@ object Validator {
         }) => r
       }
       val paramIds = paramTpl.map(_.id).toSet
-      Cluster(gi, members, paramTpl,
+      Cluster(gi, paramTpl,
         RuleSet(s"_tpl$gi", template.filterNot(r => paramIds.contains(r.id))))
     }
 
     // parameter dimension: one row per ROUTED source carrying its set name
-    // (the slice key for compound-key dataset rules), its cluster id, and
-    // that source's bounds for every parameterized rule of ITS cluster
-    // (null elsewhere) — config-sized (the analogue of
-    // validation_mapping.json itself), broadcast to the scan
+    // (the uniqueness slice key), its cluster id, and that source's bounds
+    // for every parameterized rule of ITS cluster (null elsewhere) —
+    // config-sized (the analogue of validation_mapping.json itself),
+    // broadcast to the scan
     val paramCols: Seq[(Int, RangeRule)] =
       compiled.flatMap(c => c.paramTpl.map(t => (c.gi, t)))
-    val paramRows: Seq[org.apache.spark.sql.Row] =
-      // a source explicitly routed to the DEFAULT set is not in the family:
-      // it gets no dimension row, joins null, and lands in the default gate
-      // below — the same semantics the gated path gives it
-      routing.routing.toSeq.filter(e => family.contains(e._2))
-        .sortBy(_._1).map { case (src, setName) =>
-        val rs = routing.ruleSets(setName)
-        val gi = setToGrp(setName)
-        val bounds = paramCols.flatMap { case (g, t) =>
-          if (g != gi) Seq(null, null)
-          else {
-            val r = rs.rules.collectFirst {
-              case o: RangeRule if o.id == t.id => o
-            }.get
-            Seq(java.lang.Long.valueOf(r.lo), java.lang.Long.valueOf(r.hi))
-          }
-        }
-        org.apache.spark.sql.Row.fromSeq(src +: setName +: gi +: bounds)
-      }
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
     def loCol(gi: Int, id: String) = s"_lo_g${gi}_$id"
     def hiCol(gi: Int, id: String) = s"_hi_g${gi}_$id"
-    val paramSchema = StructType(
-      StructField("source", StringType) ::
-      StructField("_set", StringType) ::
-      StructField("_grp", IntegerType) ::
-      paramCols.flatMap { case (g, t) => Seq(
-        StructField(loCol(g, t.id), LongType),
-        StructField(hiCol(g, t.id), LongType))
-      }.toList)
-    val paramDim = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(paramRows).asJava,
-      paramSchema)
-
-    val joined = df.join(broadcast(paramDim), Seq("source"), "left")
-
-    // cluster rules gate by `_grp`; default rules gate by NOT routed —
-    // null-safe by construction (a NULL source joins nothing → _set null →
-    // the row lands in the default set, whose notNull rules should see it)
-    val routedGate = col("_set").isNotNull
-    val paramRules: Seq[(Rule, Option[Column])] =
-      paramCols.map { case (g, t) =>
-        (ColumnBoundsRule(t.id, t.column, loCol(g, t.id), hiCol(g, t.id),
-          t.severity, t.appliesTo): Rule) -> None // null bounds self-gate
+    val src =
+      if (family.isEmpty) df
+      else {
+        import org.apache.spark.sql.Row
+        import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+        val paramRows: Seq[Row] =
+          // a source explicitly routed to the DEFAULT set is not in the
+          // family: it gets no dimension row, joins null, and lands in the
+          // default gate below
+          routing.routing.toSeq.filter(e => family.contains(e._2))
+            .sortBy(_._1).map { case (source, setName) =>
+            val rs = routing.ruleSets(setName)
+            val gi = setToGrp(setName)
+            val bounds = paramCols.flatMap { case (g, t) =>
+              if (g != gi) Seq(null, null)
+              else {
+                val r = rs.rules.collectFirst {
+                  case o: RangeRule if o.id == t.id => o
+                }.get
+                Seq(java.lang.Long.valueOf(r.lo), java.lang.Long.valueOf(r.hi))
+              }
+            }
+            Row.fromSeq(source +: setName +: gi +: bounds)
+          }
+        val paramSchema = StructType(
+          StructField("source", StringType) ::
+          StructField("_set", StringType) ::
+          StructField("_grp", IntegerType) ::
+          paramCols.flatMap { case (g, t) => Seq(
+            StructField(loCol(g, t.id), LongType),
+            StructField(hiCol(g, t.id), LongType))
+          }.toList)
+        val paramDim = df.sparkSession.createDataFrame(
+          scala.jdk.CollectionConverters.SeqHasAsJava(paramRows).asJava,
+          paramSchema)
+        df.join(broadcast(paramDim), Seq("source"), "left")
       }
-    val sharedRules = compiled.flatMap { c =>
-      val gate: Option[Column] =
-        if (clusters.size == 1) Some(routedGate)
-        else Some(col("_grp") === lit(c.gi))
-      c.shared.rowRules.map(r => r -> gate)
-    }
-    val defaultRows = defaultSet.toSeq.flatMap(_.rowRules.map(
-      r => r -> (Some(!routedGate): Option[Column])))
-    val rowPart =
-      rowViolationsGated(joined, sharedRules ++ paramRules ++ defaultRows)
 
-    // dataset rules collapse per DISTINCT rule across clusters: one
-    // compound-key aggregate / membership check over the union of the
-    // clusters that carry the rule (one shuffle per distinct rule, not per
-    // set and not per cluster)
-    def clusterGate(gis: Seq[Int]): Column =
-      if (gis.size == clusters.size) routedGate
-      else col("_grp").isin(gis: _*)
-    val uniqJobs = compiled.flatMap(c => c.shared.uniqueRules.map(_ -> c.gi))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-      .sortBy(_._1.id)
-    val uniqParts = uniqJobs.map { case (u, gis) =>
-      joined.where(clusterGate(gis))
-        .groupBy(col("_set"), col(u.column))
-        .agg(count(lit(1)).as("cnt"), min(col("source")).as("source"))
-        .where(col("cnt") > 1)
-        .select(col(u.column).cast("string").as("doc_id"),
-          lit(u.id).as("rule_id"),
-          concat(lit(s"${u.column} occurs "), col("cnt").cast("string"),
-            lit(" times")).as("detail"),
-          lit(u.severity).as("severity"), col("source"))
+    // The gate of a rule carried by clusters `gis` and, when `inDefault`,
+    // by the default set. Null-safe by construction: a NULL source joins
+    // nothing → `_set` null → the row lands in the default set, whose
+    // notNull rules should see it. None = every row.
+    val routed = col("_set").isNotNull
+    def gate(gis: Seq[Int], inDefault: Boolean): Option[Column] =
+      if (gis.size == clusters.size && inDefault) None
+      else if (gis.isEmpty) Some(!routed)
+      else {
+        val g = if (gis.size == clusters.size) routed else col("_grp").isin(gis: _*)
+        Some(if (inDefault) g || !routed else g)
+      }
+
+    // dataset rules pool per DISTINCT rule over every carrier (cluster
+    // templates, then the default set) — first-appearance order; each with
+    // the clusters that carry it and whether the default set does
+    val carriers: Seq[(Option[Int], RuleSet)] =
+      compiled.map(c => (Some(c.gi), c.shared)) :+ (None -> defaultSet)
+    def pooled[R <: Rule](rulesOf: RuleSet => Seq[R]): Seq[(R, Seq[Int], Boolean)] = {
+      val carried = carriers.flatMap { case (gi, rs) => rulesOf(rs).map(_ -> gi) }
+      carried.map(_._1).distinct.map { r =>
+        val by = carried.collect { case (`r`, gi) => gi }
+        (r, by.flatten, by.contains(None))
+      }
     }
-    val refJobs = compiled
-      .flatMap(c => c.shared.referentialRules.map(_ -> c.gi))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-      .sortBy(_._1.id)
-    val refParts = refJobs.map { case (r, gis) =>
-      referentialViolations(joined.where(clusterGate(gis)), r,
-        dims(r.dimension))
+    val refs = pooled(_.referentialRules).map { case (r, gis, inDefault) =>
+      (r, gate(gis, inDefault), smallDimValues(dims(r.dimension)))
     }
-    val defaultSlice = joined.where(!routedGate)
-    val defaultUniq = defaultSet.toSeq.flatMap(_.uniqueRules.map(
-      uniqueViolations(defaultSlice, _)))
-    val defaultRefs = defaultSet.toSeq.flatMap(_.referentialRules.map(r =>
-      referentialViolations(defaultSlice, r, dims(r.dimension))))
-    (Seq(rowPart) ++ uniqParts ++ refParts ++ defaultUniq ++ defaultRefs)
-      .reduce(_ unionByName _)
+
+    val rowRules: Seq[(Rule, Option[Column])] =
+      compiled.flatMap(c => c.shared.rowRules.map(_ -> gate(Seq(c.gi), false))) ++
+        paramCols.map { case (g, t) =>
+          // null bounds self-gate
+          (ColumnBoundsRule(t.id, t.column, loCol(g, t.id), hiCol(g, t.id),
+            t.severity, t.appliesTo): Rule) -> None
+        } ++
+        defaultSet.rowRules.map(_ -> gate(Nil, true)) ++
+        refs.collect { case (r, g, Some(values)) => valueSetRule(r, values) -> g }
+    def rowsOf(g: Option[Column]): DataFrame = g.map(src.where).getOrElse(src)
+    val bigRefs = refs.collect { case (r, g, None) =>
+      referentialViolations(rowsOf(g), r, dims(r.dimension))
+    }
+    // the set name keys the aggregate only where routed sets carry the
+    // rule (the default slice alone is one set)
+    val uniq = pooled(_.uniqueRules).map { case (u, gis, inDefault) =>
+      uniqueViolationsPer(rowsOf(gate(gis, inDefault)), u,
+        if (gis.isEmpty) Nil else Seq(col("_set")))
+    }
+    (Seq(rowPass(src, rowRules)) ++ bigRefs ++ uniq).reduce(_ unionByName _)
   }
-
-  /** Row-rule union order note (round 7): fusing small-dim referential
-    * rules into the row pass changes the ORDER violations appear in the
-    * returned frame (they now interleave with row-rule hits instead of
-    * following them as a union branch); every consumer aggregates or
-    * applies a deterministic sort, so outputs are unchanged (multiset
-    * identity pinned by the oracle on every registry query).
-    */
 
   /** Explicit salted two-phase uniqueness (north-star: "salted repartition
     * on skewed sources"). Phase 1 aggregates on (key, salt) — a hot key's
@@ -652,41 +560,36 @@ object Validator {
     * the reference's containment policy (HTTP/validation failures append a
     * processing issue and the run continues, main.py:225-263).
     *
-    * Resolution is probed per rule against the frame's schema (cheap,
-    * driver-side analysis only); healthy row rules still evaluate in ONE
-    * batched scan — containment costs no extra passes.
+    * Each rule is probed alone against the frame (driver-side analysis;
+    * a referential probe also resolves its dimension), then the healthy
+    * subset runs through ONE [[violations]] pass — containment costs no
+    * extra corpus passes.
     */
   def violationsContained(
       df: DataFrame, ruleSet: RuleSet,
       dims: Map[String, DataFrame]): DataFrame = {
-    val spark = df.sparkSession
-
     def errorRow(ruleId: String, e: Throwable): DataFrame =
-      spark.range(1).select(
+      df.sparkSession.range(1).select(
         lit("-").as("doc_id"), lit(ruleId).as("rule_id"),
         lit(s"engine_error: ${e.getClass.getSimpleName}").as("detail"),
         lit("error").as("severity"), lit("-").as("source"))
 
-    val (goodRows, badRows) = ruleSet.rowRules.partition { r =>
-      try { df.select(RuleCompiler.compileRow(r).violated); true }
-      catch { case _: Exception => false }
-    }
-    val rowPart =
-      if (goodRows.nonEmpty) Seq(rowViolations(df, goodRows)) else Nil
-    val rowErrs = badRows.map { r =>
-      val err = try { df.select(RuleCompiler.compileRow(r).violated); null }
-                catch { case e: Exception => e }
-      errorRow(r.id, err)
-    }
-    val refs = ruleSet.referentialRules.map { r =>
-      try referentialViolations(df, r, dims(r.dimension))
-      catch { case e: Exception => errorRow(r.id, e) }
-    }
-    val uniq = ruleSet.uniqueRules.map { r =>
-      try uniqueViolations(df, r)
-      catch { case e: Exception => errorRow(r.id, e) }
-    }
-    (rowPart ++ rowErrs ++ refs ++ uniq).reduce(_ unionByName _)
+    def probe(rule: Rule): Option[Exception] =
+      try {
+        rule match {
+          case r: ReferentialRule =>
+            referentialViolations(df, r, dims(r.dimension))
+          case r: UniqueRule => uniqueViolations(df, r)
+          case r => df.select(RuleCompiler.compileRow(r).violated)
+        }
+        None
+      } catch { case e: Exception => Some(e) }
+    val probed = (ruleSet.rowRules ++ ruleSet.referentialRules ++
+      ruleSet.uniqueRules).map(r => r -> probe(r))
+    val healthy = RuleSet(ruleSet.name, probed.collect { case (r, None) => r })
+    (violations(df, healthy, dims) +:
+      probed.collect { case (r, Some(e)) => errorRow(r.id, e) })
+      .reduce(_ unionByName _)
   }
 
   /** Per-source validation with adaptive fallback (SURVEY.md §2 row 39, the

@@ -178,25 +178,19 @@ object ReportOps {
   def diffReportSubset(tok: DataFrame, ruleSet: graft.rules.RuleSet,
       dims: Map[String, DataFrame],
       baseFlag: Column): DataFrame = {
-    import graft.engine.Validator
     val tagged = tok.withColumn("doc_id",
       concat(col("doc_id"), when(baseFlag, lit("#1")).otherwise(lit("#0"))))
-    // small-dim referential rules ride the single row-rule scan here too
-    // (round 7, same fusion as Validator.violations) — the diff's scan
-    // budget stays equal to the violations plan's own (PlanAudit)
-    val (fusedRow, bigRefs) = Validator.fusedRowRules(ruleSet, dims)
-    val rowRefParts =
-      (if (fusedRow.nonEmpty)
-        Seq(Validator.rowViolations(tagged, fusedRow)) else Nil) ++
-      bigRefs.map(r =>
-        Validator.referentialViolations(tagged, r, dims(r.dimension)))
-    val rr = rowRefParts.reduceOption(_ unionByName _).map {
-      _.select(col("doc_id").as("_tag"), col("rule_id"), col("source"))
-        .groupBy(expr("substring(_tag, 1, length(_tag)-2)").as("doc_id"),
-          col("rule_id"), col("source"))
-        .agg(max(expr("substring(_tag, -2, 2) = '#1'")).as("in_base"))
-        .withColumn("in_cur", lit(true))
-    }
+    // row and referential rules through the one compiler (small-dim
+    // referential rules ride its row scan) — the diff's scan budget stays
+    // equal to the violations plan's own (PlanAudit)
+    val rr = graft.engine.Validator.violations(tagged,
+        ruleSet.copy(rules = ruleSet.rules
+          .filterNot(_.isInstanceOf[graft.rules.UniqueRule])), dims)
+      .select(col("doc_id").as("_tag"), col("rule_id"), col("source"))
+      .groupBy(expr("substring(_tag, 1, length(_tag)-2)").as("doc_id"),
+        col("rule_id"), col("source"))
+      .agg(max(expr("substring(_tag, -2, 2) = '#1'")).as("in_base"))
+      .withColumn("in_cur", lit(true))
 
     // one projection + explode per unique rule: emitting the current and
     // base-only identities as where()+union branches would EXECUTE the
@@ -225,7 +219,7 @@ object ReportOps {
           col("r.in_base"), col("r.in_cur"))
     }
 
-    (rr.toSeq ++ uniqs).reduce(_ unionByName _)
+    (rr +: uniqs).reduce(_ unionByName _)
       .select(col("rule_id"),
         when(col("in_cur") && col("in_base"), "persisting")
           .when(col("in_cur"), "new")

@@ -63,7 +63,7 @@ final case class RangeRule(
 
 /** Range check whose bounds come from COLUMNS (joined from a parameter
   * dimension) instead of literals — the building block of parameterized
-  * rule-set routing ([[graft.engine.Validator.violationsRoutedWide]]): one
+  * rule-set routing ([[graft.engine.Validator.violations]]): one
   * codegen'd template evaluates for every routed source, with per-source
   * bounds supplied by a broadcast join. NULL bounds (unrouted source) mean
   * the rule does not apply to the row.

@@ -11,13 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * user-supplied config into the `Map[String, DataFrame]` the engine
   * resolves those names against, replacing hardcoded dimensions end to end.
   *
-  * Two shapes:
-  *  - inline JSON (`{"valueSets": {"name": ["A","N"], ...}}`) for small
-  *    enumerations — each becomes a 1-column local-relation DataFrame that
-  *    the referential check broadcast-anti-joins (no scan, no shuffle);
-  *  - a parquet table per dimension for LARGE code systems — these flow to
-  *    [[graft.engine.Validator.referentialViolationsBigDim]]'s shuffle-join
-  *    path (a 10⁸-code system must never be collected or broadcast).
+  * Inline JSON (`{"valueSets": {"name": ["A","N"], ...}}`) for small
+  * enumerations — each becomes a 1-column local-relation DataFrame that
+  * the referential check compiles into a static predicate (no scan, no
+  * shuffle). A LARGE code system is any DataFrame (a parquet scan) handed
+  * to [[graft.engine.Validator.referentialViolationsBigDim]]'s shuffle-join
+  * path (a 10⁸-code system must never be collected or broadcast).
   */
 object DimensionLoader {
   import org.json4s._
@@ -49,13 +48,4 @@ object DimensionLoader {
         s"valueSets must be a JSON object, got: $other")
     }
   }
-
-  /** A large dimension stored as parquet: `column` is projected as the
-    * membership key (first column convention of the referential join).
-    * Stays a lazy scan — partition pruning / pushdown apply as usual.
-    */
-  def fromParquet(spark: SparkSession, path: String, column: String,
-      name: String): DataFrame =
-    spark.read.parquet(path).select(
-      org.apache.spark.sql.functions.col(column).as(s"${name}_value"))
 }

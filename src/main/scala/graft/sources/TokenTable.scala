@@ -95,10 +95,6 @@ object TokenTable {
       .partitionBy("source")
       .parquet(dir)
 
-  /** Unmaterialized derivation (tests / one-shot pipelines). */
-  def tokensDerived(spark: SparkSession, sfDir: String): DataFrame =
-    fromLineitem(lineitem(spark, sfDir))
-
   /** K-times scaled token table for scaling-efficiency runs: replica r
     * offsets l_orderkey by r·10⁷, so doc_ids stay distinct across replicas
     * and every injected-violation congruence class reappears at the same

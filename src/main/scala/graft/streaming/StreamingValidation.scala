@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 import graft.engine.Validator
 import graft.model.DetailedViolation
-import graft.rules.{ReferentialRule, RuleSet}
+import graft.rules.{RuleSet, UniqueRule}
 
 /** Structured-Streaming face of the validation engine: the same compiled
   * rule predicates evaluated continuously over an unbounded token stream.
@@ -17,10 +17,10 @@ import graft.rules.{ReferentialRule, RuleSet}
   * validate-and-merge loop (main.py:249-267) becomes incremental micro-batch
   * execution with state kept by the engine, not by driver dicts:
   *
-  *  - row rules: stateless — identical `Column` predicates as batch
-  *    ([[Validator.rowViolations]] works on a streaming frame unchanged).
-  *  - referential rules: stream–static broadcast anti-join (the dimension is
-  *    a static table, so no stream-stream join state is needed).
+  *  - row and referential rules: stateless — the batch compiler
+  *    ([[Validator.violations]]) works on a streaming frame unchanged; a
+  *    small dimension becomes a static predicate in the row pass, a large
+  *    one a stream–static broadcast anti-join (no stream-stream state).
   *  - uniqueness: genuinely stateful — `flatMapGroupsWithState` keyed by
   *    doc_id holding (count, minSource) per key. At cluster scale state is
   *    hash-partitioned by key across executors and checkpointed by the
@@ -39,20 +39,18 @@ object StreamingValidation {
     StructField("n_tok", IntegerType),
     StructField("source", StringType)))
 
-  /** Stateless violation stream: row rules in one codegen pass, plus one
-    * stream–static broadcast anti-join per referential rule. Output schema =
-    * batch [[Validator.violations]] (doc_id, rule_id, detail, severity,
-    * source); works in append mode with no watermark.
+  /** Stateless violation stream: the batch compiler over the rule set
+    * without its unique rules (uniqueness is the stateful
+    * [[uniqueViolationStream]]). Output schema = batch
+    * [[Validator.violations]] (doc_id, rule_id, detail, severity, source);
+    * works in append mode with no watermark.
     */
   def violationStream(
       stream: DataFrame, ruleSet: RuleSet,
-      dims: Map[String, DataFrame]): DataFrame = {
-    val row = Validator.rowViolations(stream, ruleSet.rowRules)
-    val refs = ruleSet.referentialRules.map { r =>
-      Validator.referentialViolations(stream, r, dims(r.dimension))
-    }
-    (Seq(row) ++ refs).reduce(_ unionByName _)
-  }
+      dims: Map[String, DataFrame]): DataFrame =
+    Validator.violations(stream,
+      ruleSet.copy(rules = ruleSet.rules.filterNot(_.isInstanceOf[UniqueRule])),
+      dims)
 
   /** Stateful streaming uniqueness: emits a violation row whenever a doc_id
     * arrives that was already seen (in this or any earlier micro-batch).

@@ -24,6 +24,7 @@ object Explain {
     val spark = Sessions.local(cpus, "graft-explain")
     val dims = Map("allowed_sources" -> TokenTable.allowedDim(spark))
     val ruleSet = RuleSet.default(TokenTable.Vocab)
+    val rowRules = RuleSet("rows", ruleSet.rowRules)
 
     def tok = TokenTable.tokens(spark, sfDir)
 
@@ -32,7 +33,7 @@ object Explain {
       .head.getLong(0))
     timed("preds_only")(tok.where(size(col("tokens")) =!= col("n_tok") ||
       !forall(col("tokens"), t => t >= 0 && t < 50000)).count())
-    timed("row_rules")(Validator.rowViolations(tok, ruleSet.rowRules).count())
+    timed("row_rules")(Validator.violations(tok, rowRules, dims).count())
     timed("referential")(Validator.referentialViolations(
       tok, ruleSet.referentialRules.head, dims("allowed_sources")).count())
     timed("unique")(Validator.uniqueViolations(tok, ruleSet.uniqueRules.head).count())
@@ -48,9 +49,9 @@ object Explain {
       val sbase = TokenTable.tokensBaseline(spark, sfDir)
       println(s"[explain] scan splits: ${stok.rdd.getNumPartitions}")
       timed("x_scan")(stok.count())
-      timed("x_rowrules")(Validator.rowViolations(stok, ruleSet.rowRules).count())
-      timed("x_rowrules2")(Validator.rowViolations(stok, ruleSet.rowRules).count())
-      timed("x_rowrules3")(Validator.rowViolations(stok, ruleSet.rowRules).count())
+      timed("x_rowrules")(Validator.violations(stok, rowRules, dims).count())
+      timed("x_rowrules2")(Validator.violations(stok, rowRules, dims).count())
+      timed("x_rowrules3")(Validator.violations(stok, rowRules, dims).count())
       timed("x_unique")(Validator.uniqueViolations(stok, ruleSet.uniqueRules.head).count())
       timed("x_referential")(Validator.referentialViolations(
         stok, ruleSet.referentialRules.head, dims("allowed_sources")).count())
@@ -70,13 +71,9 @@ object Explain {
         graft.Queries.wideRoutingJson(wideN))
       val wtok = stok.withColumn("source",
         concat(col("source"), lit("_"), (col("okey") % wideN).cast("string")))
-      timed("x_routed_wide")(Validator.violationsRoutedWide(
+      timed("x_routed_wide")(Validator.violations(
         wtok, wideRouting, dims).count())
-      timed("x_routed_wide2")(Validator.violationsRoutedWide(
-        wtok, wideRouting, dims).count())
-      timed("x_routed_gated")(Validator.violationsRouted(
-        wtok, wideRouting, dims).count())
-      timed("x_routed_gated2")(Validator.violationsRouted(
+      timed("x_routed_wide2")(Validator.violations(
         wtok, wideRouting, dims).count())
     }
     if (args.contains("--fullpass")) {
@@ -112,14 +109,14 @@ object Explain {
       val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "16").toInt
       val stok = TokenTable.tokensScaled(spark, sfDir, scale)
       // warm-up
-      Validator.rowViolations(stok, ruleSet.rowRules).count()
+      Validator.violations(stok, rowRules, dims).count()
       timed("rr_inferred_filter")(
-        Validator.rowViolations(stok, ruleSet.rowRules).count())
+        Validator.violations(stok, rowRules, dims).count())
       spark.conf.set("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      Validator.rowViolations(stok, ruleSet.rowRules).count()
+      Validator.violations(stok, rowRules, dims).count()
       timed("rr_no_infer")(
-        Validator.rowViolations(stok, ruleSet.rowRules).count())
+        Validator.violations(stok, rowRules, dims).count())
       spark.conf.unset("spark.sql.optimizer.excludedRules")
 
       Validator.uniqueViolations(stok, ruleSet.uniqueRules.head).count()

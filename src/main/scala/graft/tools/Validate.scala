@@ -134,14 +134,12 @@ object Validate {
       .getOrElse(Map.empty)
     val vDir = violationsDir.getOrElse(s"${manifestPath}_violations")
 
-    // violationsRoutedWide: the signature-cluster compiler — identical
-    // semantics to the gated form (WideRoutingSpec pins equality on
-    // homogeneous, heterogeneous, and appliesTo configs) but per-row cost
-    // independent of rule-set count; measured 162× faster at 400 sets /
-    // 9.6M rows (Explain --scaled, BASELINE.md). The gated path remains
-    // only as the empty-family fallback inside it.
+    // the signature-cluster compiler: per-row cost independent of
+    // rule-set count (WideRoutingSpec pins it against the per-slice
+    // definition of routing on homogeneous, heterogeneous and appliesTo
+    // configs)
     val result = graft.engine.ValidationRunner.runResumableWith(
-      spark, tokens, df => Validator.violationsRoutedWide(df, routing, dims),
+      spark, tokens, df => Validator.violations(df, routing, dims),
       manifestPath, snapshotId, Some(vDir))
 
     val reportPath = reportDir.map { dir =>

@@ -22,7 +22,7 @@ class PlanAuditSpec extends SparkSpec {
       s"report scans = ${scans(Queries.rReportFull(spark, sf001))} > " +
         s"violations scans = $vScans — the report re-executes the subtree")
     // routed: one row-rule scan + one per dataset-rule slice
-    assert(scans(Queries.vRoutedMatrix(spark, sf001)) <= 6)
+    assert(scans(Queries.vRoutedMatrix(spark, sf001)) <= 2)
     // one-pass subset diff (r6): the snapshot diff must cost ONE rule
     // pass, not two — same scan budget as the violations plan itself
     assert(scans(Queries.rReportDiff(spark, sf001)) <=

@@ -138,10 +138,11 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("cluster routing compiler equals gated dispatch on random configs") {
-    // equivalence fuzz for Validator.violationsRoutedWide: random rule-set
+    // equivalence fuzz for the routed Validator.violations: random rule-set
     // families — a few shapes (signature clusters), each instantiated by
     // several sets with fresh range bounds — over random routings and
-    // random token tables must produce EXACTLY the gated path's rows.
+    // random token tables must produce EXACTLY the rows of source-gated
+    // per-slice dispatch, the definition of routing (RoutingReference).
     // Every case reproducible from its seed.
     import graft.rules._
     val s = spark
@@ -158,12 +159,16 @@ class PropertySpec extends AnyFunSuite {
         RangeRule("rng", "n_tok", lo, hi, severity = "warning")
       case 3 => TokenBoundsRule("tb", "tokens", 0, vocab)
       case 4 => UniqueRule("uq", "doc_id", severity = "warning")
-      case _ => ReferentialRule("rf", "source", "allowed_sources")
+      case 5 => ReferentialRule("rf", "source", "allowed_sources")
+      case _ =>
+        // composite key: its extra column must survive the routed aggregate
+        UniqueRule("uqc", "doc_id", severity = "warning",
+          moreColumns = Seq("n_tok"))
     }
 
     val genShape: Gen[List[Int]] = for {
       n <- Gen.chooseNum(1, 4)
-      kinds <- Gen.pick(n, 0 to 5)
+      kinds <- Gen.pick(n, 0 to 6)
     } yield kinds.toList.sorted
 
     val genConfig: Gen[(Int, List[List[Int]], Map[String, Int])] = for {
@@ -201,9 +206,9 @@ class PropertySpec extends AnyFunSuite {
         v.select("doc_id", "rule_id", "detail", "severity", "source")
           .collect().map(r => (r.getString(0), r.getString(1),
             r.getString(2), r.getString(3), r.getString(4))).toSet
-      val wide = rowSet(Validator.violationsRoutedWide(df, routing, dims))
-      val gated = rowSet(Validator.violationsRouted(df, routing, dims))
-      assert(wide === gated, s"seed=$seed config=($nSets, $shapes, $routeIdx)")
+      val got = rowSet(Validator.violations(df, routing, dims))
+      val want = rowSet(RoutingReference.violations(df, routing, dims))
+      assert(got === want, s"seed=$seed config=($nSets, $shapes, $routeIdx)")
     }
   }
 

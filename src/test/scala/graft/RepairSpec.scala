@@ -20,10 +20,10 @@ class RepairSpec extends SparkSpec {
   test("repaired table re-validates clean against the repairable rules") {
     val tok = TokenTable.tokens(spark, sf0001)
     val rules = consistent
-    val before = Validator.rowViolations(tok, rules).count()
+    val before = Validator.violations(tok, RuleSet("r", rules), Map.empty).count()
     assert(before > 0L, "fixture must exercise both fixes")
     val fixed = Repair.repaired(tok, rules).drop("_repairs")
-    assert(Validator.rowViolations(fixed, rules).count() === 0L)
+    assert(Validator.violations(fixed, RuleSet("r", rules), Map.empty).count() === 0L)
     // lossless: same rows, untouched rows byte-identical
     assert(fixed.count() === tok.count())
     val touched = Repair.repaired(tok, rules)

@@ -79,7 +79,7 @@ class ValidatorSpec extends SparkSpec {
       TokenRow("a", Array(1), 2, "A"),   // violates, source matches
       TokenRow("n", Array(1), 2, "N")    // violates but not routed
     ).toDF
-    val got = Validator.rowViolations(df, rs.rowRules)
+    val got = Validator.violations(df, rs, Map.empty)
       .select("doc_id").as[String].collect().toSet
     assert(got === Set("a"))
   }
@@ -98,7 +98,7 @@ class ValidatorSpec extends SparkSpec {
         |  "routing": { "A": "lenient" },
         |  "defaultRuleSet": "strict" }""".stripMargin)
     val got = Validator.canonical(
-        Validator.violationsRouted(fixture, routing, dims))
+        Validator.violations(fixture, routing, dims))
       .as[(String, String, String)].collect().toSet
     // A rows: lenient only → len-1 fires, dup-1/dup-1(A) exempt from unique;
     // others: strict only → bound-1 (R), ref-1 (bogus); the dup pair is
@@ -187,8 +187,7 @@ class ValidatorSpec extends SparkSpec {
       """{"ruleSets": {"d": [{"type":"charLengthConsistency","id":"cm",
         |  "textColumn":"text","lengthColumn":"n_chars"}]},
         | "routing": {}, "defaultRuleSet": "d"}""".stripMargin)
-    val v = Validator.rowViolations(d,
-        routing.ruleSets("d").rules)
+    val v = Validator.violations(d, routing.ruleSets("d"), Map.empty)
       .select("doc_id", "rule_id").as[(String, String)].collect().toSeq
     // only the mismatching non-null row fires; null text is a NotNull
     // concern, not a length one
@@ -207,8 +206,17 @@ class ValidatorSpec extends SparkSpec {
       """{"ruleSets": {"default": [{"type":"notNull","id":"nn","column":"tokens"}]},
         | "routing": {"A": "no_such_set"}, "defaultRuleSet": "default"}""".stripMargin)
     val e = intercept[IllegalArgumentException](
-      Validator.violationsRouted(fixture, routing, dims))
+      Validator.violations(fixture, routing, dims))
     assert(e.getMessage.contains("no_such_set"))
+    // a routed family with no `defaultRuleSet` key: the loader names the
+    // default "default", which is absent — the unrouted sources would be
+    // validated by no rules at all
+    val noDefault = RuleSetLoader.parse(
+      """{"ruleSets": {"strict": [{"type":"notNull","id":"nn","column":"tokens"}]},
+        | "routing": {"A": "strict"}}""".stripMargin)
+    val e2 = intercept[IllegalArgumentException](
+      Validator.violations(fixture, noDefault, dims))
+    assert(e2.getMessage.contains("defaultRuleSet"))
   }
 
   test("routed dispatch: NULL source rows fall to the default rule set") {
@@ -229,7 +237,7 @@ class ValidatorSpec extends SparkSpec {
       TokenRow("n-null", null, 1, "N")         // strict: null tokens
     ).toDF
     val got = Validator.canonical(
-        Validator.violationsRouted(df, routing, dims))
+        Validator.violations(df, routing, dims))
       .as[(String, String, String)].collect().toSet
     assert(got === Set(
       ("null-src", "not_null_source",
@@ -248,7 +256,7 @@ class ValidatorSpec extends SparkSpec {
       TokenRow("a-ok", Array(1), 1, "A"),          // premise, no violation
       TokenRow("n-exempt", Array(1, 2, 3), 3, "N") // violation, no premise
     ).toDF
-    val got = Validator.rowViolations(df, rules)
+    val got = Validator.violations(df, RuleSet("c", rules), Map.empty)
       .select("doc_id", "rule_id", "detail")
       .as[(String, String, String)].collect().toSet
     assert(got === Set(
@@ -354,7 +362,7 @@ class ValidatorSpec extends SparkSpec {
   test("a changed NULL-source row flags its slice for re-validation") {
     // ADVICE r5: the old form dropped null-source diff rows entirely — a
     // changed row silently escaping validation, the engine's core failure
-    // mode (violationsRouted routes null source to the default set)
+    // mode (routed validation sends null source to the default set)
     import graft.engine.SnapshotDiff
     val cols = Seq("doc_id", "n_tok", "source")
     val cur = Seq(("d1", 1, "A"), ("d9", 9, null.asInstanceOf[String]))

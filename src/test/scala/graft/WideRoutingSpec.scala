@@ -1,85 +1,133 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import graft.engine.Validator
+
 /** Routing at the reference's dispatch cardinality (VERDICT r2 #1): the
   * reference routes 827 per-LOINC profiles
   * (/root/reference/maps/validation_mapping.json:4-833); the engine's claim
   * is that ALL rule sets' row rules evaluate in ONE codegen'd scan. This
   * spec proves the claim at 400 rule sets / 1200 gated rules / 1600 routed
-  * sources — not 2 — and that the single `array(when …)` expression neither
-  * overflows Janino's 64 KB method limit (which would throw here, with
-  * codegen fallback disabled) nor emits methods the JIT refuses (> 8000
-  * bytecode bytes → interpreted-speed execution at scale).
+  * sources — not 2 — and that the row pass neither overflows Janino's
+  * 64 KB method limit (which would throw here, with codegen fallback
+  * disabled) nor emits methods the JIT refuses (> 8000 bytecode bytes →
+  * interpreted-speed execution at scale). Results are pinned against the
+  * per-slice definition of routing ([[RoutingReference]]) or against
+  * `v_routed_wide`'s closed-form oracle.
   */
 class WideRoutingSpec extends SparkSpec {
 
-  test("400-set routed dispatch: one scan, whole-stage codegen, JIT-sized methods") {
-    val df = Queries.vRoutedWide(spark, sf0001)
+  private def dims = Map("allowed_sources" ->
+    graft.sources.TokenTable.allowedDim(spark))
 
-    // a compile failure (Janino 64 KB overflow) must THROW, not silently
-    // drop the stage to interpreted evaluation
+  private def rows(df: DataFrame) =
+    df.select("doc_id", "rule_id", "detail", "severity", "source")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4))).toSet
+
+  private def matrix(df: DataFrame) = Validator.ruleMatrix(df)
+    .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+
+  /** Run `df` with codegen fallback DISABLED (a Janino overflow throws) and
+    * assert whole-stage codegen with JIT-sized methods and exactly ONE file
+    * scan — rule-set count must not multiply I/O. Returns the rule matrix.
+    */
+  private def codegenHealthy(df: DataFrame): Set[(String, String, Long)] = {
     spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    val m = Validator.ruleMatrix(df)
+    val got = try {
       // collect() executes THIS queryExecution — under AQE, whole-stage
       // codegen is inserted per stage at execution time, so the plan must
       // actually run before codegen subtrees exist to inspect
-      assert(df.collect().nonEmpty)
-
-      import org.apache.spark.sql.execution.debug._
-      // AQE wraps the finalized plan: collect-based helpers can't see
-      // through AdaptiveSparkPlanExec, so unwrap it (final after collect())
-      val finalPlan = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      val subtrees = codegenStringSeq(finalPlan)
-      assert(subtrees.nonEmpty, "no WholeStageCodegen subtree in the plan")
-      val maxMethod = subtrees.map(_._3.maxMethodCodeSize).max
-      assert(maxMethod > 0, "bytecode stats unavailable — nothing compiled")
-      assert(maxMethod <= 8000,
-        s"largest generated method is $maxMethod bytecode bytes — exceeds " +
-          "the JIT's 8000-byte compilation threshold; chunk the hits array")
+      m.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     } finally spark.conf.unset("spark.sql.codegen.fallback")
-
-    // rule-set count must not multiply I/O: exactly ONE file scan
-    // (count on the unwrapped final plan — AdaptiveSparkPlanExec.toString
-    // prints the initial plan too, double-counting scans)
-    val finalPlan2 = df.queryExecution.executedPlan match {
+    import org.apache.spark.sql.execution.debug._
+    // AQE wraps the finalized plan: collect-based helpers can't see
+    // through AdaptiveSparkPlanExec, so unwrap it (final after collect())
+    val finalPlan = m.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
       case p => p
     }
-    val scans = "Scan parquet".r.findAllIn(finalPlan2.toString).size
+    val subtrees = codegenStringSeq(finalPlan)
+    assert(subtrees.nonEmpty, "no WholeStageCodegen subtree in the plan")
+    val maxMethod = subtrees.map(_._3.maxMethodCodeSize).max
+    assert(maxMethod > 0, "bytecode stats unavailable — nothing compiled")
+    assert(maxMethod <= 8000,
+      s"largest generated method is $maxMethod bytecode bytes — exceeds " +
+        "the JIT's 8000-byte compilation threshold; chunk the hits array")
+    // count on the unwrapped final plan — AdaptiveSparkPlanExec.toString
+    // prints the initial plan too, double-counting scans
+    val scans = "Scan parquet".r.findAllIn(finalPlan.toString).size
     assert(scans == 1, s"expected 1 scan, found $scans")
+    got
+  }
+
+  /** Gated rules in the row pass (one CaseWhen per rule in the hits
+    * projection) and whether the pass is chunk-staged.
+    */
+  private def gatedRules(df: DataFrame): (Int, Boolean) = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, CaseWhen}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val hits = df.queryExecution.analyzed.collect {
+      case p: Project => p.projectList.collect {
+        case a: Alias if a.name == "hits" || a.name.matches("_h\\d+") => a
+      }
+    }.flatten
+    (hits.map(_.child.collect { case c: CaseWhen => c }.size).sum,
+      hits.exists(_.name.startsWith("_h")))
+  }
+
+  /** `nSets` rule sets, each its OWN signature (the range rule's id is
+    * per set), routed like [[Queries.wideRoutingJson]]: nothing clusters,
+    * so the compiler emits 3 gated rules per set.
+    */
+  private def heterogeneousJson(nSets: Int, defaultRules: String): String = {
+    val sets = (0 until nSets).map { b =>
+      s""""p$b": [
+         |  {"type":"notNull","id":"nn","column":"tokens","severity":"fatal"},
+         |  {"type":"lengthConsistency","id":"lc","arrayColumn":"tokens","lengthColumn":"n_tok"},
+         |  {"type":"range","id":"rng$b","column":"n_tok","lo":1,"hi":${10 + b % 37}}
+         |]""".stripMargin
+    }.mkString(",\n")
+    val routes = (for {
+      base <- Seq("A", "N", "R", "bogus"); b <- 0 until nSets
+    } yield s""""${base}_$b": "p$b"""").mkString(",\n")
+    s"""{ "ruleSets": { $sets, "fallback": [ $defaultRules ] },
+       |  "routing": { $routes }, "defaultRuleSet": "fallback" }""".stripMargin
+  }
+
+  test("400-set routed dispatch: one scan, whole-stage codegen, JIT-sized methods") {
+    assert(codegenHealthy(Queries.vRoutedWide(spark, sf0001)).nonEmpty)
   }
 
   test("gated (heterogeneous-capable) path compiles and matches at 400 sets") {
-    // the chunk-staged gated formulation must (a) survive codegen with
-    // fallback DISABLED — i.e. no Janino 64 KB overflow at 1200+ gated
-    // rules — and (b) produce exactly the parameterized compiler's result
-    import org.apache.spark.sql.functions._
-    val routing = graft.rules.RuleSetLoader.parse(Queries.wideRoutingJson(400))
+    // one signature per set → 1200 gated rules (+1 default), past the
+    // chunk threshold: the chunk-staged row pass must survive codegen with
+    // fallback DISABLED, stay one scan with JIT-sized methods, and give
+    // exactly the homogeneous family's result (v_routed_wide, oracle-pinned
+    // in closed form) once the per-set range ids are folded back
+    val routing = graft.rules.RuleSetLoader.parse(heterogeneousJson(400,
+      """{"type":"notNull","id":"nn_src","column":"source","severity":"fatal"}"""))
     val t = Queries.tokWide(spark, sf0001, 400)
-    val dims = Map("allowed_sources" ->
-      graft.sources.TokenTable.allowedDim(spark))
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val gated = graft.engine.Validator.ruleMatrix(
-          graft.engine.Validator.violationsRouted(t, routing, dims))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      val param = graft.engine.Validator.ruleMatrix(
-          graft.engine.Validator.violationsRoutedWide(t, routing, dims))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-      assert(gated === param)
-      assert(gated.nonEmpty)
-    } finally spark.conf.unset("spark.sql.codegen.fallback")
+    val v = Validator.violations(t, routing, dims)
+    val (n, chunked) = gatedRules(v)
+    assert(n >= 1200 && chunked, s"gated rules = $n, chunked = $chunked")
+    val got = codegenHealthy(v).map { case (src, id, c) =>
+      (src, id.replaceAll("^rng\\d+$", "rng"), c)
+    }
+    val homogeneous = Queries.vRoutedWide(spark, sf0001)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(got.nonEmpty)
+    assert(got === homogeneous)
   }
 
   test("wide compiler collapses identical dataset rules: equals gated path") {
     // 40 homogeneous sets whose template carries a UNIQUE and a REFERENTIAL
     // rule (identical across sets) plus a varying range: the compiler must
-    // produce ONE compound-key aggregate + ONE anti-join, and the result
-    // must equal the gated per-slice evaluation exactly
+    // produce ONE compound-key aggregate (the small-dim referential rule
+    // rides the row pass), and the result must equal the source-gated
+    // per-slice evaluation exactly
     val nSets = 40
     val sets = (0 until nSets).map { b =>
       s""""p$b": [
@@ -98,36 +146,27 @@ class WideRoutingSpec extends SparkSpec {
          |  }, "routing": { $routes }, "defaultRuleSet": "fallback" }""".stripMargin
     val routing = graft.rules.RuleSetLoader.parse(json)
     val t = Queries.tokWide(spark, sf0001, nSets)
-    val dims = Map("allowed_sources" ->
-      graft.sources.TokenTable.allowedDim(spark))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "rule_id", "detail", "severity", "source")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4))).toSet
-    val wide = rows(graft.engine.Validator.violationsRoutedWide(t, routing, dims))
-    val gated = rows(graft.engine.Validator.violationsRouted(t, routing, dims))
-    assert(wide === gated)
+    val wide = rows(Validator.violations(t, routing, dims))
+    assert(wide === rows(RoutingReference.violations(t, routing, dims)))
     assert(wide.exists(_._2 == "uq"), "no unique violations exercised")
     assert(wide.exists(_._2 == "rf"), "no referential violations exercised")
-    // the wide plan must hold ONE aggregate-shuffle for uniqueness, not 40:
-    // count Exchange nodes attributable to the unique aggregate via the
-    // compound-key grouping (plan-level sanity: gated has 40 slices)
-    val widePlan = graft.engine.Validator
-      .violationsRoutedWide(t, routing, dims).queryExecution.optimizedPlan
-    val wideAggs = widePlan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }
+    // the wide plan must hold ONE aggregate-shuffle for uniqueness, not 40
+    // (the per-slice reference has 40 slices)
+    val wideAggs = Validator.violations(t, routing, dims)
+      .queryExecution.optimizedPlan.collect {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+      }
     assert(wideAggs.size == 1, s"expected 1 aggregate, got ${wideAggs.size}")
   }
 
   test("heterogeneous clusters: one dataset job per distinct rule, equals gated") {
     // 40 sets in TWO signatures — the partial-homogeneity case the round-3
-    // verdict flagged (the old compiler fell back to the gated path, which
-    // runs one uniqueness aggregate PER SET): even buckets carry
-    // unique+referential+varying-range, odd buckets a different row shape
-    // plus the SAME unique rule. The cluster compiler must (a) equal the
-    // gated evaluation exactly and (b) pool the shared unique rule into ONE
-    // compound-key aggregate across both clusters.
+    // verdict flagged (per-set dispatch runs one uniqueness aggregate PER
+    // SET): even buckets carry unique+referential+varying-range, odd
+    // buckets a different row shape plus the SAME unique rule. The cluster
+    // compiler must (a) equal the source-gated per-slice evaluation exactly
+    // and (b) pool the shared unique rule into ONE compound-key aggregate
+    // across both clusters.
     val nSets = 40
     val sets = (0 until nSets).map { b =>
       if (b % 2 == 0)
@@ -153,25 +192,17 @@ class WideRoutingSpec extends SparkSpec {
          |  }, "routing": { $routes }, "defaultRuleSet": "fallback" }""".stripMargin
     val routing = graft.rules.RuleSetLoader.parse(json)
     val t = Queries.tokWide(spark, sf0001, nSets)
-    val dims = Map("allowed_sources" ->
-      graft.sources.TokenTable.allowedDim(spark))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "rule_id", "detail", "severity", "source")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4))).toSet
-    val wide = rows(graft.engine.Validator.violationsRoutedWide(t, routing, dims))
-    val gated = rows(graft.engine.Validator.violationsRouted(t, routing, dims))
-    assert(wide === gated)
+    val wide = rows(Validator.violations(t, routing, dims))
+    assert(wide === rows(RoutingReference.violations(t, routing, dims)))
     assert(wide.exists(_._2 == "uq"), "no unique violations exercised")
     assert(wide.exists(_._2 == "rng"), "even-cluster range never fired")
     assert(wide.exists(_._2 == "rng2"), "odd-cluster range never fired")
     // the shared unique rule pools into ONE aggregate over both clusters —
-    // not 40 (gated per set) and not 2 (per cluster)
-    val widePlan = graft.engine.Validator
-      .violationsRoutedWide(t, routing, dims).queryExecution.optimizedPlan
-    val wideAggs = widePlan.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-    }
+    // not 40 (per set) and not 2 (per cluster)
+    val wideAggs = Validator.violations(t, routing, dims)
+      .queryExecution.optimizedPlan.collect {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+      }
     assert(wideAggs.size == 1, s"expected 1 aggregate, got ${wideAggs.size}")
   }
 
@@ -189,15 +220,8 @@ class WideRoutingSpec extends SparkSpec {
          |  "defaultRuleSet": "fallback" }""".stripMargin
     val routing = graft.rules.RuleSetLoader.parse(json)
     val t = Queries.tokWide(spark, sf0001, 4)
-    val dims = Map("allowed_sources" ->
-      graft.sources.TokenTable.allowedDim(spark))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "rule_id", "detail", "severity", "source")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4))).toSet
-    val wide = rows(graft.engine.Validator.violationsRoutedWide(t, routing, dims))
-    val gated = rows(graft.engine.Validator.violationsRouted(t, routing, dims))
-    assert(wide === gated)
+    val wide = rows(Validator.violations(t, routing, dims))
+    assert(wide === rows(RoutingReference.violations(t, routing, dims)))
     // the appliesTo gate really bites: N_0 is routed to pA but excluded by
     // the rule's appliesTo=A_0, so only A_0/A_1 rows may appear
     assert(wide.nonEmpty)
@@ -205,22 +229,35 @@ class WideRoutingSpec extends SparkSpec {
       s"appliesTo gate lost: ${wide.map(_._5)}")
   }
 
-  test("single-projection gated path compiles at the chunk threshold (192 rules)") {
-    // 64 sets × 3 rules = 192 = GatedRuleChunkThreshold → the UNCHUNKED
-    // single-projection form, whose code InferFiltersFromGenerate inlines
-    // TWICE (filter + project) — the worst case the threshold must survive
-    // with codegen fallback disabled
-    val routing = graft.rules.RuleSetLoader.parse(Queries.wideRoutingJson(64))
-    val t = Queries.tokWide(spark, sf0001, 64)
-    val dims = Map("allowed_sources" ->
-      graft.sources.TokenTable.allowedDim(spark))
+  test("gated row pass: one projection at the chunk threshold, chunk-staged at 192 rules") {
+    // (a) 10 heterogeneous sets × 3 rules + 2 default rules = 32 gated
+    // rules = GatedRuleChunkThreshold → the UNCHUNKED single-projection
+    // form, whose code InferFiltersFromGenerate inlines TWICE (filter +
+    // project) — the worst case the threshold must survive with codegen
+    // fallback disabled
+    val nn2 = """{"type":"notNull","id":"nn_src","column":"source","severity":"fatal"},
+                |{"type":"notNull","id":"nn_tok","column":"tokens","severity":"fatal"}""".stripMargin
+    val atThreshold = graft.rules.RuleSetLoader.parse(heterogeneousJson(10, nn2))
+    val t10 = Queries.tokWide(spark, sf0001, 10)
+    val one = Validator.violations(t10, atThreshold, dims)
+    assert(gatedRules(one) === ((32, false)))
     spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val n = graft.engine.Validator.ruleMatrix(
-          graft.engine.Validator.violationsRouted(t, routing, dims))
-        .count()
-      assert(n > 0)
-    } finally spark.conf.unset("spark.sql.codegen.fallback")
+    val oneGot = try matrix(one) finally
+      spark.conf.unset("spark.sql.codegen.fallback")
+    assert(oneGot.nonEmpty)
+    assert(oneGot === matrix(RoutingReference.violations(t10, atThreshold, dims)))
+    // (b) 64 heterogeneous sets × 3 rules and an empty default = exactly
+    // 192 gated rules (the old threshold, where one projection overflows
+    // Janino's 64 KB) → chunk-staged out of whole-stage codegen: JIT-sized
+    // methods, one scan
+    val routing =
+      graft.rules.RuleSetLoader.parse(heterogeneousJson(64, defaultRules = ""))
+    val t = Queries.tokWide(spark, sf0001, 64)
+    val v = Validator.violations(t, routing, dims)
+    assert(gatedRules(v) === ((192, true)))
+    val got = codegenHealthy(v)
+    assert(got.nonEmpty)
+    assert(got === matrix(RoutingReference.violations(t, routing, dims)))
   }
 
   test("wide dispatch result equals per-slice evaluation on a spot bucket") {
@@ -236,9 +273,6 @@ class WideRoutingSpec extends SparkSpec {
       graft.rules.NotNullRule("nn", "tokens", severity = "fatal"),
       graft.rules.LengthConsistencyRule("lc", "tokens", "n_tok"),
       graft.rules.RangeRule("rng", "n_tok", 1, 17)))
-    val expect = graft.engine.Validator.ruleMatrix(
-        graft.engine.Validator.rowViolations(slice, rs.rowRules))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(wide === expect)
+    assert(wide === matrix(Validator.violations(slice, rs, Map.empty)))
   }
 }
