@@ -229,7 +229,11 @@ class WideRoutingSpec extends SparkSpec {
       s"appliesTo gate lost: ${wide.map(_._5)}")
   }
 
-  test("gated row pass: one projection at the chunk threshold, chunk-staged at 192 rules") {
+  test("single-projection gated path compiles at the chunk threshold (192 rules)") {
+    // the threshold stood at 192 rules when this test was named; it is now
+    // 32 (one projection overflows Janino's 64 KB from ~96 rules), so the
+    // single projection is checked at 32 rules and 192 rules at the
+    // chunk-staged form
     // (a) 10 heterogeneous sets × 3 rules + 2 default rules = 32 gated
     // rules = GatedRuleChunkThreshold → the UNCHUNKED single-projection
     // form, whose code InferFiltersFromGenerate inlines TWICE (filter +
