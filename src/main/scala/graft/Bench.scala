@@ -20,16 +20,15 @@ object Bench {
     fullPassOn(spark, TokenTable.tokens(spark, sfDir),
       TokenTable.tokensBaseline(spark, sfDir))
 
-  /** Full pass over explicit current/baseline token tables.
-    * `fuseDriftSketch` rides the drift sketch on the stats aggregate
-    * (one fewer scan of the current table) — measured faster at sf0.1/32
-    * threads (job-count-bound) and A/B-profiled at ×64 via
-    * `Explain --fullpass` before being made the default.
+  /** Full pass over explicit current/baseline token tables. The drift
+    * sketch rides the stats aggregate (one fewer scan of the current
+    * table) — measured faster at sf0.1/32 threads (job-count-bound) and
+    * ~4% faster in a same-JVM A/B at ×64 (BASELINE.md, round-4
+    * window-drift note).
     */
   def fullPassOn(spark: SparkSession,
       tok: org.apache.spark.sql.DataFrame,
-      baseline: org.apache.spark.sql.DataFrame,
-      fuseDriftSketch: Boolean = true): Long = {
+      baseline: org.apache.spark.sql.DataFrame): Long = {
     val dims = Map("allowed_sources" -> TokenTable.allowedDim(spark))
     val ruleSet = RuleSet.default(TokenTable.Vocab)
     // violations are consumed by two aggregates (dedup + summary): cache
@@ -39,25 +38,18 @@ object Bench {
     val detailed = Validator.violations(tok, ruleSet, dims)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // stats feed the stats output, the summary's per-source row counts
-    // (summaryFromCounts), and — when fused — carry the drift sketch; the
-    // cached frame is O(|sources|) rows
-    val stats = (
-      if (fuseDriftSketch)
-        StatsOps.columnStatsWithQuantiles(tok, 200, Seq(0.5, 0.95))
-      else StatsOps.columnStats(tok))
+    // (summaryFromCounts), and carry the drift sketch; the cached frame is
+    // O(|sources|) rows
+    val stats = StatsOps.columnStatsWithQuantiles(tok, 200, Seq(0.5, 0.95))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       Validator.dedupIssues(detailed).collect()
       stats.collect()
       Validator.summaryFromCounts(stats, detailed).collect()
-      if (fuseDriftSketch)
-        // current side reads the CACHED sketch column; only the baseline
-        // snapshot is aggregated
-        Drift.sketchDriftFromQuantiles(stats, baseline, "n_tok",
-          200, Seq(0.5, 0.95), 2.0).collect()
-      else
-        Drift.sketchQuantileDrift(tok, baseline, "n_tok",
-          200, Seq(0.5, 0.95), 2.0).collect()
+      // current side reads the CACHED sketch column; only the baseline
+      // snapshot is aggregated
+      Drift.sketchDriftFromQuantiles(stats, baseline, "n_tok",
+        200, Seq(0.5, 0.95), 2.0).collect()
       tok.count()
     } finally {
       detailed.unpersist(blocking = false)

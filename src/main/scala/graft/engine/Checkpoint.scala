@@ -34,13 +34,6 @@ object Checkpoint {
     } else spark.emptyDataset[ManifestEntry].toDF()
   }
 
-  def completedPartitions(
-      spark: SparkSession, manifestPath: String, snapshotId: Long): Seq[String] =
-    read(spark, manifestPath)
-      .where(col("snapshot_id") === snapshotId && col("status") === "ok")
-      .select("partition").distinct()
-      .collect().map(_.getString(0)).toSeq
-
   /** Next generation stamp: wall clock, bumped above any stamp already in
     * the manifest. `System.nanoTime()` is WRONG here — its origin is
     * arbitrary per JVM, so a resume from a new driver process could stamp
@@ -59,8 +52,8 @@ object Checkpoint {
     * read (round 7): the resumable runner needed both and paid two
     * separate tiny read+collect jobs per leg; the manifest is partition ×
     * generation cardinality — driver-small by design — so one collect
-    * serves both. Semantics identical to
-    * [[completedPartitions]] + [[nextRunTs]].
+    * serves both: the distinct partitions with an `ok` entry for
+    * `snapshotId`, and the stamp [[nextRunTs]] would return.
     */
   def snapshotState(spark: SparkSession, manifestPath: String,
       snapshotId: Long): (Seq[String], Long) = {

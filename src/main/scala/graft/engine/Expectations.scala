@@ -51,7 +51,7 @@ object Expectations {
       }
 
   private def defaultRate(severity: String): Double = severity match {
-    case "fatal" => 0.01
+    case "fatal" => 0.0
     case "error" => 0.005
     case _       => 0.10
   }

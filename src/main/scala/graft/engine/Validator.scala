@@ -216,10 +216,11 @@ object Validator {
     * dedup-before-ship shape (IssueSet.py:9-26).
     *
     * Physical shape: `min(source)` (string buffer) forces SortAggregate
-    * rather than HashAggregate. Measured (Explain --exp, 9.6M rows, 8
-    * cores): 2.2s, vs 5.4s for the hash-agg-count + broadcast-rejoin
-    * alternative — the rejoin loses because duplicate sets are NOT small
-    * under skew (collapsed keys), which is exactly when uniqueness matters.
+    * rather than HashAggregate. Measured (9.6M rows, 8 cores; BASELINE.md
+    * component scaling profile): 2.2s, vs 5.4s for the hash-agg-count +
+    * broadcast-rejoin alternative — the rejoin loses because duplicate
+    * sets are NOT small under skew (collapsed keys), which is exactly when
+    * uniqueness matters.
     */
   def uniqueViolations(df: DataFrame, rule: UniqueRule): DataFrame =
     uniqueViolationsPer(df, rule, Nil)

@@ -28,14 +28,6 @@ object SimilarityOps {
     */
   def dot(a: Column, b: Column): Column = graft.functions.DotProduct(a, b)
 
-  /** The higher-order-function formulation (CodegenFallback) — kept as the
-    * reference semantics the native expression is tested against.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity — the fused single-pass native expression
     * ([[graft.functions.CosineSim]]): one loop accumulates dot + both
     * norms instead of three array walks, bit-identical to the composed
@@ -43,45 +35,15 @@ object SimilarityOps {
     */
   def cosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
 
-  /** Composed three-pass formulation — the reference semantics the fused
-    * expression is tested against.
-    */
-  def cosineComposed(a: Column, b: Column): Column = {
-    val ad = a.cast("array<double>")
-    val bd = b.cast("array<double>")
-    val den = norm(ad) * norm(bd)
-    when(den > 0, dot(ad, bd) / den).otherwise(lit(0.0))
-  }
-
-  /** Deterministic pseudo-random hyperplane component in [-1, 1):
-    * derived from xxhash64(plane, j).
-    */
-  private def planeComponent(plane: Column, j: Column): Column =
-    (xxhash64(plane, j).cast("double") / lit(Long.MaxValue.toDouble))
-
   /** Sign-bit signature of `v` against `nPlanes` hyperplanes, packed into a
     * long — the native whole-stage-codegen expression
-    * ([[graft.functions.HyperplaneSig]]); bit-identical to
-    * [[hyperplaneSignatureHof]] (SimilarityOpsSpec pins it), which cost
-    * `nPlanes` interpreted lambda chains per row (guide §4).
+    * ([[graft.functions.HyperplaneSig]]); bit-identical to the
+    * higher-order-function form it replaced (OperatorsSpec pins it against
+    * the test-side reference), which cost `nPlanes` interpreted lambda
+    * chains per row (guide §4).
     */
   def hyperplaneSignature(v: Column, nPlanes: Int): Column =
     graft.functions.HyperplaneSig(v, nPlanes)
-
-  /** The higher-order-function formulation (CodegenFallback) — kept as the
-    * reference semantics the native expression is tested against.
-    */
-  def hyperplaneSignatureHof(v: Column, nPlanes: Int): Column = {
-    val vd = v.cast("array<double>")
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vd, sequence(lit(0), size(vd) - 1),
-          (x, j) => x * planeComponent(lit(p), j)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(0L)
-    }
-    bits.reduce(_.bitwiseOR(_))
-  }
 
   /** Exact top-k by cosine against one query vector. */
   def bruteForceTopK(

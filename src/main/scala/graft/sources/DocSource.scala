@@ -9,14 +9,10 @@ import org.apache.spark.sql.SparkSession
   */
 object DocSource {
 
-  private val cacheBase =
-    sys.env.getOrElse("GRAFT_TOK_CACHE", "/tmp/graft_tok_cache")
-
   /** Path of the 16-file documents cache (built on first use). */
   def materializedDocs(spark: SparkSession, sfDir: String): String =
     synchronized {
-      val dir =
-        s"$cacheBase/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_docs"
+      val dir = Fs.cacheDir(sfDir, "docs")
       if (!Fs.successExists(spark, dir)) {
         spark.read.parquet(s"$sfDir/documents.parquet")
           .repartition(16)
@@ -30,8 +26,7 @@ object DocSource {
     */
   def materializedEvents(spark: SparkSession, sfDir: String): String =
     synchronized {
-      val dir =
-        s"$cacheBase/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_events"
+      val dir = Fs.cacheDir(sfDir, "events")
       if (!Fs.successExists(spark, dir)) {
         spark.read.parquet(s"$sfDir/events.parquet")
           .repartition(16)

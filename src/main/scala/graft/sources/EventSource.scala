@@ -22,15 +22,11 @@ object EventSource {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  private val cacheBase =
-    sys.env.getOrElse("GRAFT_TOK_CACHE", "/tmp/graft_tok_cache")
-
   def events(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/events.parquet")
 
   def materializedPath(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir =
-      s"$cacheBase/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_events"
+    val dir = Fs.cacheDir(sfDir, "events")
     if (!Fs.successExists(spark, dir)) {
       events(spark, sfDir).repartition(4)
         .write.mode("overwrite").parquet(dir)

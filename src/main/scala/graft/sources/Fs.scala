@@ -24,6 +24,23 @@ object Fs {
     fs(spark, p).exists(p)
   }
 
+  /** Directory tag of an input dir: every character outside
+    * `[A-Za-z0-9.]` becomes `_`, so one flat cache root keys many inputs.
+    */
+  def dirTag(sfDir: String): String = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** The one cache-location decision: `<root>/[<scope>/]<tag>_<suffix>`,
+    * where root is `GRAFT_TOK_CACHE` (default `/tmp/graft_tok_cache`) and
+    * tag is [[dirTag]] of the input dir. `scope` nests per-application
+    * sinks that overwrite on every run (the application id) so concurrent
+    * sessions sharing the root do not clobber each other.
+    */
+  def cacheDir(sfDir: String, suffix: String, scope: String = ""): String = {
+    val root = sys.env.getOrElse("GRAFT_TOK_CACHE", "/tmp/graft_tok_cache")
+    val scoped = if (scope.isEmpty) root else s"$root/$scope"
+    s"$scoped/${dirTag(sfDir)}_$suffix"
+  }
+
   /** Recursive delete (fixture/cache reset); no-op when absent. */
   def delete(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)

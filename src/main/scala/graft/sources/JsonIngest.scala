@@ -82,13 +82,9 @@ object JsonIngest {
           col("doc_id"), col("tokens"), col("n_tok"), col("source"))))
         .as("value"))
 
-  private val cacheBase =
-    sys.env.getOrElse("GRAFT_TOK_CACHE", "/tmp/graft_tok_cache")
-
   /** Materialize the JSON corpus for an sf dir once; returns its path. */
   def materializedJson(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir =
-      s"$cacheBase/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_json"
+    val dir = Fs.cacheDir(sfDir, "json")
     if (!Fs.successExists(spark, dir)) {
       jsonLines(TokenTable.fromLineitemKeyed(TokenTable.lineitem(spark, sfDir)))
         .repartition(16)

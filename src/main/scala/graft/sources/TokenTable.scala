@@ -60,9 +60,6 @@ object TokenTable {
   def tokensBaseline(spark: SparkSession, sfDir: String): DataFrame =
     materialized(spark, sfDir, "even")
 
-  private val cacheBase =
-    sys.env.getOrElse("GRAFT_TOK_CACHE", "/tmp/graft_tok_cache")
-
   def materialized(spark: SparkSession, sfDir: String, variant: String): DataFrame =
     spark.read.parquet(materializedPath(spark, sfDir, variant))
 
@@ -72,8 +69,7 @@ object TokenTable {
   def materializedPath(spark: SparkSession, sfDir: String, variant: String = "full"): String = synchronized {
     // _v2: schema gained `okey` (FK to orders for the big-dimension
     // referential check) — the suffix invalidates pre-okey caches
-    val dir =
-      s"$cacheBase/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_${variant}_v2"
+    val dir = Fs.cacheDir(sfDir, s"${variant}_v2")
     if (!Fs.successExists(spark, dir)) {
       val li0 = lineitem(spark, sfDir)
       val li = if (variant == "even") li0.where(li0("l_orderkey") % 2 === 0)
@@ -101,8 +97,7 @@ object TokenTable {
     * rate — same workload character, K× the volume. Materialized once.
     */
   def tokensScaled(spark: SparkSession, sfDir: String, k: Int): DataFrame = synchronized {
-    val dir =
-      s"$cacheBase/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_x${k}_v2"
+    val dir = Fs.cacheDir(sfDir, s"x${k}_v2")
     if (!Fs.successExists(spark, dir)) {
       val li = lineitem(spark, sfDir)
       val replicas = spark.range(k).toDF("r")
@@ -125,8 +120,7 @@ object TokenTable {
     * re-deriving the concat per scan.
     */
   def tokensWide(spark: SparkSession, sfDir: String, nSets: Int): DataFrame = synchronized {
-    val dir =
-      s"$cacheBase/${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_wide${nSets}_v2"
+    val dir = Fs.cacheDir(sfDir, s"wide${nSets}_v2")
     if (!Fs.successExists(spark, dir)) {
       val t = tokens(spark, sfDir).withColumn("source",
         concat(col("source"), lit("_"), (col("okey") % nSets).cast("string")))

@@ -48,42 +48,6 @@ object StreamingDedup {
     }
   }
 
-  /** One stateful-dedup run's state-store footprint, for the provider A/B
-    * (`Explain --statestore`; numbers recorded in BASELINE.md).
-    */
-  final case class StateMetrics(provider: String, wallSec: Double,
-      survivors: Long, stateRows: Long, memoryUsedBytes: Long)
-
-  /** Run the document-stream exact dedup under either provider and report
-    * wall time + final state size — identical results by construction
-    * (the provider stores the same keys), different storage medium.
-    */
-  def dedupStateMetrics(spark: SparkSession, path: String,
-      useRocksDB: Boolean, maxFilesPerTrigger: Int = 4): StateMetrics = {
-    def body: StateMetrics = {
-      val stream = spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(path)
-      val name = s"graft_ss_ab_${System.nanoTime()}"
-      val t0 = System.nanoTime()
-      val q = dedupStream(stream).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val so = Option(q.lastProgress).map(_.stateOperators)
-        .getOrElse(Array.empty)
-      StateMetrics(
-        if (useRocksDB) "rocksdb" else "hdfs-heap",
-        wall, spark.table(name).count(),
-        so.map(_.numRowsTotal).sum, so.map(_.memoryUsedBytes).sum)
-    }
-    if (useRocksDB) withRocksDBState(spark)(body) else body
-  }
-
   /** Input schema of the document stream (driver `documents` table). */
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -121,10 +85,11 @@ object StreamingDedup {
     // contract) at half the per-batch RocksDB load/commit overhead of the
     // old 4 (4 batches; measured ~5 → ~3.5 s at sf0.1)
     // RocksDB state store ADOPTED for the exact-dedup registry query
-    // (round-6): the interleaved A/B (Explain --statestore, BASELINE.md)
-    // pinned identical survivor sets, throughput within noise, and 3.7×
-    // less tracked state memory — at corpus scale the per-key state must
-    // live off-heap or the executor heap bounds the corpus.
+    // (round-6): the interleaved A/B recorded in BASELINE.md ("RocksDB vs
+    // heap state store") pinned identical survivor sets, throughput within
+    // noise, and 3.7× less tracked state memory — at corpus scale the
+    // per-key state must live off-heap or the executor heap bounds the
+    // corpus.
     val stream = spark.readStream
       .schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

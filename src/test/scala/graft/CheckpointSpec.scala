@@ -96,7 +96,7 @@ class CheckpointSpec extends SparkSpec {
     assert(m("R").startsWith("error:"))
     assert(r.validatedPartitions.toSet === Set("A", "N"))
     // resume skips the healthy partitions and retries only R
-    val done = Checkpoint.completedPartitions(spark, dir, 2L)
+    val done = Checkpoint.snapshotState(spark, dir, 2L)._1
     assert(done.toSet === Set("A", "N"))
   }
 
@@ -234,7 +234,7 @@ class CheckpointSpec extends SparkSpec {
       s"duplicated violation rows: ${stored.mkString(", ")}")
     assert(stored.map(_._1).toSet === Set("a2")) // A's length violation
     // resume retries only the poison partition
-    assert(Checkpoint.completedPartitions(spark, manifest, 3L).toSet
+    assert(Checkpoint.snapshotState(spark, manifest, 3L)._1.toSet
       === Set("A", "N"))
   }
 

@@ -431,7 +431,7 @@ class SimilarityOpsSpec extends SparkSpec {
     val both = a.join(b, "vec_id")
       .select(
         SimilarityOps.dot(col("ea"), col("eb")).as("native"),
-        SimilarityOps.dotHof(col("ea").cast("array<double>"),
+        SimilarityReference.dotHof(col("ea").cast("array<double>"),
           col("eb").cast("array<double>")).as("hof"))
       .collect()
     assert(both.length === 199)
@@ -458,7 +458,7 @@ class SimilarityOpsSpec extends SparkSpec {
       col("embedding").as("eb"))
     val both = a.join(b, "vec_id")
       .select(SimilarityOps.cosine(col("ea"), col("eb")).as("fused"),
-        SimilarityOps.cosineComposed(col("ea"), col("eb")).as("composed"))
+        SimilarityReference.cosineComposed(col("ea"), col("eb")).as("composed"))
       .collect()
     assert(both.length === 149)
     both.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))
@@ -488,7 +488,7 @@ class SimilarityOpsSpec extends SparkSpec {
       val both = vecs.select(
           SimilarityOps.hyperplaneSignature(col("embedding"), nPlanes)
             .as("native"),
-          SimilarityOps.hyperplaneSignatureHof(col("embedding"), nPlanes)
+          SimilarityReference.hyperplaneSignatureHof(col("embedding"), nPlanes)
             .as("hof"))
         .collect()
       both.foreach(r => assert(r.getLong(0) === r.getLong(1)))
@@ -496,7 +496,7 @@ class SimilarityOpsSpec extends SparkSpec {
     // fixture embeddings too (the shapes the registry queries hash)
     val fix = embs.select(
         SimilarityOps.hyperplaneSignature(col("embedding"), 64).as("native"),
-        SimilarityOps.hyperplaneSignatureHof(col("embedding"), 64).as("hof"))
+        SimilarityReference.hyperplaneSignatureHof(col("embedding"), 64).as("hof"))
       .collect()
     assert(fix.nonEmpty)
     fix.foreach(r => assert(r.getLong(0) === r.getLong(1)))

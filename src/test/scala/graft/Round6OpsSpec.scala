@@ -104,6 +104,16 @@ class Round6OpsSpec extends SparkSpec {
     assert(byRule("len_consistency")._1 > 0)
     assert(byRule("len_consistency")._2 === "FAIL")
     assert(byRule("ref_source")._2 === "FAIL")
+    // severity ladder: fatals are zero-tolerance, and no fatal is ever
+    // more tolerant than an error
+    val maxRate = suite.select("rule_id", "max_rate")
+      .as[(String, Double)].collect().toMap
+    val bySeverity = ruleSet.rules.groupBy(_.severity)
+      .map { case (sev, rs) => sev -> rs.map(r => maxRate(r.id)) }
+    assert(bySeverity("fatal").forall(_ == 0.0))
+    assert(bySeverity("fatal").max <= bySeverity("error").min)
+    // one null-token row in ~107 is a fatal breach, not within budget
+    assert(byRule("not_null_tokens")._2 === "FAIL")
   }
 
   test("metrics store: zero-filled per-rule rows; trend deltas and flags") {

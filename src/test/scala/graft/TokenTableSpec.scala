@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.TokenTable
+import graft.sources.{Fs, TokenTable}
 
 /** Ground-truth invariant (BASELINE.json input_hint): per-row token-array
   * equality between the engine's read-back and the closed-form generator.
@@ -76,5 +76,15 @@ class TokenTableSpec extends SparkSpec {
     assert(fields("tokens") == "ARRAY<INT>")
     assert(fields("n_tok") == "INT")
     assert(fields("source") == "STRING")
+  }
+
+  test("cache directories: <root>/[<scope>/]<input dir tag>_<suffix>") {
+    val root = sys.env.getOrElse("GRAFT_TOK_CACHE", "/tmp/graft_tok_cache")
+    assert(TokenTable.materializedPath(spark, sf0001) ===
+      s"$root/${sf0001.replaceAll("[^A-Za-z0-9.]", "_")}_full_v2")
+    assert(Fs.cacheDir("/data/sf-0.01", "docs") ===
+      s"$root/_data_sf_0.01_docs")
+    assert(Fs.cacheDir("/data/sf-0.01", "metrics", "app-7") ===
+      s"$root/app-7/_data_sf_0.01_metrics")
   }
 }
