@@ -1,8 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.ManifestEntry
+import graft.model.{ManifestEntry, SourceSummary}
 import graft.rules.RuleSet
 
 /** Checkpoint manifest + resumable validation runs (north-star resumability;
@@ -22,51 +22,61 @@ import graft.rules.RuleSet
   */
 object Checkpoint {
 
+  private val ManifestSchema = Encoders.product[ManifestEntry].schema
+
+  /** The manifest as a frame. Building it starts no job: the schema is the
+    * fixed [[ManifestEntry]] one, so no parquet footer is read for
+    * inference. Manifests written before the `run_ts` column existed read
+    * that column as NULL, which is generation 0.
+    */
   def read(spark: SparkSession, manifestPath: String): DataFrame = {
     import spark.implicits._
-    if (graft.sources.Fs.exists(spark, manifestPath)) {
-      val df = spark.read.parquet(manifestPath)
-      // manifests written before the run_ts column existed must stay
-      // readable (the latest-generation window orders by it): default the
-      // missing column to generation 0 instead of schema-versioning the path
-      if (df.columns.contains("run_ts")) df
-      else df.withColumn("run_ts", lit(0L))
-    } else spark.emptyDataset[ManifestEntry].toDF()
+    if (graft.sources.Fs.exists(spark, manifestPath))
+      spark.read.schema(ManifestSchema).parquet(manifestPath)
+        .withColumn("run_ts", coalesce(col("run_ts"), lit(0L)))
+    else spark.emptyDataset[ManifestEntry].toDF()
   }
+
+  /** The whole manifest on the driver: one small collect. The manifest is
+    * partition × generation cardinality, driver-small by design, so every
+    * bookkeeping question of a run ([[completed]], [[nextStamp]],
+    * [[latestOk]]) is answered from this one read.
+    */
+  def load(spark: SparkSession, manifestPath: String): Seq[ManifestEntry] = {
+    import spark.implicits._
+    read(spark, manifestPath).as[ManifestEntry].collect().toSeq
+  }
+
+  /** Partitions with an `ok` entry at `snapshotId`. */
+  def completed(entries: Seq[ManifestEntry], snapshotId: Long): Seq[String] =
+    entries.iterator
+      .filter(e => e.snapshot_id == snapshotId && e.status == "ok")
+      .map(_.partition).toSeq.distinct
 
   /** Next generation stamp: wall clock, bumped above any stamp already in
     * the manifest. `System.nanoTime()` is WRONG here — its origin is
     * arbitrary per JVM, so a resume from a new driver process could stamp
     * generations that sort BELOW an earlier process's entries and the
-    * latest-per-partition window would pick a stale generation. Wall clock
+    * latest-per-partition pick would choose a stale generation. Wall clock
     * orders across processes; the `max(existing)+1` floor keeps the stamp
     * monotonic even under clock skew between submitting hosts.
     */
-  def nextRunTs(spark: SparkSession, manifestPath: String): Long = {
-    val maxExisting = read(spark, manifestPath)
-      .agg(coalesce(max(col("run_ts")), lit(0L))).head().getLong(0)
-    math.max(System.currentTimeMillis(), maxExisting + 1)
-  }
+  private[engine] def nextStamp(entries: Seq[ManifestEntry]): Long =
+    math.max(System.currentTimeMillis(),
+      entries.iterator.map(_.run_ts).foldLeft(0L)(math.max) + 1)
 
-  /** Completed partitions AND the next generation stamp from ONE manifest
-    * read (round 7): the resumable runner needed both and paid two
-    * separate tiny read+collect jobs per leg; the manifest is partition ×
-    * generation cardinality — driver-small by design — so one collect
-    * serves both: the distinct partitions with an `ok` entry for
-    * `snapshotId`, and the stamp [[nextRunTs]] would return.
+  /** The LATEST ok entry per partition at a snapshot: several generations
+    * coexist in the append-only manifest after a contained failure +
+    * resume, or a re-run at the same snapshot. Highest `run_ts` wins, then
+    * the larger `n_rows`. Error rows (zeroed metrics) never count.
     */
-  def snapshotState(spark: SparkSession, manifestPath: String,
-      snapshotId: Long): (Seq[String], Long) = {
-    val rows = read(spark, manifestPath)
-      .select(col("partition"), col("snapshot_id"), col("status"),
-        col("run_ts"))
-      .collect()
-    val done = rows.iterator
-      .filter(r => r.getLong(1) == snapshotId && r.getString(2) == "ok")
-      .map(_.getString(0)).toSeq.distinct
-    val maxTs = if (rows.isEmpty) 0L else rows.iterator.map(_.getLong(3)).max
-    (done, math.max(System.currentTimeMillis(), maxTs + 1))
-  }
+  private[engine] def latestOk(entries: Seq[ManifestEntry], snapshotId: Long)
+      : Seq[ManifestEntry] =
+    entries
+      .filter(e => e.snapshot_id == snapshotId && e.status == "ok")
+      .groupBy(_.partition).values
+      .map(_.maxBy(e => (e.run_ts, e.n_rows)))
+      .toSeq.sortBy(_.partition)
 
   /** Append entries, stamping the generation (`run_ts`) so later
     * reconstruction can pick the newest entry per partition
@@ -76,27 +86,32 @@ object Checkpoint {
   def append(spark: SparkSession, manifestPath: String,
       entries: Seq[ManifestEntry], runTs: Long = -1L): Unit = {
     import spark.implicits._
-    val ts = if (runTs >= 0L) runTs else nextRunTs(spark, manifestPath)
+    val ts = if (runTs >= 0L) runTs else nextStamp(load(spark, manifestPath))
     entries.map(_.copy(run_ts = ts)).toDS().toDF()
       .write.mode(SaveMode.Append).parquet(manifestPath)
   }
 
-  /** Per-partition summary reconstructed from the manifest at a snapshot:
-    * the LATEST ok generation per partition (several generations coexist in
-    * the append-only manifest after a contained failure + resume, or a
-    * re-run at the same snapshot). Columns match
-    * [[graft.model.SourceSummary]].
+  /** Per-partition summary reconstructed from the manifest at a snapshot
+    * ([[latestOk]]), as a driver-local frame.
     */
   def summaryAt(spark: SparkSession, manifestPath: String,
-      snapshotId: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("partition")
-      .orderBy(col("run_ts").desc, col("n_rows").desc)
-    read(spark, manifestPath)
-      .where(col("snapshot_id") === snapshotId && col("status") === "ok")
-      .withColumn("_rn", row_number().over(w)).where(col("_rn") === 1)
-      .select(col("partition").as("source"), col("n_rows"),
-        col("n_violations"), (col("n_violations") === 0).as("pass"))
+      snapshotId: Long): DataFrame =
+    summaryFrame(spark, latestOk(load(spark, manifestPath), snapshotId))
+
+  /** Manifest entries as a driver-local frame with the columns of
+    * [[SourceSummary]]. The NULL-source partition, keyed in the manifest
+    * by [[SnapshotDiff.NullSourceSentinel]], reads back as a NULL source,
+    * the same value the table holds.
+    */
+  private[engine] def summaryFrame(spark: SparkSession,
+      es: Seq[ManifestEntry]): DataFrame = {
+    import spark.implicits._
+    es.map { e =>
+      SourceSummary(
+        if (e.partition == SnapshotDiff.NullSourceSentinel) null
+        else e.partition,
+        e.n_rows, e.n_violations, e.n_violations == 0)
+    }.toDF()
   }
 }
 
@@ -136,15 +151,23 @@ object ValidationRunner {
     * fast path, per-partition containment fallback, manifest bookkeeping
     * all identical; only the validation plan differs.
     *
+    * The bookkeeping rides on rows the driver collects anyway: one census
+    * aggregate over `tokens` gives the partition list and every
+    * partition's `n_rows`; one manifest collect gives the resume set, the
+    * generation stamp and, on a leg with nothing pending, the summary; a
+    * per-source count of the violations gives `n_violations`. The summary
+    * is built on the driver from those rows and returned as a local frame
+    * (nothing is cached, so nothing outlives the run).
+    *
     * `violationsDir`, when set, persists the detailed violations of every
     * partition this run validates as a snapshot/generation-stamped artifact
     * ([[ViolationStore]]) — the run's ONE rule pass then terminates in that
-    * write, the summary is computed from the persisted copy plus a
-    * count-only scan of the slice, and a later report assembles from the
-    * artifacts with ZERO additional rule passes
-    * ([[graft.tools.Validate.run]]). Dataset-level rules (uniqueness) are
-    * evaluated per validated slice by the resumable lifecycle's definition —
-    * a fresh full run slices the whole table, so nothing changes there.
+    * write, the violation counts are read from the generation just
+    * committed, and a later report assembles from the artifacts with ZERO
+    * additional rule passes ([[graft.tools.Validate.run]]). Dataset-level
+    * rules (uniqueness) are evaluated per validated slice by the resumable
+    * lifecycle's definition — a fresh full run slices the whole table, so
+    * nothing changes there.
     */
   def runResumableWith(
       spark: SparkSession,
@@ -159,25 +182,16 @@ object ValidationRunner {
     // predicate via sliceFilter — a bare isin(null) never matches, which
     // would let every null-source row silently escape validation (the same
     // hole ADVICE r5 flagged in SnapshotDiff.changedSources)
-    val all = tokens.select("source").distinct()
-      .collect()
-      .map(r => Option(r.getString(0))
-        .getOrElse(SnapshotDiff.NullSourceSentinel))
-      .toSeq.sorted
-    // one manifest read serves both the resume set and the generation
-    // stamp (round 7 — was two separate read+collect jobs per leg)
-    val (done, runTs) = Checkpoint.snapshotState(spark, manifestPath, snapshotId)
+    val census = countBySource(tokens)
+    val all = census.keys.toSeq.sorted
+    val manifest = Checkpoint.load(spark, manifestPath)
+    val done = Checkpoint.completed(manifest, snapshotId)
+    val runTs = Checkpoint.nextStamp(manifest)
     val pending = all.filterNot(done.toSet)
 
-    if (pending.isEmpty) {
-      // only ok rows: a failed attempt appends status='error:…' rows with
-      // zeroed metrics; after a successful resume — or a re-run at the same
-      // snapshot after upstream data changed — several ok generations
-      // coexist in the append-only manifest. Keep the LATEST (max run_ts)
-      // entry per partition, deterministically.
-      return RunResult(Nil, all,
-        Checkpoint.summaryAt(spark, manifestPath, snapshotId))
-    }
+    if (pending.isEmpty)
+      return RunResult(Nil, all, Checkpoint.summaryFrame(spark,
+        Checkpoint.latestOk(manifest, snapshotId)))
 
     // fast path: one job over all pending partitions (not a per-partition
     // loop) — the filter prunes partitions at the scan when stored by source.
@@ -188,81 +202,88 @@ object ValidationRunner {
     // uncaught with zero manifest rows for the healthy partitions.
     val slice = tokens.where(SnapshotDiff.sliceFilter(pending))
     val t0 = System.nanoTime()
-    var summary: DataFrame = null
-    val rows = try {
-      summary = (violationsDir match {
+    val nViolations = try {
+      violationsDir match {
         case Some(vd) =>
-          // the rule pass executes INSIDE this write; the summary below
-          // reads the persisted rows back (tiny) + one count-only scan
+          // the rule pass executes INSIDE this write; the counts read the
+          // persisted rows back (tiny)
           ViolationStore.persist(violationsOf(slice), vd, snapshotId, runTs,
             validatedSources = pending)
-          Validator.summaryFromCounts(
-            slice.groupBy("source").agg(count(lit(1)).as("n_rows")),
-            ViolationStore.generation(spark, vd, snapshotId, runTs))
+          countBySource(ViolationStore.generation(spark, vd, snapshotId, runTs))
         case None =>
-          Validator.summary(slice, violationsOf(slice))
-      }).cache()
-      summary.collect()
+          countBySource(violationsOf(slice))
+      }
     } catch {
       case _: Throwable =>
-        // containment with attribution (reference behavior, main.py:225-263):
-        // the batched job failed somewhere — fall back to per-partition runs
-        // so the error is attributed to the partition that caused it and
-        // every healthy partition still completes and is checkpointed.
-        // FRESH generation stamp: the fast path may have COMMITTED its
-        // violation write before the summary read-back failed — appending
-        // the fallback's per-partition writes into that same generation
-        // would double every violation row. A newer generation instead
-        // supersedes it cleanly (and prune() reclaims the orphan).
-        val retryTs = math.max(
-          Checkpoint.nextRunTs(spark, manifestPath), runTs + 1)
-        val perPart = pending.map { p =>
-          val one = tokens.where(SnapshotDiff.sliceFilter(Seq(p)))
-          val tp = System.nanoTime()
-          try {
-            val s = violationsDir match {
-              case Some(vd) =>
-                ViolationStore.persist(violationsOf(one), vd, snapshotId,
-                  retryTs, validatedSources = Seq(p))
-                Validator.summaryFromCounts(
-                  one.groupBy("source").agg(count(lit(1)).as("n_rows")),
-                  ViolationStore.generation(spark, vd, snapshotId, retryTs)
-                    .where(SnapshotDiff.sliceFilter(Seq(p)))).collect()
-              case None =>
-                Validator.summary(one, violationsOf(one)).collect()
-            }
-            val ms = (System.nanoTime() - tp) / 1000000
-            if (s.isEmpty) ManifestEntry(p, snapshotId, "ok", 0L, 0L, ms)
-            else ManifestEntry(p, snapshotId, "ok",
-              s.head.getLong(1), s.head.getLong(2), ms)
-          } catch {
-            case e: Throwable =>
-              ManifestEntry(p, snapshotId,
-                s"error:${e.getClass.getSimpleName}", 0L, 0L,
-                (System.nanoTime() - tp) / 1000000)
-          }
-        }
-        Checkpoint.append(spark, manifestPath, perPart, retryTs)
-        val okParts = perPart.filter(_.status == "ok").map(_.partition)
-        val failed = perPart.filterNot(_.status == "ok").map(_.partition)
-        import spark.implicits._
-        val recovered = perPart.filter(_.status == "ok")
-          .map(m => (m.partition, m.n_rows, m.n_violations, m.n_violations == 0))
-          .toDF("source", "n_rows", "n_violations", "pass")
-        return RunResult(okParts, done, recovered, failed)
+        return containPerPartition(spark, tokens, violationsOf, manifestPath,
+          snapshotId, violationsDir, census, pending, done, runTs)
     }
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val entries = rows.map { r =>
-      ManifestEntry(
-        Option(r.getString(0)).getOrElse(SnapshotDiff.NullSourceSentinel),
-        snapshotId, "ok", r.getLong(1), r.getLong(2), wallMs)
-    }.toSeq
-    // sources with zero rows in this slice (possible under routing) still
-    // need manifest rows so resume terminates
-    val seen = entries.map(_.partition).toSet
-    val empty = pending.filterNot(seen).map(p =>
-      ManifestEntry(p, snapshotId, "ok", 0L, 0L, wallMs))
-    Checkpoint.append(spark, manifestPath, entries ++ empty, runTs)
-    RunResult(pending, done, summary)
+    val entries = pending.map(p => ManifestEntry(p, snapshotId, "ok",
+      census(p), nViolations.getOrElse(p, 0L), wallMs))
+    Checkpoint.append(spark, manifestPath, entries, runTs)
+    RunResult(pending, done, Checkpoint.summaryFrame(spark, entries))
   }
+
+  /** Containment with attribution (reference behavior, main.py:225-263):
+    * the batched job failed somewhere — re-run partition by partition so
+    * the error is attributed to the partition that caused it and every
+    * healthy partition still completes and is checkpointed.
+    */
+  private def containPerPartition(
+      spark: SparkSession,
+      tokens: DataFrame,
+      violationsOf: DataFrame => DataFrame,
+      manifestPath: String,
+      snapshotId: Long,
+      violationsDir: Option[String],
+      census: Map[String, Long],
+      pending: Seq[String],
+      done: Seq[String],
+      runTs: Long): RunResult = {
+    // FRESH generation stamp: the fast path may have COMMITTED its
+    // violation write before the count read-back failed — appending the
+    // fallback's per-partition writes into that same generation would
+    // double every violation row. A newer generation instead supersedes it
+    // cleanly (and prune() reclaims the orphan). `runTs` is already above
+    // every stamp in the manifest, and under the single-writer contract
+    // nothing has been appended since, so `runTs + 1` is the only floor.
+    val retryTs = math.max(System.currentTimeMillis(), runTs + 1)
+    val perPart = pending.map { p =>
+      val one = tokens.where(SnapshotDiff.sliceFilter(Seq(p)))
+      val tp = System.nanoTime()
+      try {
+        val nv = violationsDir match {
+          case Some(vd) =>
+            ViolationStore.persist(violationsOf(one), vd, snapshotId,
+              retryTs, validatedSources = Seq(p))
+            countBySource(
+              ViolationStore.generation(spark, vd, snapshotId, retryTs)
+                .where(SnapshotDiff.sliceFilter(Seq(p))))
+          case None =>
+            countBySource(violationsOf(one))
+        }
+        ManifestEntry(p, snapshotId, "ok", census(p), nv.getOrElse(p, 0L),
+          (System.nanoTime() - tp) / 1000000)
+      } catch {
+        case e: Throwable =>
+          ManifestEntry(p, snapshotId,
+            s"error:${e.getClass.getSimpleName}", 0L, 0L,
+            (System.nanoTime() - tp) / 1000000)
+      }
+    }
+    Checkpoint.append(spark, manifestPath, perPart, retryTs)
+    val (ok, failed) = perPart.partition(_.status == "ok")
+    RunResult(ok.map(_.partition), done, Checkpoint.summaryFrame(spark, ok),
+      failed.map(_.partition))
+  }
+
+  /** Row count per source, collected, keyed like the manifest (a NULL
+    * source under [[SnapshotDiff.NullSourceSentinel]]).
+    */
+  private def countBySource(df: DataFrame): Map[String, Long] =
+    df.groupBy("source").count().collect().map { r =>
+      Option(r.getString(0)).getOrElse(SnapshotDiff.NullSourceSentinel) ->
+        r.getLong(1)
+    }.toMap
 }

@@ -122,7 +122,11 @@ object Pipeline {
         .as("n_repaired"),
       sum(when(col("bucket") === "quarantine", 1L).otherwise(0L))
         .as("n_quarantined"))
-    val summary = result.summary.join(counts, Seq("source"), "left")
+    // null-safe key: the NULL-source slice is a real partition, and a
+    // plain equi-join would report it as never repaired or quarantined
+    val summary = result.summary
+      .join(counts.withColumnRenamed("source", "_csrc"),
+        col("source") <=> col("_csrc"), "left")
       .select(col("source"), col("n_rows"), col("n_violations"),
         col("pass"),
         coalesce(col("n_repaired"), lit(0L)).as("n_repaired"),

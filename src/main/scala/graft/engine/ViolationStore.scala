@@ -1,7 +1,8 @@
 package graft.engine
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.model.DetailedViolation
 
@@ -105,13 +106,7 @@ object ViolationStore {
       runTs: Long): DataFrame = {
     val dir = s"${snapDir(baseDir, snapshotId)}/gen=$runTs"
     if (!graft.sources.Fs.successExists(spark, dir)) emptyViolations(spark)
-    else
-      // a clean run may have ZERO violations: the committed directory then
-      // holds only _SUCCESS (+ sidecars) and schema inference has nothing
-      // to read
-      try read(spark, dir)
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        emptyViolations(spark) }
+    else read(spark, dir)
   }
 
   /** One committed generation's metadata: stamp, path, sources with rows,
@@ -120,6 +115,16 @@ object ViolationStore {
     */
   private final case class Gen(
       ts: Long, path: Path, withRows: Set[String], present: Set[String])
+
+  /** The source a `source=<name>` directory holds, keyed like the
+    * validated-sources sidecars and the manifest: Spark writes a NULL
+    * partition value as the Hive default-partition directory, which keys
+    * under [[SnapshotDiff.NullSourceSentinel]].
+    */
+  private def sourceOfDir(name: String): String =
+    if (name == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      SnapshotDiff.NullSourceSentinel
+    else unescapePartitionValue(name)
 
   /** Spark escapes special characters in partition directory names as %XX
     * (`source=a%2Fb`); undo that so directory-derived source names compare
@@ -150,7 +155,7 @@ object ViolationStore {
             val withRows = children
               .filter(c => c.isDirectory &&
                 c.getPath.getName.startsWith("source="))
-              .map(c => unescapePartitionValue(
+              .map(c => sourceOfDir(
                 c.getPath.getName.stripPrefix("source="))).toSet
             val marked = children
               .filter(c => c.isFile &&
@@ -187,25 +192,28 @@ object ViolationStore {
     val gens = committedGens(fs, dir)
     val win = winners(gens)
     // per generation, the sources it WINS and actually has rows for; the
-    // isin filter prunes at the scan (source is the partition column)
+    // slice filter prunes at the scan (source is the partition column) and
+    // selects the NULL-source directory with IS NULL
     val parts = gens.flatMap { g =>
       val mine = g.withRows.filter(s => win(s) == g.ts)
       if (mine.isEmpty) None
       else Some(read(spark, g.path.toString)
-        .where(col("source").isin(mine.toSeq: _*)))
+        .where(SnapshotDiff.sliceFilter(mine.toSeq.sorted)))
     }
     if (parts.isEmpty) emptyViolations(spark)
     else parts.reduce(_.unionByName(_))
   }
 
-  /** Parquet read that re-strings partition columns: partition-value type
-    * inference would read a numeric-looking source directory as int and
-    * break the unionByName with computed violation frames.
+  private val Schema = Encoders.product[DetailedViolation].schema
+
+  /** Parquet read with the fixed [[DetailedViolation]] schema: building the
+    * frame starts no footer-inference job, a committed generation with
+    * ZERO violations (only `_SUCCESS` + sidecars) reads as empty, and the
+    * `source` partition column stays a string (a numeric-looking source
+    * directory is not inferred as int).
     */
   private def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
-      .select(col("doc_id"), col("rule_id"), col("detail"), col("severity"),
-        col("source").cast("string").as("source"))
+    spark.read.schema(Schema).parquet(dir)
 
   /** Delete generations that are fully SUPERSEDED — every source PRESENT in
     * them (rows or validated-sidecar) also appears in a newer COMMITTED

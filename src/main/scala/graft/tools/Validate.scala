@@ -116,9 +116,12 @@ object Validate {
     *
     * The run's single rule pass terminates in a [[ViolationStore]] write
     * (default layout `<manifest>_violations`), and `--report` assembles the
-    * artifact from those persisted violations plus the manifest-
-    * reconstructed summary — the reference's write-the-report-from-
-    * collected-issues shape (main.py:296-304). A `--report` on a RESUMED
+    * artifact from those persisted violations — the reference's
+    * write-the-report-from-collected-issues shape (main.py:296-304). The
+    * returned summary is a driver-local frame: the runner builds it from
+    * its source census, the violation counts of the generation it just
+    * wrote and, on a resumed leg, the manifest it already collected; no
+    * extra scan and nothing cached. A `--report` on a RESUMED
     * run therefore re-validates NOTHING: completed partitions contribute
     * their stored generations (one rule pass per partition per snapshot,
     * ever — CheckpointSpec pins the report plan token-scan-free).

@@ -96,7 +96,7 @@ class CheckpointSpec extends SparkSpec {
     assert(m("R").startsWith("error:"))
     assert(r.validatedPartitions.toSet === Set("A", "N"))
     // resume skips the healthy partitions and retries only R
-    val done = Checkpoint.snapshotState(spark, dir, 2L)._1
+    val done = Checkpoint.completed(Checkpoint.load(spark, dir), 2L)
     assert(done.toSet === Set("A", "N"))
   }
 
@@ -234,7 +234,7 @@ class CheckpointSpec extends SparkSpec {
       s"duplicated violation rows: ${stored.mkString(", ")}")
     assert(stored.map(_._1).toSet === Set("a2")) // A's length violation
     // resume retries only the poison partition
-    assert(Checkpoint.snapshotState(spark, manifest, 3L)._1.toSet
+    assert(Checkpoint.completed(Checkpoint.load(spark, manifest), 3L).toSet
       === Set("A", "N"))
   }
 
@@ -294,6 +294,76 @@ class CheckpointSpec extends SparkSpec {
     assert(graft.engine.ViolationStore.prune(spark, vstore, 1L) === 1)
     assert(graft.engine.ViolationStore.latest(spark, vstore, 1L).count()
       === 0L)
+  }
+
+  /** Jobs started while `body` runs, counted by a listener. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graft.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("the runner caches nothing: no summary outlives its leg") {
+    val tmp = Files.createTempDirectory("graft-nocache").toString
+    val violFn = (df: org.apache.spark.sql.DataFrame) =>
+      graft.engine.Validator.violations(df, ruleSet, dims)
+    spark.catalog.clearCache()
+    val leg1 = ValidationRunner.runResumableWith(
+      spark, fixture, violFn, s"$tmp/manifest", 1L, Some(s"$tmp/v"))
+    val leg2 = ValidationRunner.runResumableWith(
+      spark, fixture, violFn, s"$tmp/manifest", 1L, Some(s"$tmp/v"))
+    assert(leg1.validatedPartitions.toSet === Set("A", "N", "R"))
+    assert(leg2.skippedPartitions.toSet === Set("A", "N", "R"))
+    assert(leg1.summary.count() === 3L && leg2.summary.count() === 3L)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a validating or skipped leg left a cached frame behind")
+  }
+
+  test("store frames build job-free; a skipped leg runs at most 3 jobs") {
+    val tmp = Files.createTempDirectory("graft-jobs").toString
+    val manifest = s"$tmp/manifest"
+    val vstore = s"$tmp/v"
+    // a parquet token table partitioned by source, like the engine's caches
+    fixture.write.partitionBy("source").parquet(s"$tmp/tok")
+    val tok = spark.read.parquet(s"$tmp/tok")
+    val violFn = (df: org.apache.spark.sql.DataFrame) =>
+      graft.engine.Validator.violations(df, ruleSet, dims)
+    // two generations: leg 1 validates A, leg 2 the rest
+    ValidationRunner.runResumableWith(spark, tok.where(col("source") === "A"),
+      violFn, manifest, 1L, Some(vstore))
+    ValidationRunner.runResumableWith(spark, tok, violFn, manifest, 1L,
+      Some(vstore))
+    val gens = new java.io.File(s"$vstore/snap=1").list()
+      .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong).sorted
+    assert(gens.length === 2)
+
+    val built = jobsIn {
+      Checkpoint.read(spark, manifest)
+      gens.foreach(g =>
+        graft.engine.ViolationStore.generation(spark, vstore, 1L, g))
+      graft.engine.ViolationStore.latest(spark, vstore, 1L)
+    }
+    assert(built === 0, s"building the frames started $built jobs")
+
+    var skipped: ValidationRunner.RunResult = null
+    val legJobs = jobsIn {
+      skipped = ValidationRunner.runResumableWith(spark, tok, violFn,
+        manifest, 1L, Some(vstore))
+    }
+    assert(skipped.skippedPartitions.toSet === Set("A", "N", "R"))
+    // the census aggregate (two stages under AQE) + one manifest collect
+    assert(legJobs <= 3, s"a skipped leg ran $legJobs jobs")
   }
 
   test("manifest records per-partition lineage + metrics") {

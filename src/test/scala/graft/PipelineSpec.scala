@@ -141,6 +141,41 @@ class PipelineSpec extends SparkSpec {
       Set("A", SnapshotDiff.NullSourceSentinel))
   }
 
+  test("pipeline summary keeps the NULL-source slice's repair counts") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(
+      ("d1", Some(Seq(1, 2)), 2, Some("A")),
+      ("d2", Some(Seq(1, 2)), 3, None), // length mismatch: repaired
+      ("d3", None, 1, None)             // null tokens: quarantined
+    ).toDF("doc_id", "tokens", "n_tok", "source")
+      .withColumn("tokens", col("tokens").cast("array<int>"))
+    val routing = RuleSetLoader.parse(
+      """{ "ruleSets": { "strict": [
+        |  {"type":"notNull","id":"nn","column":"tokens","severity":"error"},
+        |  {"type":"lengthConsistency","id":"lc","arrayColumn":"tokens","lengthColumn":"n_tok"}
+        |] }, "routing": {}, "defaultRuleSet": "strict" }""".stripMargin)
+    val base = tmp("graft_pipe_nullsrc")
+    def run() = Pipeline.run(spark, df, routing, Map.empty, None,
+      s"$base/manifest", 1L, s"$base/q")
+    // d3's error violation must come back out of the violation store
+    // (its directory is the NULL partition) to reach the quarantine, and
+    // the summary must join the split's counts to the NULL source.
+    // (n_rows, n_violations, n_repaired, n_quarantined) per source
+    def bySrc(res: Pipeline.Result) = res.summary.collect()
+      .map(r => Option(r.getString(0)) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(4), r.getLong(5)))).toMap
+    val want = Map(Some("A") -> ((1L, 0L, 0L, 0L)),
+      None -> ((2L, 1L, 1L, 1L)))
+    val first = run()
+    assert(first.validated.toSet === Set("A", SnapshotDiff.NullSourceSentinel))
+    assert(bySrc(first) === want)
+    // the resumed leg reports the same NULL source (not the sentinel key)
+    val second = run()
+    assert(second.validated.isEmpty)
+    assert(bySrc(second) === want)
+  }
+
   test("pipeline appends run metrics and evaluates the SLA suite") {
     import graft.engine.{Expectations, MetricsStore}
     val routing = RuleSetLoader.parse(routingJson)
