@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.operators.TextOps
 
@@ -34,20 +33,6 @@ object StreamingDedup {
   val RocksDBProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run `body` with the session's state-store provider set to RocksDB,
-    * restoring the previous setting afterwards (the provider is read
-    * per-query at start, so the scope only needs to cover `start()`).
-    */
-  def withRocksDBState[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, RocksDBProvider)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Input schema of the document stream (driver `documents` table). */
   val docSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -78,7 +63,7 @@ object StreamingDedup {
     */
   def runDedupAvailableNow(
       spark: SparkSession, path: String,
-      maxFilesPerTrigger: Int = 8): DataFrame = withRocksDBState(spark) {
+      maxFilesPerTrigger: Int = 8): DataFrame = {
     // 8 files/trigger (round 7): the docs cache is 16 files, so this is
     // TWO micro-batches — duplicate groups still span batches (the
     // cross-batch state gates; the survivor set is batching-independent by
@@ -94,14 +79,8 @@ object StreamingDedup {
       .schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
-    val name = s"graft_stream_dedup_${System.nanoTime()}"
-    val q = dedupStream(stream).writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    BoundedStream.toMemory(dedupStream(stream), "graft_stream_dedup",
+        stateProvider = Some(RocksDBProvider))
       .groupBy("source").agg(count(lit(1)).as("n_unique_fps"))
   }
 
@@ -130,7 +109,7 @@ object StreamingDedup {
     */
   def runEventDedupAvailableNow(
       spark: SparkSession, path: String, delay: String = "3650 days",
-      maxFilesPerTrigger: Int = 8): DataFrame = withRocksDBState(spark) {
+      maxFilesPerTrigger: Int = 8): DataFrame = {
     // RocksDB adopted here too (same A/B evidence as runDedupAvailableNow)
     // 8 files/trigger (round 7): the events cache is 16 files → TWO
     // micro-batches instead of four — duplicate pairs still span batches,
@@ -147,17 +126,13 @@ object StreamingDedup {
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
-    val name = s"graft_stream_evdedup_${System.nanoTime()}"
-    val q = dedupWithinWatermark(stream, "ts", delay,
+    // key-only projection: the emitted SET is deterministic, the
+    // first winner isn't
+    val keys = dedupWithinWatermark(stream, "ts", delay,
         Seq("user_id", "event_type"))
-      .select("user_id", "event_type") // key-only projection: emitted SET
-      .writeStream                     // is deterministic, first-winner isn't
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+      .select("user_id", "event_type")
+    BoundedStream.toMemory(keys, "graft_stream_evdedup",
+        stateProvider = Some(RocksDBProvider))
       .groupBy("event_type").agg(count(lit(1)).as("n_unique_users"))
   }
 }

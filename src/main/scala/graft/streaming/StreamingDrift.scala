@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.functions.KllFunctions
 
@@ -76,13 +75,6 @@ object StreamingDrift {
         col(valueCol).as("value"))
     val out = windowedSketchDrift(stream, "ts", windowDur, watermarkDur,
       baselineQs, "value", k, ps, threshold)
-    val name = s"graft_window_drift_${System.nanoTime()}"
-    val q = out.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    BoundedStream.toMemory(out, "graft_window_drift")
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Streaming SESSION WINDOWS — the native Structured Streaming twin of the
@@ -45,13 +44,6 @@ object StreamingSessions {
       watermarkDur: String): DataFrame = {
     val stream = spark.readStream.schema(schema).parquet(path)
     val out = sessionCounts(stream, tsCol, keyCol, gap, watermarkDur)
-    val name = s"graft_sessions_${System.nanoTime()}"
-    val q = out.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    BoundedStream.toMemory(out, "graft_sessions")
   }
 }

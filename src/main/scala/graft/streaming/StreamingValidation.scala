@@ -22,13 +22,19 @@ import graft.rules.{RuleSet, UniqueRule}
   *    small dimension becomes a static predicate in the row pass, a large
   *    one a stream–static broadcast anti-join (no stream-stream state).
   *  - uniqueness: genuinely stateful — `flatMapGroupsWithState` keyed by
-  *    doc_id holding (count, minSource) per key. At cluster scale state is
-  *    hash-partitioned by key across executors and checkpointed by the
-  *    state store; no driver memory is involved. State grows with the
-  *    distinct-key count BY DEFINITION of streaming uniqueness (there is
-  *    no sound TTL — an evicted key would silently re-admit duplicates);
-  *    size it with the RocksDB state store, where 10^12 keys × ~16 bytes
-  *    spill to local SSTs, not executor heap.
+  *    doc_id holding (count, minSource) per key, hash-partitioned by key
+  *    and checkpointed by the state store; no driver dict is involved.
+  *    State grows with the distinct-key count BY DEFINITION of streaming
+  *    uniqueness (there is no sound TTL — an evicted key would silently
+  *    re-admit duplicates).
+  *
+  * State lifetime: the harnesses below run on the session's state-store
+  * provider — the default, heap-backed one — and their state lives exactly
+  * as long as the query: [[BoundedStream]] unloads the run's providers
+  * when it ends. A deployment whose key set outgrows the executor heap
+  * sets `spark.sql.streaming.stateStore.providerClass` to the RocksDB
+  * provider ([[StreamingDedup.RocksDBProvider]]), which keeps the state in
+  * local SST files instead.
   */
 object StreamingValidation {
 
@@ -54,7 +60,9 @@ object StreamingValidation {
 
   /** Stateful streaming uniqueness: emits a violation row whenever a doc_id
     * arrives that was already seen (in this or any earlier micro-batch).
-    * One `long` of state per distinct key, partitioned by key.
+    * One (count, minSource) state row per distinct key, partitioned by key,
+    * held by whatever provider the session configures for as long as the
+    * query runs (the bounded harnesses release it when the query ends).
     *
     * Semantics vs batch [[Validator.uniqueViolations]]: batch reports each
     * duplicated key once with its final count and min(source) over ALL rows
@@ -99,7 +107,9 @@ object StreamingValidation {
     * FINAL emission per key (max count) carries the key's total count and
     * global min source — which must equal the batch
     * [[Validator.uniqueViolations]] row exactly, independent of how files
-    * split into micro-batches. Returns (doc_id, cnt, source).
+    * split into micro-batches. Returns (doc_id, cnt, source), a lazy frame
+    * over the finished run's memory sink; the run's state is already
+    * released.
     */
   def runUniqueAvailableNow(
       spark: SparkSession, path: String,
@@ -114,14 +124,8 @@ object StreamingValidation {
       .schema(tokenSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
-    val name = s"graft_stream_unique_${System.nanoTime()}"
-    val q = uniqueViolationStream(stream).toDF().writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    finalEmissions(spark.table(name))
+    finalEmissions(BoundedStream.toMemory(
+      uniqueViolationStream(stream).toDF(), "graft_stream_unique"))
   }
 
   /** Reduce a (possibly multi-emission) stateful-uniqueness output to the
@@ -150,6 +154,8 @@ object StreamingValidation {
     * (exactly-once via the sink's `_spark_metadata` log). Returns the final
     * per-key rows over everything emitted so far; StreamingSpec asserts a
     * kill-between-batches restart converges to the batch duplicate set.
+    * Each invocation releases its state-store providers when it ends; the
+    * next one reloads the state from the checkpoint under a new run id.
     */
   def runUniqueToFileSink(
       spark: SparkSession, path: String, checkpointDir: String,
@@ -165,7 +171,7 @@ object StreamingValidation {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    BoundedStream.await(q)
     // explicit schema: a violation-free first leg commits zero data files
     // and schema inference would fail on the metadata-only directory
     val emittedSchema = StructType(Seq(
@@ -190,13 +196,6 @@ object StreamingValidation {
       .parquet(path)
     val agg = violationStream(stream, ruleSet, dims)
       .groupBy("source", "rule_id").agg(count(lit(1)).as("cnt"))
-    val name = s"graft_stream_matrix_${System.nanoTime()}"
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    BoundedStream.toMemory(agg, "graft_stream_matrix", outputMode = "complete")
   }
 }

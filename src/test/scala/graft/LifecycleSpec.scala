@@ -111,7 +111,7 @@ class LifecycleSpec extends SparkSpec {
     val rule = ruleSet.uniqueRules.head
     val plain = Validator.uniqueViolations(tok, rule)
       .as[(String, String, String, String, String)].collect().toSet
-    val salted = Validator.uniqueViolationsSalted(tok, rule, nSalt = 16)
+    val salted = SaltedUniqueness.violations(tok, rule, nSalt = 16)
       .as[(String, String, String, String, String)].collect().toSet
     assert(salted === plain)
     assert(plain.nonEmpty)

@@ -124,7 +124,7 @@ class PropertySpec extends AnyFunSuite {
       severity = "warning")
     val unsalted = Validator.uniqueViolations(df, rule)
       .as[(String, String, String, String, String)].collect().toSet
-    val salted = Validator.uniqueViolationsSalted(df, rule, nSalt = 16)
+    val salted = SaltedUniqueness.violations(df, rule, nSalt = 16)
       .as[(String, String, String, String, String)].collect().toSet
     assert(salted === unsalted)
     assert(salted.exists(_._1 == "hot"))

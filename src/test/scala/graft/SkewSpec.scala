@@ -61,7 +61,7 @@ class SkewSpec extends SparkSpec {
     val rule = graft.rules.UniqueRule("unique_doc_id", "doc_id")
     val a = Validator.uniqueViolations(df, rule)
       .as[(String, String, String, String, String)].collect().toSet
-    val b = Validator.uniqueViolationsSalted(df, rule, nSalt = 8)
+    val b = SaltedUniqueness.violations(df, rule, nSalt = 8)
       .as[(String, String, String, String, String)].collect().toSet
     assert(a === b)
     assert(a.exists(v => v._1 == "hot" && v._3 == "doc_id occurs 4000 times"))
@@ -79,7 +79,7 @@ class SkewSpec extends SparkSpec {
       moreColumns = Seq("source"))
     val a = Validator.uniqueViolations(df, rule)
       .as[(String, String, String, String, String)].collect().toSet
-    val b = Validator.uniqueViolationsSalted(df, rule, nSalt = 8)
+    val b = SaltedUniqueness.violations(df, rule, nSalt = 8)
       .as[(String, String, String, String, String)].collect().toSet
     assert(a === b)
     // the hot key splits into its two composite halves

@@ -1,9 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.rules.RuleSet
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryException, StreamingQueryListener}
+import graft.rules.{RuleSet, UniqueRule}
 import graft.sources.TokenTable
 import graft.streaming.{StreamingDrift, StreamingValidation}
 
@@ -298,6 +301,82 @@ class StreamingSpec extends SparkSpec {
       .orderBy("event_type").collect().toSeq
     assert(streamed === batch)
     assert(streamed.nonEmpty)
+  }
+
+  private def graftViews(): Set[String] =
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_")).toSet
+
+  /** `body`'s result plus every streaming query it started. The started
+    * event reaches a session listener on the query's own thread before
+    * `start()` returns, while the query is still registered as active.
+    */
+  private def withQueries[T](body: => T): (T, Seq[StreamingQuery]) = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQuery]()
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        Option(spark.streams.get(e.id)).foreach(started.add)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = body
+      (out, started.asScala.toSeq)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  private def usedRocksDB(q: StreamingQuery): Boolean =
+    q.lastProgress.stateOperators.exists(
+      _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))
+
+  test("a failed bounded stream rethrows and leaves no sink view behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-bad")
+    java.nio.file.Files.write(dir.resolve("part-00000.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    val before = graftViews()
+    intercept[StreamingQueryException] {
+      StreamingValidation.runUniqueAvailableNow(spark, dir.toString)
+    }
+    assert(graftViews() -- before === Set.empty[String])
+  }
+
+  test("bounded streams drop their sink view and unload their state stores") {
+    val s = spark
+    import s.implicits._
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val providerBefore = spark.conf.getOption(providerKey)
+    val before = graftViews()
+    // the six registry queries, one per bounded-stream harness
+    val outs = Seq("s_stream_rule_matrix", "s_stream_unique", "s_window_drift",
+        "s_sessionize", "s_stream_dedup", "s_event_dedup_wm").map { name =>
+      val (out, qs) = withQueries(SparkEntry.queries(name)(spark, sf0001))
+      assert(qs.size === 1, name)
+      val providers = bridge.stateStoreProviders(qs.head)
+      assert(providers.nonEmpty, s"$name: no state-store provider found")
+      assert(providers.filter(StateStore.isLoaded) === Seq.empty,
+        s"$name left providers loaded")
+      // RocksDB for the two dedup harnesses only, scoped to their start()
+      assert(usedRocksDB(qs.head) === name.contains("dedup"), name)
+      name -> out
+    }.toMap
+    assert(spark.conf.getOption(providerKey) === providerBefore)
+    assert(graftViews() -- before === Set.empty[String])
+
+    // the returned frames read the sink itself, not its dropped view
+    val tokens = TokenTable.materializedPath(spark, sf0001)
+    val batchUnique = graft.engine.Validator.uniqueViolations(
+        spark.read.parquet(tokens), UniqueRule("unique_doc_id", "doc_id"))
+      .select(col("doc_id"),
+        regexp_extract(col("detail"), "occurs ([0-9]+) times", 1)
+          .cast("bigint"), col("source"))
+      .as[(String, Long, String)].collect().toSet
+    assert(batchUnique.nonEmpty)
+    for (_ <- 1 to 2)
+      assert(outs("s_stream_unique").as[(String, Long, String)].collect().toSet
+        === batchUnique)
+    outs.foreach { case (name, out) => assert(out.count() > 0, name) }
   }
 }
 
