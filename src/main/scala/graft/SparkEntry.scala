@@ -304,10 +304,11 @@ object Queries {
     graft.engine.ValidationRunner.runResumableWith(spark,
       t.where(col("source").isin("A", "N")), violFn, manifest, 1L,
       Some(vstore))
-    graft.engine.ValidationRunner.runResumableWith(spark,
+    val leg2 = graft.engine.ValidationRunner.runResumableWith(spark,
       t, violFn, manifest, 1L, Some(vstore))
     graft.report.ReportOps.assemble(
-        graft.engine.ViolationStore.latest(spark, vstore, 1L), fdpgRules)
+        graft.engine.ViolationStore.latest(spark, vstore, 1L, leg2.manifest),
+        fdpgRules)
       .orderBy("category", "severity_rank", "rule_id", "detail_generic")
   }
 
@@ -1129,7 +1130,7 @@ object Queries {
     * eviction/re-admission semantics are pinned by StreamingSpec.
     */
   def sEventDedupWm(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.sources.DocSource.materializedEvents(spark, dir)
+    val path = graft.sources.EventSource.materializedPath(spark, dir)
     graft.streaming.StreamingDedup.runEventDedupAvailableNow(spark, path)
       .orderBy("event_type")
   }

@@ -127,7 +127,12 @@ object ValidationRunner {
         * partitions); callers must not misread a contained-failure run as
         * clean.
         */
-      failedPartitions: Seq[String] = Nil)
+      failedPartitions: Seq[String] = Nil,
+      /** The manifest as the run left it: the entries it loaded plus the
+        * ones it appended (stamped). Pass it to [[ViolationStore.latest]] and
+        * [[ViolationStore.prune]] — no second manifest read.
+        */
+      manifest: Seq[ManifestEntry] = Nil)
 
   /** Validate all partitions not yet marked ok in the manifest at this
     * snapshot, append their metrics, and return the per-partition summary.
@@ -163,11 +168,21 @@ object ValidationRunner {
     * partition this run validates as a snapshot/generation-stamped artifact
     * ([[ViolationStore]]) — the run's ONE rule pass then terminates in that
     * write, the violation counts are read from the generation just
-    * committed, and a later report assembles from the artifacts with ZERO
-    * additional rule passes ([[graft.tools.Validate.run]]). Dataset-level
-    * rules (uniqueness) are evaluated per validated slice by the resumable
-    * lifecycle's definition — a fresh full run slices the whole table, so
-    * nothing changes there.
+    * written, and the manifest append that follows commits it: a later
+    * report assembles from the artifacts the returned manifest references,
+    * with ZERO additional rule passes ([[graft.tools.Validate.run]]).
+    * Dataset-level rules (uniqueness) are evaluated per validated slice by
+    * the resumable lifecycle's definition — a fresh full run slices the
+    * whole table, so nothing changes there.
+    *
+    * Containment with attribution (reference behavior, main.py:225-263):
+    * when the batched job over all pending partitions fails, they are
+    * re-run one by one under a FRESH generation stamp, so the error is
+    * attributed to the partition that caused it and every healthy
+    * partition still completes and is checkpointed. The fast path may have
+    * written its generation before failing; appending the fallback's rows
+    * into it would double them, while a generation no manifest entry
+    * references is never read (and [[ViolationStore.prune]] reclaims it).
     */
   def runResumableWith(
       spark: SparkSession,
@@ -191,91 +206,60 @@ object ValidationRunner {
 
     if (pending.isEmpty)
       return RunResult(Nil, all, Checkpoint.summaryFrame(spark,
-        Checkpoint.latestOk(manifest, snapshotId)))
+        Checkpoint.latestOk(manifest, snapshotId)), manifest = manifest)
 
-    // fast path: one job over all pending partitions (not a per-partition
-    // loop) — the filter prunes partitions at the scan when stored by source.
-    // The WHOLE branch — including the ViolationStore write, which is where
-    // the rule pass actually executes when violationsDir is set — evaluates
-    // inside the containment try: a poison partition in the batched write
-    // must fall through to the per-partition fallback, not abort the run
-    // uncaught with zero manifest rows for the healthy partitions.
-    val slice = tokens.where(SnapshotDiff.sliceFilter(pending))
-    val t0 = System.nanoTime()
-    val nViolations = try {
+    // Validate the partitions `parts` as generation `stamp` (the filter
+    // prunes partitions at the scan when stored by source) and count their
+    // violations per partition. With a store the rule pass executes inside
+    // the write, and the counts read the persisted rows back (tiny).
+    def countSlice(parts: Seq[String], stamp: Long): Map[String, Long] = {
+      val slice = tokens.where(SnapshotDiff.sliceFilter(parts))
       violationsDir match {
         case Some(vd) =>
-          // the rule pass executes INSIDE this write; the counts read the
-          // persisted rows back (tiny)
-          ViolationStore.persist(violationsOf(slice), vd, snapshotId, runTs,
-            validatedSources = pending)
-          countBySource(ViolationStore.generation(spark, vd, snapshotId, runTs))
+          ViolationStore.persist(violationsOf(slice), vd, snapshotId, stamp)
+          countBySource(ViolationStore.generation(spark, vd, snapshotId, stamp)
+            .where(SnapshotDiff.sliceFilter(parts)))
         case None =>
           countBySource(violationsOf(slice))
       }
-    } catch {
-      case _: Throwable =>
-        return containPerPartition(spark, tokens, violationsOf, manifestPath,
-          snapshotId, violationsDir, census, pending, done, runTs)
     }
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    val entries = pending.map(p => ManifestEntry(p, snapshotId, "ok",
-      census(p), nViolations.getOrElse(p, 0L), wallMs))
-    Checkpoint.append(spark, manifestPath, entries, runTs)
-    RunResult(pending, done, Checkpoint.summaryFrame(spark, entries))
-  }
+    def ok(p: String, counts: Map[String, Long], t0: Long) =
+      ManifestEntry(p, snapshotId, "ok", census(p), counts.getOrElse(p, 0L),
+        (System.nanoTime() - t0) / 1000000)
 
-  /** Containment with attribution (reference behavior, main.py:225-263):
-    * the batched job failed somewhere — re-run partition by partition so
-    * the error is attributed to the partition that caused it and every
-    * healthy partition still completes and is checkpointed.
-    */
-  private def containPerPartition(
-      spark: SparkSession,
-      tokens: DataFrame,
-      violationsOf: DataFrame => DataFrame,
-      manifestPath: String,
-      snapshotId: Long,
-      violationsDir: Option[String],
-      census: Map[String, Long],
-      pending: Seq[String],
-      done: Seq[String],
-      runTs: Long): RunResult = {
-    // FRESH generation stamp: the fast path may have COMMITTED its
-    // violation write before the count read-back failed — appending the
-    // fallback's per-partition writes into that same generation would
-    // double every violation row. A newer generation instead supersedes it
-    // cleanly (and prune() reclaims the orphan). `runTs` is already above
-    // every stamp in the manifest, and under the single-writer contract
-    // nothing has been appended since, so `runTs + 1` is the only floor.
-    val retryTs = math.max(System.currentTimeMillis(), runTs + 1)
-    val perPart = pending.map { p =>
-      val one = tokens.where(SnapshotDiff.sliceFilter(Seq(p)))
-      val tp = System.nanoTime()
+    // fast path: one job over all pending partitions (not a per-partition
+    // loop). The WHOLE slice — including the ViolationStore write — runs
+    // inside the containment try: a poison partition in the batched write
+    // must fall through to the per-partition fallback, not abort the run
+    // uncaught with zero manifest rows for the healthy partitions.
+    val t0 = System.nanoTime()
+    val (stamp, entries) =
       try {
-        val nv = violationsDir match {
-          case Some(vd) =>
-            ViolationStore.persist(violationsOf(one), vd, snapshotId,
-              retryTs, validatedSources = Seq(p))
-            countBySource(
-              ViolationStore.generation(spark, vd, snapshotId, retryTs)
-                .where(SnapshotDiff.sliceFilter(Seq(p))))
-          case None =>
-            countBySource(violationsOf(one))
-        }
-        ManifestEntry(p, snapshotId, "ok", census(p), nv.getOrElse(p, 0L),
-          (System.nanoTime() - tp) / 1000000)
+        val counts = countSlice(pending, runTs)
+        (runTs, pending.map(ok(_, counts, t0)))
       } catch {
-        case e: Throwable =>
-          ManifestEntry(p, snapshotId,
-            s"error:${e.getClass.getSimpleName}", 0L, 0L,
-            (System.nanoTime() - tp) / 1000000)
+        case _: Throwable =>
+          // `runTs` is already above every stamp in the manifest, and under
+          // the single-writer contract nothing has been appended since, so
+          // `runTs + 1` is the only floor
+          val retryTs = math.max(System.currentTimeMillis(), runTs + 1)
+          (retryTs, pending.map { p =>
+            val tp = System.nanoTime()
+            try ok(p, countSlice(Seq(p), retryTs), tp)
+            catch {
+              case e: Throwable =>
+                ManifestEntry(p, snapshotId,
+                  s"error:${e.getClass.getSimpleName}", 0L, 0L,
+                  (System.nanoTime() - tp) / 1000000)
+            }
+          })
       }
-    }
-    Checkpoint.append(spark, manifestPath, perPart, retryTs)
-    val (ok, failed) = perPart.partition(_.status == "ok")
-    RunResult(ok.map(_.partition), done, Checkpoint.summaryFrame(spark, ok),
-      failed.map(_.partition))
+    Checkpoint.append(spark, manifestPath, entries, stamp)
+    val appended = entries.map(_.copy(run_ts = stamp))
+    val (okEntries, failed) = appended.partition(_.status == "ok")
+    RunResult(okEntries.map(_.partition), done,
+      Checkpoint.summaryFrame(spark, okEntries), failed.map(_.partition),
+      manifest ++ appended)
   }
 
   /** Row count per source, collected, keyed like the manifest (a NULL

@@ -20,7 +20,9 @@ import graft.rules.RuleSetLoader.Routing
   *    of materializing an intermediate corpus;
   *  - the rule pass executes ONCE, inside the resumable runner's
   *    ViolationStore write — quarantine flagging and the report both read
-  *    the PERSISTED violations (sparse) back, never re-running rules;
+  *    the PERSISTED violations (sparse) back, never re-running rules,
+  *    picking the current generations from the manifest the runner
+  *    returns (no second manifest read);
   *  - the quarantine split is the one additional corpus pass (it must
   *    rewrite the data by definition), and the summary's repair/quarantine
   *    counts read the split OUTPUT, not the corpus;
@@ -97,7 +99,8 @@ object Pipeline {
 
     // 4. quarantine split flags against the PERSISTED violations (no
     // second rule pass); the split write is the one extra corpus scan
-    val stored = ViolationStore.latest(spark, vDir, snapshotId)
+    val stored = ViolationStore.latest(spark, vDir, snapshotId,
+      result.manifest)
     val written = bucketedCleanTable match {
       case Some(t) =>
         Quarantine.writeBucketedFrom(spark,

@@ -29,17 +29,23 @@ object StatsOps {
     * free from parquet footer/Iceberg manifest metadata instead.
     */
   def columnStats(tokens: DataFrame): DataFrame = {
-    val numeric = tokens.groupBy("source").agg(
-      count(lit(1)).as("n_rows"),
-      min(col("n_tok")).as("min_n_tok"),
-      max(col("n_tok")).as("max_n_tok"),
-      avg(col("n_tok")).as("avg_n_tok"),
-      sum(col("tokens").isNull.cast("long")).as("null_tokens"))
+    val numeric = numericStats(tokens)
     val strings = tokens.select("source", "doc_id").groupBy("source").agg(
       min(col("doc_id")).as("min_doc_id"),
       max(col("doc_id")).as("max_doc_id"))
     numeric.join(strings, Seq("source"))
   }
+
+  /** The numeric side of [[columnStats]]: one codegen'd HashAggregate
+    * per source.
+    */
+  private def numericStats(tokens: DataFrame): DataFrame =
+    tokens.groupBy("source").agg(
+      count(lit(1)).as("n_rows"),
+      min(col("n_tok")).as("min_n_tok"),
+      max(col("n_tok")).as("max_n_tok"),
+      avg(col("n_tok")).as("avg_n_tok"),
+      sum(col("tokens").isNull.cast("long")).as("null_tokens"))
 
   /** [[columnStats]] with the drift sketch FUSED in: one extra `cur_qs`
     * column of KLL quantiles of `n_tok` rides the stats scan, so the full
@@ -58,12 +64,7 @@ object StatsOps {
     */
   def columnStatsWithQuantiles(tokens: DataFrame, k: Int,
       ps: Seq[Double]): DataFrame = {
-    val numeric = tokens.groupBy("source").agg(
-      count(lit(1)).as("n_rows"),
-      min(col("n_tok")).as("min_n_tok"),
-      max(col("n_tok")).as("max_n_tok"),
-      avg(col("n_tok")).as("avg_n_tok"),
-      sum(col("tokens").isNull.cast("long")).as("null_tokens"))
+    val numeric = numericStats(tokens)
     val strings = tokens.select("source", "doc_id", "n_tok")
       .groupBy("source").agg(
         min(col("doc_id")).as("min_doc_id"),

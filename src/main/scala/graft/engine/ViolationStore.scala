@@ -1,10 +1,9 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import graft.model.DetailedViolation
+import graft.model.{DetailedViolation, ManifestEntry}
 
 /** Persisted per-partition violation artifacts — the piece that lets
   * `--report` on a RESUMED run cost zero extra rule passes.
@@ -19,82 +18,48 @@ import graft.model.DetailedViolation
   *
   * {{{ baseDir/snap=<snapshotId>/gen=<runTs>/source=<partition>/part-….parquet }}}
   *
-  * mirroring the checkpoint manifest's generations: each resumable run
-  * appends one `gen=` directory holding the violations of the partitions it
-  * actually validated. Reconstruction ([[latest]]) keeps each source's
-  * newest COMMITTED generation — the same latest-per-partition selection
-  * the manifest summary uses, so a partition re-validated after a contained
-  * failure supersedes its stale rows.
-  *
-  * Commit protocol: a generation counts only once its `_SUCCESS` marker
-  * exists (written by the parquet committer). A run that crashed mid-write
-  * leaves files but no `_SUCCESS`; [[latest]] and [[prune]] ignore such
-  * directories entirely — an uncommitted generation can neither win a
-  * source nor cause the deletion of the committed generation it was
-  * superseding.
-  *
-  * Presence protocol: a partition re-validated CLEAN writes no `source=`
-  * subdirectory (there are no rows), which would otherwise let an older
-  * generation's stale violations win the per-source max. [[persist]]
-  * therefore also records the set of sources the run VALIDATED in a
-  * `_validated_*` sidecar inside the generation directory (underscore
-  * prefix: invisible to Spark's file discovery); per-source winners are
-  * computed over rows ∪ validated-markers, so a clean re-validation masks
-  * its stale predecessors even though it contributes zero rows.
+  * where `runTs` is the stamp of the checkpoint manifest entries the run
+  * appends for the same partitions ([[Checkpoint]]). The manifest append
+  * after the write is the commit: a generation's rows count for exactly the
+  * partitions whose latest `ok` manifest entry carries its stamp
+  * ([[Checkpoint.latestOk]]), so a write without manifest entries (a crash
+  * between the two, or an aborted batched pass) is never read, and a
+  * partition re-validated clean supersedes its stale rows without writing
+  * any.
   *
   * Violations are a small fraction of the input (~2% on the fixture; the
   * design assumption everywhere in this engine), so the store is cheap to
-  * write and to re-read. [[latest]] is a pure metadata computation plus a
-  * read of exactly the winning (generation, source) directories — the big
-  * side never shuffles and superseded generations are never read.
+  * write and to re-read. [[latest]] reads exactly the current (generation,
+  * partition) slices — the big side never shuffles and superseded
+  * generations are never read.
   *
   * Single-writer assumption: one resumable run appends to a snapshot at a
   * time (the scheduler's job-level lock; same contract as the manifest
-  * appends and [[graft.operators.VectorIndex.compact]]). [[prune]] running
-  * beside an active writer is safe for COMMITTED generations — it never
-  * deletes a generation that still wins any source — but the write of a
-  * new generation must not race another write of the SAME `runTs`.
+  * appends and [[graft.operators.VectorIndex.compact]]). A writer stamps
+  * above every stamp in the manifest, so [[prune]] beside it never deletes
+  * the generation it is writing.
   */
 object ViolationStore {
 
   private def snapDir(baseDir: String, snapshotId: Long): String =
     s"$baseDir/snap=$snapshotId"
 
+  private def genDir(baseDir: String, snapshotId: Long, runTs: Long): String =
+    s"${snapDir(baseDir, snapshotId)}/gen=$runTs"
+
   /** Append one generation of detailed violations
     * (doc_id, rule_id, detail, severity, source). Executing this write IS
     * the run's single rule pass — callers read the persisted copy back
     * rather than re-running the pipeline.
-    *
-    * `validatedSources` is the full set of partitions this run validated
-    * (a superset of the sources that produced rows); it is recorded as a
-    * presence sidecar so clean partitions supersede their older
-    * generations. Callers that cannot name the slice pass Nil and fall
-    * back to rows-only presence (pre-sidecar layouts stay readable).
     */
   def persist(detailed: DataFrame, baseDir: String, snapshotId: Long,
-      runTs: Long, validatedSources: Seq[String] = Nil): Unit = {
-    val dir = s"${snapDir(baseDir, snapshotId)}/gen=$runTs"
+      runTs: Long): Unit =
     detailed
       .select(col("doc_id"), col("rule_id"), col("detail"), col("severity"),
         col("source"))
       .write.mode(SaveMode.Append)
       .partitionBy("source")
-      .parquet(dir)
-    if (validatedSources.nonEmpty) {
-      val spark = detailed.sparkSession
-      // content-hashed name: the per-partition containment fallback appends
-      // several single-source persists into ONE generation — each call gets
-      // its own sidecar file and the reader unions them. Identical source
-      // sets collide onto an identical file, which is a harmless overwrite.
-      val name = f"_validated_${validatedSources.sorted.mkString("\n").hashCode}%08x"
-      val p = new Path(dir, name)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val out = fs.create(p, true)
-      try out.write(validatedSources.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-  }
+      .parquet(genDir(baseDir, snapshotId, runTs))
 
   private def emptyViolations(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -104,102 +69,26 @@ object ViolationStore {
   /** Read ONE generation back (the rows just persisted by [[persist]]). */
   def generation(spark: SparkSession, baseDir: String, snapshotId: Long,
       runTs: Long): DataFrame = {
-    val dir = s"${snapDir(baseDir, snapshotId)}/gen=$runTs"
+    val dir = genDir(baseDir, snapshotId, runTs)
     if (!graft.sources.Fs.successExists(spark, dir)) emptyViolations(spark)
     else read(spark, dir)
   }
 
-  /** One committed generation's metadata: stamp, path, sources with rows,
-    * and sources validated (rows ∪ sidecars). Directories without
-    * `_SUCCESS` are excluded — see the commit protocol above.
+  /** All current violations at a snapshot — the frame a report assembles
+    * from (zero rule passes). Each generation that holds a partition's
+    * latest `ok` entry in `manifest` is read, filtered to exactly those
+    * partitions; a referenced generation missing from the store fails the
+    * read rather than reading as clean.
     */
-  private final case class Gen(
-      ts: Long, path: Path, withRows: Set[String], present: Set[String])
-
-  /** The source a `source=<name>` directory holds, keyed like the
-    * validated-sources sidecars and the manifest: Spark writes a NULL
-    * partition value as the Hive default-partition directory, which keys
-    * under [[SnapshotDiff.NullSourceSentinel]].
-    */
-  private def sourceOfDir(name: String): String =
-    if (name == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-      SnapshotDiff.NullSourceSentinel
-    else unescapePartitionValue(name)
-
-  /** Spark escapes special characters in partition directory names as %XX
-    * (`source=a%2Fb`); undo that so directory-derived source names compare
-    * equal to the raw strings in the validated-sources sidecars.
-    */
-  private def unescapePartitionValue(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '%' && i + 3 <= s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append('%'); i += 1 }
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
-  private def committedGens(fs: FileSystem, dir: Path): Seq[Gen] =
-    fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-      .flatMap { s =>
-        scala.util.Try(s.getPath.getName.stripPrefix("gen=").toLong)
-          .toOption.filter(_ => fs.exists(new Path(s.getPath, "_SUCCESS")))
-          .map { g =>
-            val children = fs.listStatus(s.getPath).toSeq
-            val withRows = children
-              .filter(c => c.isDirectory &&
-                c.getPath.getName.startsWith("source="))
-              .map(c => sourceOfDir(
-                c.getPath.getName.stripPrefix("source="))).toSet
-            val marked = children
-              .filter(c => c.isFile &&
-                c.getPath.getName.startsWith("_validated_"))
-              .flatMap { c =>
-                val in = fs.open(c.getPath)
-                try scala.io.Source.fromInputStream(in, "UTF-8")
-                  .getLines().toList
-                finally in.close()
-              }.filter(_.nonEmpty).toSet
-            Gen(g, s.getPath, withRows, withRows ++ marked)
-          }
+  def latest(spark: SparkSession, baseDir: String, snapshotId: Long,
+      manifest: Seq[ManifestEntry]): DataFrame = {
+    val parts = Checkpoint.latestOk(manifest, snapshotId)
+      .groupBy(_.run_ts).toSeq.sortBy(_._1).map { case (ts, es) =>
+        // the slice filter prunes at the scan (source is the partition
+        // column) and selects the NULL-source directory with IS NULL
+        read(spark, genDir(baseDir, snapshotId, ts))
+          .where(SnapshotDiff.sliceFilter(es.map(_.partition)))
       }
-
-  /** Per-source winning generation over committed generations only:
-    * presence (rows or a validated-sidecar entry) at the highest stamp.
-    */
-  private def winners(gens: Seq[Gen]): Map[String, Long] =
-    gens.flatMap(g => g.present.map(_ -> g.ts))
-      .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-
-  /** All violations at a snapshot, each source contributing its NEWEST
-    * committed generation — the frame a report assembles from (zero rule
-    * passes). Reads exactly the winning (generation, source) directories:
-    * superseded generations cost listing only, and a source whose winning
-    * generation validated it CLEAN contributes nothing even if older
-    * generations still hold its stale rows.
-    */
-  def latest(spark: SparkSession, baseDir: String,
-      snapshotId: Long): DataFrame = {
-    val dir = new Path(snapDir(baseDir, snapshotId))
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return emptyViolations(spark)
-    val gens = committedGens(fs, dir)
-    val win = winners(gens)
-    // per generation, the sources it WINS and actually has rows for; the
-    // slice filter prunes at the scan (source is the partition column) and
-    // selects the NULL-source directory with IS NULL
-    val parts = gens.flatMap { g =>
-      val mine = g.withRows.filter(s => win(s) == g.ts)
-      if (mine.isEmpty) None
-      else Some(read(spark, g.path.toString)
-        .where(SnapshotDiff.sliceFilter(mine.toSeq.sorted)))
-    }
     if (parts.isEmpty) emptyViolations(spark)
     else parts.reduce(_.unionByName(_))
   }
@@ -208,42 +97,34 @@ object ViolationStore {
 
   /** Parquet read with the fixed [[DetailedViolation]] schema: building the
     * frame starts no footer-inference job, a committed generation with
-    * ZERO violations (only `_SUCCESS` + sidecars) reads as empty, and the
-    * `source` partition column stays a string (a numeric-looking source
-    * directory is not inferred as int).
+    * ZERO violations (only `_SUCCESS`) reads as empty, and the `source`
+    * partition column stays a string (a numeric-looking source directory
+    * is not inferred as int).
     */
   private def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(Schema).parquet(dir)
 
-  /** Delete generations that are fully SUPERSEDED — every source PRESENT in
-    * them (rows or validated-sidecar) also appears in a newer COMMITTED
-    * generation, so [[latest]] can never select a row from them and their
-    * clean-markers mask nothing that a newer generation doesn't mask too.
-    * Long-lived snapshots accumulate one `gen=` directory per resumed run
-    * (the same append-bloat the ANN indexes compact away); pruning is a
-    * pure metadata computation — no data is read. Returns the number of
+  /** Delete the generations [[latest]] can no longer read: every `gen=`
+    * directory that no current manifest entry references and whose stamp
+    * is below the manifest's highest stamp (an in-flight writer stamps
+    * above it, so its directory survives). Long-lived snapshots accumulate
+    * one `gen=` directory per resumed run (the same append-bloat the ANN
+    * indexes compact away); no data is read. Returns the number of
     * generations deleted.
-    *
-    * Uncommitted directories (no `_SUCCESS`) are ignored on BOTH sides:
-    * they never count as a winner (an uncommitted write must not cause the
-    * deletion of the committed generation it would supersede) and they are
-    * never deleted (they may be an in-flight writer's — see the
-    * single-writer note above; clean them up out of band if a crash is
-    * known).
     */
-  def prune(spark: SparkSession, baseDir: String, snapshotId: Long): Int = {
+  def prune(spark: SparkSession, baseDir: String, snapshotId: Long,
+      manifest: Seq[ManifestEntry]): Int = {
     val dir = new Path(snapDir(baseDir, snapshotId))
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return 0
-    val gens = committedGens(fs, dir)
-    val win = winners(gens)
-    var removed = 0
-    gens.foreach { g =>
-      if (g.present.nonEmpty && g.present.forall(src => win(src) > g.ts)) {
-        fs.delete(g.path, true)
-        removed += 1
-      }
+    if (manifest.isEmpty || !fs.exists(dir)) return 0
+    val current = Checkpoint.latestOk(manifest, snapshotId).map(_.run_ts).toSet
+    val top = manifest.iterator.map(_.run_ts).max
+    val stale = fs.listStatus(dir).toSeq.map(_.getPath).filter { p =>
+      p.getName.startsWith("gen=") &&
+        p.getName.stripPrefix("gen=").toLongOption
+          .exists(ts => ts < top && !current(ts))
     }
-    removed
+    stale.foreach(fs.delete(_, true))
+    stale.size
   }
 }

@@ -20,18 +20,4 @@ object DocSource {
       }
       dir
     }
-
-  /** Path of the 16-file events cache (built on first use) — the
-    * streaming-source view of the events table.
-    */
-  def materializedEvents(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val dir = Fs.cacheDir(sfDir, "events")
-      if (!Fs.successExists(spark, dir)) {
-        spark.read.parquet(s"$sfDir/events.parquet")
-          .repartition(16)
-          .write.mode("overwrite").parquet(dir)
-      }
-      dir
-    }
 }

@@ -10,7 +10,9 @@ import org.apache.spark.sql.types._
   *
   * Batch reads go straight at the parquet file; the streaming file source
   * needs a DIRECTORY, so the table is materialized once into the local
-  * cache (multi-file, the shape a streaming ingest directory has).
+  * cache (multi-file, the shape a streaming ingest directory has). Every
+  * event stream (`s_event_dedup_wm`, `s_sessionize`, `s_window_drift`)
+  * reads that one cache.
   */
 object EventSource {
 
@@ -25,10 +27,11 @@ object EventSource {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/events.parquet")
 
+  /** Path of the 16-file events cache (built on first use). */
   def materializedPath(spark: SparkSession, sfDir: String): String = synchronized {
     val dir = Fs.cacheDir(sfDir, "events")
     if (!Fs.successExists(spark, dir)) {
-      events(spark, sfDir).repartition(4)
+      events(spark, sfDir).repartition(16)
         .write.mode("overwrite").parquet(dir)
     }
     dir

@@ -101,8 +101,8 @@ object Validate {
         * nonzero so an orchestrator can't misread it as clean.
         */
       failed: Seq[String] = Nil,
-      /** Superseded violation-store generations deleted (only when the run
-        * was invoked with pruning on).
+      /** Violation-store generations no current manifest entry references,
+        * deleted (only when the run was invoked with pruning on).
         */
       pruned: Int = 0)
 
@@ -124,7 +124,10 @@ object Validate {
     * extra scan and nothing cached. A `--report` on a RESUMED
     * run therefore re-validates NOTHING: completed partitions contribute
     * their stored generations (one rule pass per partition per snapshot,
-    * ever — CheckpointSpec pins the report plan token-scan-free).
+    * ever — CheckpointSpec pins the report plan token-scan-free). The
+    * report and `--prune` pick those generations from the manifest the
+    * runner returns (`RunResult.manifest`): no second manifest read, no
+    * store walk.
     */
   def run(spark: SparkSession, tokens: DataFrame, rulesJson: String,
       dimsJson: Option[String], manifestPath: String, snapshotId: Long,
@@ -147,19 +150,19 @@ object Validate {
 
     val reportPath = reportDir.map { dir =>
       val rep = ReportOps.assemble(
-        graft.engine.ViolationStore.latest(spark, vDir, snapshotId),
+        graft.engine.ViolationStore.latest(spark, vDir, snapshotId,
+          result.manifest),
         metadataRules)
       ReportOps.persistReport(rep, dir, snapshotId)
     }
     // after the generation this run appended (and the report, which reads
-    // the store): reclaim generations every source of which has been
-    // superseded — the scheduler hook that keeps a long-lived snapshot's
-    // artifact directory from accumulating one gen= per resumed run.
-    // Single-writer contract (ViolationStore Scaladoc): runs sequentially
-    // with the validation itself, never beside another writer.
+    // the store): reclaim generations no current manifest entry references
+    // — the scheduler hook that keeps a long-lived snapshot's artifact
+    // directory from accumulating one gen= per resumed run
     val pruned =
       if (pruneSuperseded)
-        graft.engine.ViolationStore.prune(spark, vDir, snapshotId)
+        graft.engine.ViolationStore.prune(spark, vDir, snapshotId,
+          result.manifest)
       else 0
     RunOutcome(result.validatedPartitions, result.skippedPartitions,
       result.summary, reportPath, result.failedPartitions, pruned)

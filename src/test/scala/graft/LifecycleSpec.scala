@@ -208,7 +208,8 @@ class LifecycleSpec extends SparkSpec {
     assert(out2.pruned === 1, "superseded generation not reclaimed")
     // the surviving store still reconstructs the full violation set
     val stored = graft.engine.ViolationStore.latest(
-      spark, s"${manifest}_violations", 7L)
+      spark, s"${manifest}_violations", 7L,
+      graft.engine.Checkpoint.load(spark, manifest))
     val live = Validator.violations(tok,
       RuleSet("rr", Seq(NotNullRule("nn", "tokens", "fatal"),
         LengthConsistencyRule("lc", "tokens", "n_tok"))),

@@ -291,7 +291,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("AvailableNow watermark dedup with no eviction equals batch distinct") {
-    val path = graft.sources.DocSource.materializedEvents(spark, sf0001)
+    val path = graft.sources.EventSource.materializedPath(spark, sf0001)
     val streamed = graft.streaming.StreamingDedup
       .runEventDedupAvailableNow(spark, path, maxFilesPerTrigger = 2)
       .orderBy("event_type").collect().toSeq
