@@ -13,7 +13,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.BenchExtra <name-regex> [nRuns] [plansDir] [suffix]"
   *
-  * For each registry query matching the regex: dumps the formatted physical
+  * For each registry query whose WHOLE name matches the regex (exit 2 when
+  * none does): dumps the formatted physical
   * plan to `<plansDir>/<name>_<suffix>.txt` (when plansDir is given) and
   * times `nRuns` noop-sink executions, printing every sample plus the min —
   * the same action and sink as the frozen bench, so numbers are comparable.
@@ -26,8 +27,13 @@ object BenchExtra {
     val nRuns = if (args.length > 1) args(1).toInt else 3
     val plansDir = if (args.length > 2) Some(args(2)) else None
     val suffix = if (args.length > 3) args(3) else "before"
-    val spark = Sessions.local(cpus, "graft-benchextra")
     val names = SparkEntry.queries.keys.filter(_.matches(pat)).toSeq.sorted
+    if (names.isEmpty) {
+      System.err.println(s"[benchextra] no registry query matches '$pat': " +
+        "the pattern must match the whole name (e.g. 'v_.*', not 'v_')")
+      sys.exit(2)
+    }
+    val spark = Sessions.local(cpus, "graft-benchextra")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       plansDir.foreach { d =>

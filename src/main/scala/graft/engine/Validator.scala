@@ -65,8 +65,8 @@ object Validator {
     // interpreted CaseWhen branches per row. Concat/CaseWhen/CreateArray
     // all codegen, so the full multi-rule-set pass stays one compiled loop
     // (asserted by WideRoutingSpec at 400 rule sets / 1200 gated rules).
-    val noHit = array().cast(
-      "array<struct<rule_id:string,detail:string,severity:string>>")
+    val hitType = "struct<rule_id:string,detail:string,severity:string>"
+    val noHit = array().cast(s"array<$hitType>")
     def hitsOf(rs: Seq[(Rule, Option[Column])]): Column =
       concat(rs.map { case (rule, gate) =>
         val r = RuleCompiler.compileRow(rule)
@@ -101,21 +101,17 @@ object Validator {
         val staged = df.select(
           col("doc_id") +: col("source") +:
             chunks.zipWithIndex.map { case (c, i) => hitsOf(c).as(s"_h$i") }: _*)
-        // The always-empty NONDETERMINISTIC tail (slice start touches
-        // spark_partition_id()) makes the hits alias non-pushable:
-        // InferFiltersFromGenerate infers `size(hits) > 0` from the explode
-        // and PushDownPredicates would otherwise substitute the ENTIRE rule
-        // array into a scan-stage Filter — un-splittable in whole-stage
-        // codegen, and the very 64 KB overflow the chunking exists to
-        // prevent. With the tail, the inferred filter stays above this
-        // projection as a cheap attribute check. (The slice(…,1,size) form
-        // double-references each chunk so CollapseProject keeps the stage.)
-        val nondetEmptyTail =
-          slice(noHit, spark_partition_id() * 0 + 1, lit(0))
+        // The hits alias is made non-pushable (TextOps.nonPushableArray):
+        // otherwise the explode's inferred `size(hits) > 0` would carry the
+        // ENTIRE rule array into a scan-stage Filter — un-splittable in
+        // whole-stage codegen, and the very 64 KB overflow the chunking
+        // exists to prevent. (The slice(…,1,size) form double-references
+        // each chunk so CollapseProject keeps the stage.)
         staged.select(col("doc_id"), col("source"),
-          concat(chunks.indices.map(i =>
-            slice(col(s"_h$i"), lit(1), size(col(s"_h$i"))))
-            :+ nondetEmptyTail: _*).as("hits"))
+          graft.operators.TextOps.nonPushableArray(
+            concat(chunks.indices.map(i =>
+              slice(col(s"_h$i"), lit(1), size(col(s"_h$i")))): _*),
+            hitType).as("hits"))
       }
     withHits
       .select(col("doc_id"), explode(col("hits")).as("v"), col("source"))

@@ -21,7 +21,7 @@ object TextOps {
     filter(split(text, " "), w => w =!= "")
 
   /** Value-preserving NON-PUSHABLE array: appends a nondeterministic EMPTY
-    * tail (`slice` start touches `spark_partition_id()`), so a filter
+    * tail (its `slice` start reads the task's partition id), so a filter
     * referencing the alias cannot be substituted below its projection.
     *
     * Why it exists (round 7): `InferFiltersFromGenerate` infers
@@ -29,10 +29,10 @@ object TextOps {
     * `PushDownPredicates` then re-inlines the aliased chain into a
     * scan-stage Filter — evaluating the staged computation TWICE more per
     * row, and (for interpreted-HOF chains like shingling) re-inlining the
-    * very O(n²) form the staging exists to prevent. Same trick as the
-    * chunk-staged rule pass ([[graft.engine.Validator]]); with the tail,
-    * the inferred filter stays above the projection as a cheap attribute
-    * check. The tail is empty, so values are bit-identical.
+    * very O(n²) form the staging exists to prevent. The chunk-staged rule
+    * pass ([[graft.engine.Validator]]) uses it on its hits array; with the
+    * tail, the inferred filter stays above the projection as a cheap
+    * attribute check. The tail is empty, so values are bit-identical.
     */
   def nonPushableArray(c: Column, elemType: String): Column =
     concat(c, slice(array().cast(s"array<$elemType>"),

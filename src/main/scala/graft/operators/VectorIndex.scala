@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Fs
 
 /** Materialized ANN indexes — the scale path for similarity search.
   *
@@ -28,15 +29,13 @@ import org.apache.spark.sql.functions._
   * Both builds are deterministic (hash-derived hyperplanes, lowest-vec_id
   * centroid sample) so rebuilds and the DuckDB oracle reproduce them
   * exactly. Local cache under GRAFT_VEC_INDEX (stand-in for the cluster's
-  * object store).
+  * object store); each build goes through [[Fs.materialize]], keyed on the
+  * `index` directory it writes last.
   */
 object VectorIndex {
 
   private val cacheBase =
     sys.env.getOrElse("GRAFT_VEC_INDEX", "/tmp/graft_vec_index")
-
-  private def ready(spark: SparkSession, dir: String): Boolean =
-    graft.sources.Fs.successExists(spark, dir)
 
   // ---- IVF ------------------------------------------------------------
 
@@ -47,11 +46,11 @@ object VectorIndex {
     * seed the DuckDB oracle replicates.
     */
   def ivf(spark: SparkSession, embeddings: => DataFrame, tag: String,
-      nCentroids: Int, kmeansIters: Int = 0): (String, String) = synchronized {
+      nCentroids: Int, kmeansIters: Int = 0): (String, String) = {
     val base = s"$cacheBase/ivf_${tag}_c${nCentroids}_k$kmeansIters"
     val idx = s"$base/index"
     val cent = s"$base/centroids"
-    if (!ready(spark, idx)) {
+    Fs.materialize(spark, idx) {
       val e = embeddings
       val cents =
         if (kmeansIters > 0)
@@ -126,36 +125,35 @@ object VectorIndex {
     * Returns `(indexDir, centroidsDir, codebookDir)`.
     */
   def ivfQuantized(spark: SparkSession, embeddings: => DataFrame,
-      tag: String, nCentroids: Int): (String, String, String) =
-    synchronized {
-      val base = s"$cacheBase/ivfq_${tag}_c$nCentroids"
-      val idx = s"$base/index"
-      val cent = s"$base/centroids"
-      val cb = s"$base/codebook"
-      if (!ready(spark, idx)) {
-        val e = embeddings
-        SimilarityOps.centroids(e, nCentroids)
-          .coalesce(1).write.mode("overwrite").parquet(cent)
-        val stored = spark.read.parquet(cent)
-        e.select(posexplode(col("embedding").cast("array<double>"))
-            .as(Seq("pos", "v")))
-          .groupBy("pos")
-          .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-          .coalesce(1).write.mode("overwrite").parquet(cb)
-        val codes = SimilarityOps.quantizeInt8(e)
-          .select(col("vec_id"),
-            // tinyint payload: the 4× claim is on-disk, not just logical
-            col("q_embedding").cast("array<tinyint>").as("q_embedding"))
-        SimilarityOps.assignTo(
-            e.select(col("vec_id"),
-              col("embedding").cast("array<double>").as("embedding")),
-            stored)
-          .join(codes, Seq("vec_id"))
-          .repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id").parquet(idx)
-      }
-      (idx, cent, cb)
+      tag: String, nCentroids: Int): (String, String, String) = {
+    val base = s"$cacheBase/ivfq_${tag}_c$nCentroids"
+    val idx = s"$base/index"
+    val cent = s"$base/centroids"
+    val cb = s"$base/codebook"
+    Fs.materialize(spark, idx) {
+      val e = embeddings
+      SimilarityOps.centroids(e, nCentroids)
+        .coalesce(1).write.mode("overwrite").parquet(cent)
+      val stored = spark.read.parquet(cent)
+      e.select(posexplode(col("embedding").cast("array<double>"))
+          .as(Seq("pos", "v")))
+        .groupBy("pos")
+        .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
+        .coalesce(1).write.mode("overwrite").parquet(cb)
+      val codes = SimilarityOps.quantizeInt8(e)
+        .select(col("vec_id"),
+          // tinyint payload: the 4× claim is on-disk, not just logical
+          col("q_embedding").cast("array<tinyint>").as("q_embedding"))
+      SimilarityOps.assignTo(
+          e.select(col("vec_id"),
+            col("embedding").cast("array<double>").as("embedding")),
+          stored)
+        .join(codes, Seq("vec_id"))
+        .repartition(col("centroid_id"))
+        .write.mode("overwrite").partitionBy("centroid_id").parquet(idx)
     }
+    (idx, cent, cb)
+  }
 
   /** Top-k over the quantized index: exact centroid scoring picks the
     * `nProbe` lists (centroids are stored exact — they're tiny), the
@@ -195,9 +193,9 @@ object VectorIndex {
 
   /** Build (first call) and return the banded-LSH index path. */
   def lsh(spark: SparkSession, embeddings: => DataFrame, tag: String,
-      bands: Int, rowsPerBand: Int): String = synchronized {
+      bands: Int, rowsPerBand: Int): String = {
     val idx = s"$cacheBase/lsh_${tag}_b${bands}x$rowsPerBand/index"
-    if (!ready(spark, idx)) {
+    Fs.materialize(spark, idx) {
       val e = embeddings
       DedupOps.embeddingBands(e, bands, rowsPerBand)
         .join(e, Seq("vec_id"))
@@ -205,7 +203,6 @@ object VectorIndex {
         .write.mode("overwrite")
         .partitionBy("band_id", "band_key").parquet(idx)
     }
-    idx
   }
 
   /** Incremental LSH append: band the NEW vectors (signatures are pure

@@ -10,14 +10,12 @@ import org.apache.spark.sql.SparkSession
 object DocSource {
 
   /** Path of the 16-file documents cache (built on first use). */
-  def materializedDocs(spark: SparkSession, sfDir: String): String =
-    synchronized {
-      val dir = Fs.cacheDir(sfDir, "docs")
-      if (!Fs.successExists(spark, dir)) {
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(16)
-          .write.mode("overwrite").parquet(dir)
-      }
-      dir
+  def materializedDocs(spark: SparkSession, sfDir: String): String = {
+    val dir = Fs.cacheDir(sfDir, "docs")
+    Fs.materialize(spark, dir) {
+      spark.read.parquet(s"$sfDir/documents.parquet")
+        .repartition(16)
+        .write.mode("overwrite").parquet(dir)
     }
+  }
 }

@@ -28,12 +28,11 @@ object EventSource {
     spark.read.parquet(s"$sfDir/events.parquet")
 
   /** Path of the 16-file events cache (built on first use). */
-  def materializedPath(spark: SparkSession, sfDir: String): String = synchronized {
+  def materializedPath(spark: SparkSession, sfDir: String): String = {
     val dir = Fs.cacheDir(sfDir, "events")
-    if (!Fs.successExists(spark, dir)) {
+    Fs.materialize(spark, dir) {
       events(spark, sfDir).repartition(16)
         .write.mode("overwrite").parquet(dir)
     }
-    dir
   }
 }

@@ -3,10 +3,12 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem-agnostic existence checks through the Hadoop `FileSystem` API,
-  * so cache/index/manifest gating works unchanged on HDFS/S3/local — the
-  * deployment targets of the engine (a `java.io.File` check silently returns
-  * false on any non-local URI and would rebuild caches forever).
+/** The engine's cache layer on the Hadoop `FileSystem` API: where a cache
+  * lives ([[cacheDir]]) and the one build-once rule every cache follows
+  * ([[materialize]]). Existence checks go through Hadoop, so cache, index
+  * and manifest gating work unchanged on HDFS/S3/local — the deployment
+  * targets of the engine (a `java.io.File` check silently returns false on
+  * any non-local URI and would rebuild caches forever).
   */
 object Fs {
 
@@ -18,6 +20,18 @@ object Fs {
     val p = new Path(dir, "_SUCCESS")
     fs(spark, p).exists(p)
   }
+
+  /** The one build-once routine of the engine's caches: runs `build`
+    * unless `dir` holds a committed write (its `_SUCCESS` marker), and
+    * returns `dir`; `build` writes `dir` last. One JVM-wide, re-entrant
+    * lock serializes the builds (`TokenTable.tokensWide`'s build reads
+    * `tokens`); builders in separate JVMs sharing a root are not.
+    */
+  def materialize(spark: SparkSession, dir: String)(build: => Unit): String =
+    synchronized {
+      if (!successExists(spark, dir)) build
+      dir
+    }
 
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)

@@ -23,13 +23,9 @@ object JsonIngest {
 
   val Corrupt = "_corrupt"
 
-  /** Token-table schema plus the corrupt-record column. */
-  val schema: StructType = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("tokens", ArrayType(IntegerType)),
-    StructField("n_tok", IntegerType),
-    StructField("source", StringType),
-    StructField(Corrupt, StringType)))
+  /** Token-stream schema plus the corrupt-record column. */
+  val schema: StructType = graft.streaming.StreamingValidation.tokenSchema
+    .add(Corrupt, StringType)
 
   /** Read a JSON-lines corpus; corrupt lines land in `_corrupt`.
     *
@@ -83,13 +79,12 @@ object JsonIngest {
         .as("value"))
 
   /** Materialize the JSON corpus for an sf dir once; returns its path. */
-  def materializedJson(spark: SparkSession, sfDir: String): String = synchronized {
+  def materializedJson(spark: SparkSession, sfDir: String): String = {
     val dir = Fs.cacheDir(sfDir, "json")
-    if (!Fs.successExists(spark, dir)) {
+    Fs.materialize(spark, dir) {
       jsonLines(TokenTable.fromLineitemKeyed(TokenTable.lineitem(spark, sfDir)))
         .repartition(16)
         .write.mode("overwrite").text(dir)
     }
-    dir
   }
 }

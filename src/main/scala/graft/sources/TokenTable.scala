@@ -1,11 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Deterministic token-sequence table `(doc_id, tokens, n_tok, source)`
-  * derived from the driver's `lineitem.parquet` by pure arithmetic, so every
-  * scalar fact about it is recomputable by the DuckDB oracle (FIXTURES.md §3).
+/** Deterministic token-sequence table `(doc_id, tokens, n_tok, okey,
+  * source)` derived from the driver's `lineitem.parquet` by pure
+  * arithmetic, so every scalar fact about it is recomputable by the DuckDB
+  * oracle (FIXTURES.md §3).
   *
   * Violations are injected at fixed congruence classes of
   * `key = l_orderkey*7 + l_linenumber` (cf. FIXTURES.md §2):
@@ -19,19 +21,32 @@ import org.apache.spark.sql.functions._
   * generation — so the derivation itself distributes and scales with the
   * input (the 100 TB deployment would read the real pre-tokenized table and
   * skip this derivation entirely).
+  *
+  * Each stored variant (`full`, `even`, `x<k>`, `wide<n>`) is built once by
+  * [[Fs.materialize]] and read with the declared [[Schema]] (no inference
+  * job). `_v2` in its directory is the derivation version: bump it when the
+  * derivation or the schema changes, or the old one is served warm.
   */
 object TokenTable {
 
   val Vocab = 50000
 
-  /** The token table's (column, type) contract — the schema the lifecycle
-    * pre-gate ([[graft.engine.SchemaCheck]]) checks before a rule pass
-    * (the injection key is dropped from the public view by
-    * [[fromLineitem]]).
+  /** The stored token table's schema, in the order a read returns it (the
+    * `source` partition column last). Every read of a token cache uses it
+    * instead of inferring it from the parquet footers.
     */
-  val ExpectedSchema: Seq[(String, String)] = Seq(
-    "doc_id" -> "string", "tokens" -> "array<int>",
-    "n_tok" -> "int", "source" -> "string", "okey" -> "bigint")
+  val Schema: StructType = StructType(Seq(
+    StructField("doc_id", StringType),
+    StructField("tokens", ArrayType(IntegerType)),
+    StructField("n_tok", IntegerType),
+    StructField("okey", LongType),
+    StructField("source", StringType)))
+
+  /** The token table's (column, type) contract — the schema the lifecycle
+    * pre-gate ([[graft.engine.SchemaCheck]]) checks before a rule pass.
+    */
+  val ExpectedSchema: Seq[(String, String)] =
+    Schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
 
   /** Allowed values for `source` — the referential dimension (the analogue of
     * the reference's terminology-server value sets,
@@ -42,9 +57,6 @@ object TokenTable {
   def lineitem(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/lineitem.parquet")
 
-  /** The token view. `snapshotFilter` carves deterministic sub-snapshots out
-    * of the same table (used by the drift rule's baseline).
-    */
   /** The engine's input table. The derivation from lineitem is test
     * scaffolding; the engine proper validates a STORED token table (the
     * north-star input is an Iceberg table of pre-tokenized sequences). So:
@@ -61,34 +73,38 @@ object TokenTable {
     materialized(spark, sfDir, "even")
 
   def materialized(spark: SparkSession, sfDir: String, variant: String): DataFrame =
-    spark.read.parquet(materializedPath(spark, sfDir, variant))
+    read(spark, materializedPath(spark, sfDir, variant))
 
   /** Path of the materialized table (builds it on first use) — handed to the
     * streaming file source, which needs a directory, not a DataFrame.
     */
-  def materializedPath(spark: SparkSession, sfDir: String, variant: String = "full"): String = synchronized {
+  def materializedPath(spark: SparkSession, sfDir: String, variant: String = "full"): String = {
     // _v2: schema gained `okey` (FK to orders for the big-dimension
     // referential check) — the suffix invalidates pre-okey caches
     val dir = Fs.cacheDir(sfDir, s"${variant}_v2")
-    if (!Fs.successExists(spark, dir)) {
+    Fs.materialize(spark, dir) {
       val li0 = lineitem(spark, sfDir)
       val li = if (variant == "even") li0.where(li0("l_orderkey") % 2 === 0)
                else li0
       write(fromLineitem(li), dir)
     }
-    dir
   }
 
-  /** Cache writer: fixed 32-way layout with small parquet row groups.
+  private def read(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(Schema).parquet(dir)
+
+  /** Cache writer: fixed 32-way layout with small parquet row groups,
+    * partitioned by `partitionBy`.
     * Scan parallelism is bounded by ROW GROUPS, not byte-range splits — a
     * cache written by a low-core session as 4 × 1-row-group files capped
     * every later scan at 4 tasks regardless of requested cores.
     */
-  private def write(df: DataFrame, dir: String): Unit =
+  private def write(df: DataFrame, dir: String,
+      partitionBy: Seq[String] = Seq("source")): Unit =
     df.repartition(32)
       .write.mode("overwrite")
       .option("parquet.block.size", (8L * 1024 * 1024).toString)
-      .partitionBy("source")
+      .partitionBy(partitionBy: _*)
       .parquet(dir)
 
   /** K-times scaled token table for scaling-efficiency runs: replica r
@@ -96,18 +112,16 @@ object TokenTable {
     * and every injected-violation congruence class reappears at the same
     * rate — same workload character, K× the volume. Materialized once.
     */
-  def tokensScaled(spark: SparkSession, sfDir: String, k: Int): DataFrame = synchronized {
+  def tokensScaled(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     val dir = Fs.cacheDir(sfDir, s"x${k}_v2")
-    if (!Fs.successExists(spark, dir)) {
+    read(spark, Fs.materialize(spark, dir) {
       val li = lineitem(spark, sfDir)
       val replicas = spark.range(k).toDF("r")
       val scaled = li.crossJoin(replicas)
-        .withColumn("l_orderkey",
-          li("l_orderkey") + org.apache.spark.sql.functions.col("r") * 10000000L)
+        .withColumn("l_orderkey", li("l_orderkey") + col("r") * 10000000L)
         .drop("r")
       write(fromLineitem(scaled), dir)
-    }
-    spark.read.parquet(dir)
+    })
   }
 
   /** WIDENED token table for high-cardinality routing: `source` gains an
@@ -119,20 +133,16 @@ object TokenTable {
     * column is the 100 TB-correct layout, and the wide specs/bench stop
     * re-deriving the concat per scan.
     */
-  def tokensWide(spark: SparkSession, sfDir: String, nSets: Int): DataFrame = synchronized {
+  def tokensWide(spark: SparkSession, sfDir: String, nSets: Int): DataFrame = {
     val dir = Fs.cacheDir(sfDir, s"wide${nSets}_v2")
-    if (!Fs.successExists(spark, dir)) {
+    read(spark, Fs.materialize(spark, dir) {
       val t = tokens(spark, sfDir).withColumn("source",
         concat(col("source"), lit("_"), (col("okey") % nSets).cast("string")))
       // no partitionBy: thousands of wide sources × small fixture would mean
       // thousands of tiny files; row-group stats on the stored column still
       // serve the gates
-      t.repartition(32)
-        .write.mode("overwrite")
-        .option("parquet.block.size", (8L * 1024 * 1024).toString)
-        .parquet(dir)
-    }
-    spark.read.parquet(dir)
+      write(t, dir, partitionBy = Nil)
+    })
   }
 
   /** Token view over an arbitrary lineitem slice (drift baselines carve
@@ -205,18 +215,5 @@ object TokenTable {
   def allowedDim(spark: SparkSession): DataFrame = {
     import spark.implicits._
     AllowedSources.toDF("allowed_source")
-  }
-
-  /** Closed-form replica of the generator for one row — the per-row
-    * token-array-equality ground truth (BASELINE.json input_hint) checked by
-    * the test suite against Spark's read-back of the same row.
-    */
-  def expectedTokens(orderkey: Long, linenumber: Int, quantity: Int): Option[Array[Int]] = {
-    val key = orderkey * 7 + linenumber
-    if (key % 107 == 0) None
-    else Some(Array.tabulate(quantity) { j =>
-      if (j == 0 && key % 109 == 0) (Vocab + key % 7).toInt
-      else ((key * 31 + j * 17) % Vocab).toInt
-    })
   }
 }

@@ -115,15 +115,8 @@ object StreamingDedup {
     // micro-batches instead of four — duplicate pairs still span batches,
     // half the per-batch state-commit overhead (same reasoning as
     // runDedupAvailableNow; survivor set is batching-independent)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
     val stream = spark.readStream
-      .schema(schema)
+      .schema(graft.sources.EventSource.schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
     // key-only projection: the emitted SET is deterministic, the

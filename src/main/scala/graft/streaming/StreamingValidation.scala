@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -38,12 +38,12 @@ import graft.rules.{RuleSet, UniqueRule}
   */
 object StreamingValidation {
 
-  /** Input schema of the token stream (BASELINE.json input_hint). */
-  val tokenSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("tokens", ArrayType(IntegerType)),
-    StructField("n_tok", IntegerType),
-    StructField("source", StringType)))
+  /** Input schema of the token stream (BASELINE.json input_hint): the
+    * stored token table's [[graft.sources.TokenTable.Schema]] without the
+    * `okey` foreign key, which no stream reads.
+    */
+  val tokenSchema: StructType =
+    StructType(graft.sources.TokenTable.Schema.filterNot(_.name == "okey"))
 
   /** Stateless violation stream: the batch compiler over the rule set
     * without its unique rules (uniqueness is the stateful
@@ -174,11 +174,8 @@ object StreamingValidation {
     BoundedStream.await(q)
     // explicit schema: a violation-free first leg commits zero data files
     // and schema inference would fail on the metadata-only directory
-    val emittedSchema = StructType(Seq(
-      StructField("doc_id", StringType), StructField("rule_id", StringType),
-      StructField("detail", StringType), StructField("severity", StringType),
-      StructField("source", StringType)))
-    finalEmissions(spark.read.schema(emittedSchema).parquet(outDir))
+    finalEmissions(spark.read
+      .schema(Encoders.product[DetailedViolation].schema).parquet(outDir))
   }
 
   /** One-shot streaming run over a (partitioned) parquet token table using

@@ -1,9 +1,10 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.engine.{Checkpoint, Validator}
-import graft.model.ManifestEntry
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
+import graft.engine.Validator
 import graft.report.ReportOps
 import graft.rules.RuleSetLoader
 import graft.sources.DimensionLoader
@@ -187,6 +188,40 @@ object Validate {
       bucketedCleanTable = args.bucketed)
   }
 
+  // ---- the printed JSON lines ---------------------------------------------
+
+  /** One JSON object per collected row of `df`, keyed by column name; a
+    * NULL value prints as JSON null.
+    */
+  private def rowsJson(df: DataFrame): JValue = {
+    val names = df.columns.toList
+    JArray(df.collect().toList.map(r => JObject(names.zipWithIndex.map {
+      case (n, i) => n -> Extraction.decompose(r.get(i))(DefaultFormats)
+    })))
+  }
+
+  /** The line `main` prints for a run. */
+  def runLine(out: RunOutcome): String = compact(render(
+    ("validated" -> out.validated.size) ~ ("skipped" -> out.skipped.size) ~
+      ("failed" -> out.failed.size) ~ ("pruned" -> out.pruned) ~
+      ("summary" -> rowsJson(out.summary.orderBy("source"))) ~
+      ("report" -> out.reportPath)))
+
+  /** The line `main` prints for a `--pipeline` run (`sla` with `--sla`). */
+  def pipelineLine(out: graft.engine.Pipeline.Result): String = compact(render(
+    ("validated" -> out.validated.size) ~ ("skipped" -> out.skipped.size) ~
+      ("failed" -> out.failed.size) ~
+      ("summary" -> rowsJson(out.summary.orderBy("source"))) ~
+      ("sla" -> out.suite.map(s => rowsJson(s.orderBy("rule_id").select(
+        "rule_id", "n_violations", "violation_rate", "max_rate",
+        "status")))) ~
+      ("report" -> out.reportPath)))
+
+  /** The line `main` prints for `--trend <metricsDir>`. */
+  def trendLine(spark: SparkSession, metricsDir: String): String =
+    compact(render("trend" -> rowsJson(graft.engine.MetricsStore
+      .trend(spark, metricsDir).orderBy("run_id", "rule_id"))))
+
   def main(argv: Array[String]): Unit = {
     // trend-only verb: `Validate --trend <metricsDir>` reads the metrics
     // table and prints the run-over-run trend — no corpus, no rules
@@ -194,19 +229,8 @@ object Validate {
     if (ti >= 0) {
       val cpusT = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
       val spark = graft.Sessions.local(cpusT, "graft-trend")
-      try {
-        val rows = graft.engine.MetricsStore.trend(spark, argv(ti + 1))
-          .orderBy("run_id", "rule_id").collect().map { r =>
-            s"""{"run_id":${r.getLong(0)},"rule_id":"${r.getString(1)}",""" +
-              s""""n_violations":${r.getLong(2)},""" +
-              s""""prev_violations":${if (r.isNullAt(3)) "null"
-                else r.getLong(3)},""" +
-              s""""delta":${if (r.isNullAt(4)) "null" else r.getLong(4)},""" +
-              s""""regressed":${if (r.isNullAt(5)) "null"
-                else r.getBoolean(5)}}"""
-          }.mkString("[", ",", "]")
-        println(s"""{"trend":$rows}""")
-      } finally spark.stop()
+      try println(trendLine(spark, argv(ti + 1)))
+      finally spark.stop()
       return
     }
     val args = parseArgs(argv)
@@ -221,38 +245,13 @@ object Validate {
         if (args.pipeline.isDefined) {
           val out = runPipeline(spark, spark.read.parquet(args.tokens),
             rulesJson, dimsJson, args)
-          val rows = out.summary.orderBy("source").collect().map { r =>
-            s"""{"source":"${r.getString(0)}","n_rows":${r.getLong(1)},""" +
-              s""""n_violations":${r.getLong(2)},"pass":${r.getBoolean(3)},""" +
-              s""""n_repaired":${r.getLong(4)},""" +
-              s""""n_quarantined":${r.getLong(5)}}"""
-          }.mkString("[", ",", "]")
-          val slaRows = out.suite.map { s =>
-            s.orderBy("rule_id").collect().map { r =>
-              s"""{"rule_id":"${r.getString(0)}",""" +
-                s""""n_violations":${r.getLong(1)},""" +
-                s""""violation_rate":${r.getDouble(3)},""" +
-                s""""max_rate":${r.getDouble(4)},""" +
-                s""""status":"${r.getString(5)}"}"""
-            }.mkString(""","sla":[""", ",", "]")
-          }.getOrElse("")
-          println(s"""{"validated":${out.validated.size},""" +
-            s""""skipped":${out.skipped.size},"failed":${out.failed.size},""" +
-            s""""summary":$rows""" + slaRows +
-            out.reportPath.map(p => s""","report":"$p"""").getOrElse("") + "}")
+          println(pipelineLine(out))
           out.failed.size
         } else {
           val out = run(spark, spark.read.parquet(args.tokens), rulesJson,
             dimsJson, args.manifest, args.snapshot, args.report,
             violationsDir = args.violations, pruneSuperseded = args.prune)
-          val rows = out.summary.orderBy("source").collect().map { r =>
-            s"""{"source":"${r.getString(0)}","n_rows":${r.getLong(1)},""" +
-              s""""n_violations":${r.getLong(2)},"pass":${r.getBoolean(3)}}"""
-          }.mkString("[", ",", "]")
-          println(s"""{"validated":${out.validated.size},""" +
-            s""""skipped":${out.skipped.size},"failed":${out.failed.size},""" +
-            s""""pruned":${out.pruned},"summary":$rows""" +
-            out.reportPath.map(p => s""","report":"$p"""").getOrElse("") + "}")
+          println(runLine(out))
           out.failed.size
         }
       } finally spark.stop()

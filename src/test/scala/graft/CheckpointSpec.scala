@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.{Checkpoint, ValidationRunner}
 import graft.model.TokenRow
@@ -21,186 +20,203 @@ class CheckpointSpec extends SparkSpec {
   ).toDF
 
   test("first run validates all partitions; second run skips them") {
-    val dir = Files.createTempDirectory("graft-manifest").toString + "/manifest"
-    val r1 = ValidationRunner.runResumable(
-      spark, fixture, ruleSet, dims, dir, snapshotId = 1L)
-    assert(r1.validatedPartitions.toSet === Set("A", "N", "R"))
-    assert(r1.skippedPartitions.isEmpty)
+    withTempDir("graft-manifest") { tmp =>
+      val dir = s"$tmp/manifest"
+      val r1 = ValidationRunner.runResumable(
+        spark, fixture, ruleSet, dims, dir, snapshotId = 1L)
+      assert(r1.validatedPartitions.toSet === Set("A", "N", "R"))
+      assert(r1.skippedPartitions.isEmpty)
 
-    val r2 = ValidationRunner.runResumable(
-      spark, fixture, ruleSet, dims, dir, snapshotId = 1L)
-    assert(r2.validatedPartitions.isEmpty)
-    assert(r2.skippedPartitions.toSet === Set("A", "N", "R"))
-    // summary reconstructed from the manifest matches the live run
-    val fromManifest = r2.summary.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      .toSet
-    assert(fromManifest === Set(("A", 2L, 1L, false), ("N", 1L, 0L, true),
-      ("R", 1L, 1L, false)))
+      val r2 = ValidationRunner.runResumable(
+        spark, fixture, ruleSet, dims, dir, snapshotId = 1L)
+      assert(r2.validatedPartitions.isEmpty)
+      assert(r2.skippedPartitions.toSet === Set("A", "N", "R"))
+      // summary reconstructed from the manifest matches the live run
+      val fromManifest = r2.summary.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+        .toSet
+      assert(fromManifest === Set(("A", 2L, 1L, false), ("N", 1L, 0L, true),
+        ("R", 1L, 1L, false)))
+    }
   }
 
   test("a new snapshot re-validates; partial completion resumes the rest") {
-    val dir = Files.createTempDirectory("graft-manifest2").toString + "/manifest"
-    // pre-mark partition A as done at snapshot 7
-    Checkpoint.append(spark, dir, Seq(
-      graft.model.ManifestEntry("A", 7L, "ok", 2L, 1L, 0L)))
-    val r = ValidationRunner.runResumable(
-      spark, fixture, ruleSet, dims, dir, snapshotId = 7L)
-    assert(r.validatedPartitions.toSet === Set("N", "R"))
-    assert(r.skippedPartitions.toSet === Set("A"))
-    // different snapshot → everything pending again
-    val r2 = ValidationRunner.runResumable(
-      spark, fixture, ruleSet, dims, dir, snapshotId = 8L)
-    assert(r2.validatedPartitions.toSet === Set("A", "N", "R"))
+    withTempDir("graft-manifest2") { tmp =>
+      val dir = s"$tmp/manifest"
+      // pre-mark partition A as done at snapshot 7
+      Checkpoint.append(spark, dir, Seq(
+        graft.model.ManifestEntry("A", 7L, "ok", 2L, 1L, 0L)))
+      val r = ValidationRunner.runResumable(
+        spark, fixture, ruleSet, dims, dir, snapshotId = 7L)
+      assert(r.validatedPartitions.toSet === Set("N", "R"))
+      assert(r.skippedPartitions.toSet === Set("A"))
+      // different snapshot → everything pending again
+      val r2 = ValidationRunner.runResumable(
+        spark, fixture, ruleSet, dims, dir, snapshotId = 8L)
+      assert(r2.validatedPartitions.toSet === Set("A", "N", "R"))
+    }
   }
 
   test("stale error rows never pollute the manifest-reconstructed summary") {
-    val dir = Files.createTempDirectory("graft-manifest4").toString + "/manifest"
-    // a failed earlier attempt left error rows with zeroed metrics
-    Checkpoint.append(spark, dir, Seq(
-      graft.model.ManifestEntry("A", 1L, "error:Boom", 0L, 0L, 0L),
-      graft.model.ManifestEntry("N", 1L, "error:Boom", 0L, 0L, 0L)))
-    // successful resume validates everything
-    ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
-    // all-done call reconstructs from the manifest: one ok row per partition
-    val r = ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
-    assert(r.validatedPartitions.isEmpty)
-    val rows = r.summary.collect()
-      .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getBoolean(3)))
-    assert(rows.length === 3)
-    assert(rows.toSet === Set(("A", 2L, 1L, false), ("N", 1L, 0L, true),
-      ("R", 1L, 1L, false)))
+    withTempDir("graft-manifest4") { tmp =>
+      val dir = s"$tmp/manifest"
+      // a failed earlier attempt left error rows with zeroed metrics
+      Checkpoint.append(spark, dir, Seq(
+        graft.model.ManifestEntry("A", 1L, "error:Boom", 0L, 0L, 0L),
+        graft.model.ManifestEntry("N", 1L, "error:Boom", 0L, 0L, 0L)))
+      // successful resume validates everything
+      ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
+      // all-done call reconstructs from the manifest: one ok row per partition
+      val r = ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
+      assert(r.validatedPartitions.isEmpty)
+      val rows = r.summary.collect()
+        .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getBoolean(3)))
+      assert(rows.length === 3)
+      assert(rows.toSet === Set(("A", 2L, 1L, false), ("N", 1L, 0L, true),
+        ("R", 1L, 1L, false)))
+    }
   }
 
   test("a poison partition is contained: error attributed, others complete") {
-    val dir = Files.createTempDirectory("graft-manifest5").toString + "/manifest"
-    // runtime failure confined to partition R: evaluating n_tok throws there
-    // (source listing and the other partitions' scans never touch R rows
-    // once the per-partition filter is pushed below the projection)
-    val boom = udf((s: String, n: Int) =>
-      if (s == "R") throw new RuntimeException("poison") else n)
-    // block ConvertToLocalRelation (which would evaluate the UDF at plan
-    // time on the driver): read the rows back from a real parquet scan
-    val fdir = Files.createTempDirectory("graft-poison").toString + "/tok"
-    fixture.write.parquet(fdir)
-    val poisoned = spark.read.parquet(fdir)
-      .withColumn("n_tok", boom(col("source"), col("n_tok")))
-    val r = ValidationRunner.runResumable(
-      spark, poisoned, ruleSet, dims, dir, snapshotId = 2L)
-    // R failed and is attributed; A and N completed and are checkpointed
-    val m = Checkpoint.read(spark, dir).collect()
-      .map(x => (x.getAs[String]("partition"), x.getAs[String]("status")))
-      .toMap
-    assert(m("A") === "ok")
-    assert(m("N") === "ok")
-    assert(m("R").startsWith("error:"))
-    assert(r.validatedPartitions.toSet === Set("A", "N"))
-    // resume skips the healthy partitions and retries only R
-    val done = Checkpoint.completed(Checkpoint.load(spark, dir), 2L)
-    assert(done.toSet === Set("A", "N"))
+    withTempDir("graft-manifest5") { tmp =>
+      val dir = s"$tmp/manifest"
+      // runtime failure confined to partition R: evaluating n_tok throws there
+      // (source listing and the other partitions' scans never touch R rows
+      // once the per-partition filter is pushed below the projection)
+      val boom = udf((s: String, n: Int) =>
+        if (s == "R") throw new RuntimeException("poison") else n)
+      // block ConvertToLocalRelation (which would evaluate the UDF at plan
+      // time on the driver): read the rows back from a real parquet scan
+      withTempDir("graft-poison") { ftmp =>
+        val fdir = s"$ftmp/tok"
+        fixture.write.parquet(fdir)
+        val poisoned = spark.read.parquet(fdir)
+          .withColumn("n_tok", boom(col("source"), col("n_tok")))
+        val r = ValidationRunner.runResumable(
+          spark, poisoned, ruleSet, dims, dir, snapshotId = 2L)
+        // R failed and is attributed; A and N completed and are checkpointed
+        val m = Checkpoint.read(spark, dir).collect()
+          .map(x => (x.getAs[String]("partition"), x.getAs[String]("status")))
+          .toMap
+        assert(m("A") === "ok")
+        assert(m("N") === "ok")
+        assert(m("R").startsWith("error:"))
+        assert(r.validatedPartitions.toSet === Set("A", "N"))
+        // resume skips the healthy partitions and retries only R
+        val done = Checkpoint.completed(Checkpoint.load(spark, dir), 2L)
+        assert(done.toSet === Set("A", "N"))
+      }
+    }
   }
 
   test("run_ts stamps monotonically above any existing generation") {
-    val dir = Files.createTempDirectory("graft-manifest6").toString + "/manifest"
-    // an earlier appender stamped an absurdly HIGH generation (the
-    // nanoTime-origin failure mode this guards against: a prior process
-    // whose clock origin sorts above ours); the next auto-stamp must still
-    // land ABOVE it so the newest append wins the latest-per-partition pick
-    Checkpoint.append(spark, dir, Seq(
-      graft.model.ManifestEntry("A", 1L, "ok", 5L, 5L, 0L)),
-      runTs = Long.MaxValue / 2)
-    Checkpoint.append(spark, dir, Seq(
-      graft.model.ManifestEntry("A", 1L, "ok", 2L, 1L, 0L))) // auto-stamped
-    val s = Checkpoint.summaryAt(spark, dir, 1L).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(s === Seq(("A", 2L, 1L)))
+    withTempDir("graft-manifest6") { tmp =>
+      val dir = s"$tmp/manifest"
+      // an earlier appender stamped an absurdly HIGH generation (the
+      // nanoTime-origin failure mode this guards against: a prior process
+      // whose clock origin sorts above ours); the next auto-stamp must still
+      // land ABOVE it so the newest append wins the latest-per-partition pick
+      Checkpoint.append(spark, dir, Seq(
+        graft.model.ManifestEntry("A", 1L, "ok", 5L, 5L, 0L)),
+        runTs = Long.MaxValue / 2)
+      Checkpoint.append(spark, dir, Seq(
+        graft.model.ManifestEntry("A", 1L, "ok", 2L, 1L, 0L))) // auto-stamped
+      val s = Checkpoint.summaryAt(spark, dir, 1L).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(s === Seq(("A", 2L, 1L)))
+    }
   }
 
   test("manifests written before run_ts existed stay readable") {
-    val dir = Files.createTempDirectory("graft-manifest7").toString + "/manifest"
-    // a pre-run_ts manifest: same columns minus the generation stamp
-    Seq(("A", 1L, "ok", 2L, 1L, 0L), ("N", 1L, "ok", 1L, 0L, 0L))
-      .toDF("partition", "snapshot_id", "status", "n_rows", "n_violations",
-        "wall_ms")
-      .write.parquet(dir)
-    val r = Checkpoint.read(spark, dir)
-    assert(r.columns.contains("run_ts"))
-    // the latest-generation window must not throw on the defaulted column
-    val s = Checkpoint.summaryAt(spark, dir, 1L).collect()
-      .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
-    assert(s === Set(("A", 2L, 1L), ("N", 1L, 0L)))
-    // and a NEW append (which stamps run_ts) must coexist with the old rows
-    Checkpoint.append(spark, dir, Seq(
-      graft.model.ManifestEntry("A", 1L, "ok", 3L, 0L, 0L)))
-    val s2 = Checkpoint.summaryAt(spark, dir, 1L).collect()
-      .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
-    assert(s2 === Set(("A", 3L, 0L), ("N", 1L, 0L)))
+    withTempDir("graft-manifest7") { tmp =>
+      val dir = s"$tmp/manifest"
+      // a pre-run_ts manifest: same columns minus the generation stamp
+      Seq(("A", 1L, "ok", 2L, 1L, 0L), ("N", 1L, "ok", 1L, 0L, 0L))
+        .toDF("partition", "snapshot_id", "status", "n_rows", "n_violations",
+          "wall_ms")
+        .write.parquet(dir)
+      val r = Checkpoint.read(spark, dir)
+      assert(r.columns.contains("run_ts"))
+      // the latest-generation window must not throw on the defaulted column
+      val s = Checkpoint.summaryAt(spark, dir, 1L).collect()
+        .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
+      assert(s === Set(("A", 2L, 1L), ("N", 1L, 0L)))
+      // and a NEW append (which stamps run_ts) must coexist with the old rows
+      Checkpoint.append(spark, dir, Seq(
+        graft.model.ManifestEntry("A", 1L, "ok", 3L, 0L, 0L)))
+      val s2 = Checkpoint.summaryAt(spark, dir, 1L).collect()
+        .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
+      assert(s2 === Set(("A", 3L, 0L), ("N", 1L, 0L)))
+    }
   }
 
   test("resumed-run report assembles from artifacts with zero input scans") {
-    val tmp = Files.createTempDirectory("graft-vstore").toString
-    val manifest = s"$tmp/manifest"
-    val vstore = s"$tmp/violations"
-    // row-local rules only: under resume, dataset-global uniqueness is
-    // per-validated-slice by definition, so the pinned fresh==resumed
-    // identity holds exactly for the row/referential family
-    val rs = RuleSet("row_ref",
-      ruleSet.rules.filterNot(_.isInstanceOf[graft.rules.UniqueRule]))
-    val violFn =
-      (df: org.apache.spark.sql.DataFrame) =>
-        graft.engine.Validator.violations(df, rs, dims)
-    // leg 1: only partition A visible; leg 2: full table resumes the rest
-    ValidationRunner.runResumableWith(spark,
-      fixture.where(col("source") === "A"), violFn, manifest, 1L, Some(vstore))
-    val leg2 = ValidationRunner.runResumableWith(
-      spark, fixture, violFn, manifest, 1L, Some(vstore))
-    assert(leg2.validatedPartitions.toSet === Set("N", "R"))
-    assert(leg2.skippedPartitions.toSet === Set("A"))
+    withTempDir("graft-vstore") { tmp =>
+      val manifest = s"$tmp/manifest"
+      val vstore = s"$tmp/violations"
+      // row-local rules only: under resume, dataset-global uniqueness is
+      // per-validated-slice by definition, so the pinned fresh==resumed
+      // identity holds exactly for the row/referential family
+      val rs = RuleSet("row_ref",
+        ruleSet.rules.filterNot(_.isInstanceOf[graft.rules.UniqueRule]))
+      val violFn =
+        (df: org.apache.spark.sql.DataFrame) =>
+          graft.engine.Validator.violations(df, rs, dims)
+      // leg 1: only partition A visible; leg 2: full table resumes the rest
+      ValidationRunner.runResumableWith(spark,
+        fixture.where(col("source") === "A"), violFn, manifest, 1L, Some(vstore))
+      val leg2 = ValidationRunner.runResumableWith(
+        spark, fixture, violFn, manifest, 1L, Some(vstore))
+      assert(leg2.validatedPartitions.toSet === Set("N", "R"))
+      assert(leg2.skippedPartitions.toSet === Set("A"))
 
-    val resumed = graft.report.ReportOps.assemble(
-      graft.engine.ViolationStore.latest(spark, vstore, 1L, leg2.manifest),
-      Nil)
-    val fresh = graft.report.ReportOps.assemble(violFn(fixture), Nil)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3),
-        r.getString(4), r.getString(5), r.getLong(6))).toSet
-    assert(rows(resumed) === rows(fresh))
-    assert(rows(resumed).nonEmpty)
+      val resumed = graft.report.ReportOps.assemble(
+        graft.engine.ViolationStore.latest(spark, vstore, 1L, leg2.manifest),
+        Nil)
+      val fresh = graft.report.ReportOps.assemble(violFn(fixture), Nil)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3),
+          r.getString(4), r.getString(5), r.getLong(6))).toSet
+      assert(rows(resumed) === rows(fresh))
+      assert(rows(resumed).nonEmpty)
 
-    // the scan-budget proof: the assembled-from-artifacts plan reads ONLY
-    // the violation store (parquet) — never the token input (which here is
-    // an in-memory LocalTableScan, so its absence is structural)
-    val plan = resumed.queryExecution.executedPlan.toString
-    assert(!plan.contains("LocalTableScan"),
-      "report plan re-reads the token input — it must assemble from artifacts")
-    assert(plan.contains("Scan parquet") || plan.contains("FileScan"),
-      "report plan reads no artifacts at all?")
+      // the scan-budget proof: the assembled-from-artifacts plan reads ONLY
+      // the violation store (parquet) — never the token input (which here is
+      // an in-memory LocalTableScan, so its absence is structural)
+      val plan = resumed.queryExecution.executedPlan.toString
+      assert(!plan.contains("LocalTableScan"),
+        "report plan re-reads the token input — it must assemble from artifacts")
+      assert(plan.contains("Scan parquet") || plan.contains("FileScan"),
+        "report plan reads no artifacts at all?")
+    }
   }
 
   test("violation-store prune removes only fully superseded generations") {
-    val base = Files.createTempDirectory("graft-vprune").toString + "/v"
-    def v(src: String, id: String) =
-      Seq(graft.model.DetailedViolation(id, "r", "d", "error", src)).toDF()
-    // gen1 holds A+N, gen2 re-validates N, gen3 re-validates A+N:
-    // gen1 and gen2 are fully superseded; gen3 must survive
-    graft.engine.ViolationStore.persist(
-      v("A", "x1").unionByName(v("N", "y1")), base, 9L, 1L)
-    graft.engine.ViolationStore.persist(v("N", "y2"), base, 9L, 2L)
-    graft.engine.ViolationStore.persist(
-      v("A", "x3").unionByName(v("N", "y3")), base, 9L, 3L)
-    val manifest = Seq("A" -> 1L, "N" -> 1L, "N" -> 2L, "A" -> 3L, "N" -> 3L)
-      .map { case (p, ts) =>
-        graft.model.ManifestEntry(p, 9L, "ok", 1L, 1L, 0L, ts) }
-    def latestRows() =
-      graft.engine.ViolationStore.latest(spark, base, 9L, manifest)
-        .select("doc_id", "source").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    val before = latestRows()
-    assert(before === Set(("x3", "A"), ("y3", "N")))
-    assert(graft.engine.ViolationStore.prune(spark, base, 9L, manifest) === 2)
-    assert(latestRows() === before) // reconstruction unchanged
-    // idempotent: nothing more to remove
-    assert(graft.engine.ViolationStore.prune(spark, base, 9L, manifest) === 0)
+    withTempDir("graft-vprune") { tmp =>
+      val base = s"$tmp/v"
+      def v(src: String, id: String) =
+        Seq(graft.model.DetailedViolation(id, "r", "d", "error", src)).toDF()
+      // gen1 holds A+N, gen2 re-validates N, gen3 re-validates A+N:
+      // gen1 and gen2 are fully superseded; gen3 must survive
+      graft.engine.ViolationStore.persist(
+        v("A", "x1").unionByName(v("N", "y1")), base, 9L, 1L)
+      graft.engine.ViolationStore.persist(v("N", "y2"), base, 9L, 2L)
+      graft.engine.ViolationStore.persist(
+        v("A", "x3").unionByName(v("N", "y3")), base, 9L, 3L)
+      val manifest = Seq("A" -> 1L, "N" -> 1L, "N" -> 2L, "A" -> 3L, "N" -> 3L)
+        .map { case (p, ts) =>
+          graft.model.ManifestEntry(p, 9L, "ok", 1L, 1L, 0L, ts) }
+      def latestRows() =
+        graft.engine.ViolationStore.latest(spark, base, 9L, manifest)
+          .select("doc_id", "source").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSet
+      val before = latestRows()
+      assert(before === Set(("x3", "A"), ("y3", "N")))
+      assert(graft.engine.ViolationStore.prune(spark, base, 9L, manifest) === 2)
+      assert(latestRows() === before) // reconstruction unchanged
+      // idempotent: nothing more to remove
+      assert(graft.engine.ViolationStore.prune(spark, base, 9L, manifest) === 0)
+    }
   }
 
   test("a poison partition is contained with violation artifacts enabled") {
@@ -209,39 +225,40 @@ class CheckpointSpec extends SparkSpec {
     // there must still fall through to the per-partition containment loop
     // (error attributed, healthy partitions checkpointed AND their
     // violations persisted), not abort the run uncaught
-    val tmp = Files.createTempDirectory("graft-vpoison").toString
-    val manifest = s"$tmp/manifest"
-    val vstore = s"$tmp/violations"
-    val boom = udf((s: String, n: Int) =>
-      if (s == "R") throw new RuntimeException("poison") else n)
-    val fdir = s"$tmp/tok"
-    fixture.write.parquet(fdir)
-    val poisoned = spark.read.parquet(fdir)
-      .withColumn("n_tok", boom(col("source"), col("n_tok")))
-    val violFn = (df: org.apache.spark.sql.DataFrame) =>
-      graft.engine.Validator.violations(df, ruleSet, dims)
-    val r = ValidationRunner.runResumableWith(
-      spark, poisoned, violFn, manifest, 3L, Some(vstore))
-    assert(r.validatedPartitions.toSet === Set("A", "N"))
-    assert(r.failedPartitions === Seq("R"))
-    val m = Checkpoint.read(spark, manifest).collect()
-      .map(x => (x.getAs[String]("partition"), x.getAs[String]("status")))
-      .toMap
-    assert(m("A") === "ok" && m("N") === "ok")
-    assert(m("R").startsWith("error:"))
-    // the healthy partitions' violations are persisted exactly ONCE — the
-    // fallback writes a FRESH generation, never appending into whatever the
-    // aborted fast path left behind (ADVICE r4: duplicate-append hazard)
-    val stored = graft.engine.ViolationStore.latest(spark, vstore, 3L,
-        r.manifest)
-      .select("doc_id", "rule_id").collect()
-      .map(x => (x.getString(0), x.getString(1)))
-    assert(stored.groupBy(identity).forall(_._2.length == 1),
-      s"duplicated violation rows: ${stored.mkString(", ")}")
-    assert(stored.map(_._1).toSet === Set("a2")) // A's length violation
-    // resume retries only the poison partition
-    assert(Checkpoint.completed(Checkpoint.load(spark, manifest), 3L).toSet
-      === Set("A", "N"))
+    withTempDir("graft-vpoison") { tmp =>
+      val manifest = s"$tmp/manifest"
+      val vstore = s"$tmp/violations"
+      val boom = udf((s: String, n: Int) =>
+        if (s == "R") throw new RuntimeException("poison") else n)
+      val fdir = s"$tmp/tok"
+      fixture.write.parquet(fdir)
+      val poisoned = spark.read.parquet(fdir)
+        .withColumn("n_tok", boom(col("source"), col("n_tok")))
+      val violFn = (df: org.apache.spark.sql.DataFrame) =>
+        graft.engine.Validator.violations(df, ruleSet, dims)
+      val r = ValidationRunner.runResumableWith(
+        spark, poisoned, violFn, manifest, 3L, Some(vstore))
+      assert(r.validatedPartitions.toSet === Set("A", "N"))
+      assert(r.failedPartitions === Seq("R"))
+      val m = Checkpoint.read(spark, manifest).collect()
+        .map(x => (x.getAs[String]("partition"), x.getAs[String]("status")))
+        .toMap
+      assert(m("A") === "ok" && m("N") === "ok")
+      assert(m("R").startsWith("error:"))
+      // the healthy partitions' violations are persisted exactly ONCE — the
+      // fallback writes a FRESH generation, never appending into whatever the
+      // aborted fast path left behind (ADVICE r4: duplicate-append hazard)
+      val stored = graft.engine.ViolationStore.latest(spark, vstore, 3L,
+          r.manifest)
+        .select("doc_id", "rule_id").collect()
+        .map(x => (x.getString(0), x.getString(1)))
+      assert(stored.groupBy(identity).forall(_._2.length == 1),
+        s"duplicated violation rows: ${stored.mkString(", ")}")
+      assert(stored.map(_._1).toSet === Set("a2")) // A's length violation
+      // resume retries only the poison partition
+      assert(Checkpoint.completed(Checkpoint.load(spark, manifest), 3L).toSet
+        === Set("A", "N"))
+    }
   }
 
   test("uncommitted generations can neither win nor trigger pruning") {
@@ -249,34 +266,36 @@ class CheckpointSpec extends SparkSpec {
     // _SUCCESS, no manifest entry) planted ABOVE a committed generation
     // must be invisible to latest() and must not cause prune() to delete
     // the committed rows
-    val base = Files.createTempDirectory("graft-vuncommitted").toString + "/v"
-    def v(src: String, id: String) =
-      Seq(graft.model.DetailedViolation(id, "r", "d", "error", src)).toDF()
-    graft.engine.ViolationStore.persist(v("A", "committed1"), base, 9L, 1L)
-    val manifest = Seq(graft.model.ManifestEntry("A", 9L, "ok", 1L, 1L, 0L, 1L))
-    // plant gen=5: real parquet files for source=A but NO _SUCCESS
-    val conf = spark.sessionState.newHadoopConf()
-    val staging = new org.apache.hadoop.fs.Path(s"$base/_staging")
-    v("A", "partial5").write.partitionBy("source").parquet(staging.toString)
-    val fs = staging.getFileSystem(conf)
-    val gen5 = new org.apache.hadoop.fs.Path(s"$base/snap=9/gen=5")
-    fs.mkdirs(gen5)
-    fs.rename(new org.apache.hadoop.fs.Path(staging, "source=A"),
-      new org.apache.hadoop.fs.Path(gen5, "source=A"))
-    fs.delete(staging, true)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(gen5, "source=A")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(gen5, "_SUCCESS")))
+    withTempDir("graft-vuncommitted") { tmp =>
+      val base = s"$tmp/v"
+      def v(src: String, id: String) =
+        Seq(graft.model.DetailedViolation(id, "r", "d", "error", src)).toDF()
+      graft.engine.ViolationStore.persist(v("A", "committed1"), base, 9L, 1L)
+      val manifest = Seq(graft.model.ManifestEntry("A", 9L, "ok", 1L, 1L, 0L, 1L))
+      // plant gen=5: real parquet files for source=A but NO _SUCCESS
+      val conf = spark.sessionState.newHadoopConf()
+      val staging = new org.apache.hadoop.fs.Path(s"$base/_staging")
+      v("A", "partial5").write.partitionBy("source").parquet(staging.toString)
+      val fs = staging.getFileSystem(conf)
+      val gen5 = new org.apache.hadoop.fs.Path(s"$base/snap=9/gen=5")
+      fs.mkdirs(gen5)
+      fs.rename(new org.apache.hadoop.fs.Path(staging, "source=A"),
+        new org.apache.hadoop.fs.Path(gen5, "source=A"))
+      fs.delete(staging, true)
+      assert(fs.exists(new org.apache.hadoop.fs.Path(gen5, "source=A")))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(gen5, "_SUCCESS")))
 
-    val got = graft.engine.ViolationStore.latest(spark, base, 9L, manifest)
-      .select("doc_id").collect().map(_.getString(0)).toSet
-    assert(got === Set("committed1"),
-      "uncommitted generation won the per-source max")
-    // prune must not delete the committed gen=1 on the strength of gen=5
-    assert(graft.engine.ViolationStore.prune(spark, base, 9L, manifest) === 0)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$base/snap=9/gen=1")))
-    assert(graft.engine.ViolationStore.latest(spark, base, 9L, manifest)
-      .select("doc_id").collect().map(_.getString(0)).toSet
-      === Set("committed1"))
+      val got = graft.engine.ViolationStore.latest(spark, base, 9L, manifest)
+        .select("doc_id").collect().map(_.getString(0)).toSet
+      assert(got === Set("committed1"),
+        "uncommitted generation won the per-source max")
+      // prune must not delete the committed gen=1 on the strength of gen=5
+      assert(graft.engine.ViolationStore.prune(spark, base, 9L, manifest) === 0)
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$base/snap=9/gen=1")))
+      assert(graft.engine.ViolationStore.latest(spark, base, 9L, manifest)
+        .select("doc_id").collect().map(_.getString(0)).toSet
+        === Set("committed1"))
+    }
   }
 
   test("clean re-validation supersedes stale committed violations") {
@@ -284,26 +303,27 @@ class CheckpointSpec extends SparkSpec {
     // manifest append crashed; the re-run validates the (now fixed)
     // partition CLEAN — zero violation rows, so only its manifest entry
     // records it. The stale generation must not win.
-    val tmp = Files.createTempDirectory("graft-vclean").toString
-    val manifest = s"$tmp/manifest"
-    val vstore = s"$tmp/violations"
-    graft.engine.ViolationStore.persist(
-      Seq(graft.model.DetailedViolation("stale", "r", "d", "error", "A"))
-        .toDF(), vstore, 1L, 1L)
-    val clean = Seq(TokenRow("a1", Array(1, 2), 2, "A")).toDF
-    val violFn = (df: org.apache.spark.sql.DataFrame) =>
-      graft.engine.Validator.violations(df, ruleSet, dims)
-    val r = ValidationRunner.runResumableWith(
-      spark, clean, violFn, manifest, 1L, Some(vstore))
-    assert(r.validatedPartitions === Seq("A"))
-    assert(graft.engine.ViolationStore.latest(spark, vstore, 1L, r.manifest)
-      .count() === 0L,
-      "stale violations of a clean-re-validated partition resurfaced")
-    // and the stale generation is now fully superseded → reclaimable
-    assert(graft.engine.ViolationStore.prune(spark, vstore, 1L, r.manifest)
-      === 1)
-    assert(graft.engine.ViolationStore.latest(spark, vstore, 1L, r.manifest)
-      .count() === 0L)
+    withTempDir("graft-vclean") { tmp =>
+      val manifest = s"$tmp/manifest"
+      val vstore = s"$tmp/violations"
+      graft.engine.ViolationStore.persist(
+        Seq(graft.model.DetailedViolation("stale", "r", "d", "error", "A"))
+          .toDF(), vstore, 1L, 1L)
+      val clean = Seq(TokenRow("a1", Array(1, 2), 2, "A")).toDF
+      val violFn = (df: org.apache.spark.sql.DataFrame) =>
+        graft.engine.Validator.violations(df, ruleSet, dims)
+      val r = ValidationRunner.runResumableWith(
+        spark, clean, violFn, manifest, 1L, Some(vstore))
+      assert(r.validatedPartitions === Seq("A"))
+      assert(graft.engine.ViolationStore.latest(spark, vstore, 1L, r.manifest)
+        .count() === 0L,
+        "stale violations of a clean-re-validated partition resurfaced")
+      // and the stale generation is now fully superseded → reclaimable
+      assert(graft.engine.ViolationStore.prune(spark, vstore, 1L, r.manifest)
+        === 1)
+      assert(graft.engine.ViolationStore.latest(spark, vstore, 1L, r.manifest)
+        .count() === 0L)
+    }
   }
 
   test("a generation without manifest entries never wins, and is pruned " +
@@ -311,133 +331,120 @@ class CheckpointSpec extends SparkSpec {
     // the violation write committed but the manifest append never happened
     // (a crash between the two): the manifest, not the store listing,
     // decides which generation holds a partition's current violations
-    val tmp = Files.createTempDirectory("graft-vorphan").toString
-    val manifest = s"$tmp/manifest"
-    val vstore = s"$tmp/v"
-    val violFn = (df: org.apache.spark.sql.DataFrame) =>
-      graft.engine.Validator.violations(df, ruleSet, dims)
-    val leg1 = ValidationRunner.runResumableWith(spark,
-      fixture.where(col("source") === "A"), violFn, manifest, 1L,
-      Some(vstore))
-    assert(leg1.validatedPartitions === Seq("A"))
-    val orphanTs = leg1.manifest.map(_.run_ts).max + 1
-    graft.engine.ViolationStore.persist(Seq(
-        graft.model.DetailedViolation("o1", "r", "d", "error", "A"),
-        graft.model.DetailedViolation("o2", "r", "d", "error", "A")).toDF(),
-      vstore, 1L, orphanTs)
-    val orphan = new java.io.File(s"$vstore/snap=1/gen=$orphanTs")
-    assert(new java.io.File(orphan, "_SUCCESS").exists)
+    withTempDir("graft-vorphan") { tmp =>
+      val manifest = s"$tmp/manifest"
+      val vstore = s"$tmp/v"
+      val violFn = (df: org.apache.spark.sql.DataFrame) =>
+        graft.engine.Validator.violations(df, ruleSet, dims)
+      val leg1 = ValidationRunner.runResumableWith(spark,
+        fixture.where(col("source") === "A"), violFn, manifest, 1L,
+        Some(vstore))
+      assert(leg1.validatedPartitions === Seq("A"))
+      val orphanTs = leg1.manifest.map(_.run_ts).max + 1
+      graft.engine.ViolationStore.persist(Seq(
+          graft.model.DetailedViolation("o1", "r", "d", "error", "A"),
+          graft.model.DetailedViolation("o2", "r", "d", "error", "A")).toDF(),
+        vstore, 1L, orphanTs)
+      val orphan = new java.io.File(s"$vstore/snap=1/gen=$orphanTs")
+      assert(new java.io.File(orphan, "_SUCCESS").exists)
 
-    val stored =
-      graft.engine.ViolationStore.latest(spark, vstore, 1L, leg1.manifest)
-    assert(stored.select("doc_id").as[String].collect().toSet === Set("a2"))
-    // the report assembles from exactly what the summary counts
-    val perSource = stored.groupBy("source").count().as[(String, Long)]
-      .collect().toMap
-    val summary = leg1.summary.select("source", "n_violations")
-      .as[(String, Long)].collect().toMap
-    assert(perSource === summary.filter(_._2 > 0))
-    val report = graft.report.ReportOps.assemble(stored, Nil)
-    assert(report.agg(sum("cnt")).as[Long].head() === summary.values.sum)
+      val stored =
+        graft.engine.ViolationStore.latest(spark, vstore, 1L, leg1.manifest)
+      assert(stored.select("doc_id").as[String].collect().toSet === Set("a2"))
+      // the report assembles from exactly what the summary counts
+      val perSource = stored.groupBy("source").count().as[(String, Long)]
+        .collect().toMap
+      val summary = leg1.summary.select("source", "n_violations")
+        .as[(String, Long)].collect().toMap
+      assert(perSource === summary.filter(_._2 > 0))
+      val report = graft.report.ReportOps.assemble(stored, Nil)
+      assert(report.agg(sum("cnt")).as[Long].head() === summary.values.sum)
 
-    // above the manifest's highest stamp it may be a writer in flight
-    assert(graft.engine.ViolationStore.prune(spark, vstore, 1L,
-      leg1.manifest) === 0)
-    assert(orphan.exists)
-    // a later leg stamps above it: unreferenced and below the highest
-    // stamp, the orphan goes; leg 1's generation still holds A
-    val leg2 = ValidationRunner.runResumableWith(
-      spark, fixture, violFn, manifest, 1L, Some(vstore))
-    assert(leg2.validatedPartitions.toSet === Set("N", "R"))
-    assert(leg2.manifest.map(_.run_ts).max > orphanTs)
-    assert(graft.engine.ViolationStore.prune(spark, vstore, 1L,
-      leg2.manifest) === 1)
-    assert(!orphan.exists)
-    assert(graft.engine.ViolationStore.latest(spark, vstore, 1L,
-        leg2.manifest).select("doc_id").as[String].collect().toSet
-      === Set("a2", "r1"))
-  }
-
-  /** Jobs started while `body` runs, counted by a listener. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.graft.ListenerBus.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+      // above the manifest's highest stamp it may be a writer in flight
+      assert(graft.engine.ViolationStore.prune(spark, vstore, 1L,
+        leg1.manifest) === 0)
+      assert(orphan.exists)
+      // a later leg stamps above it: unreferenced and below the highest
+      // stamp, the orphan goes; leg 1's generation still holds A
+      val leg2 = ValidationRunner.runResumableWith(
+        spark, fixture, violFn, manifest, 1L, Some(vstore))
+      assert(leg2.validatedPartitions.toSet === Set("N", "R"))
+      assert(leg2.manifest.map(_.run_ts).max > orphanTs)
+      assert(graft.engine.ViolationStore.prune(spark, vstore, 1L,
+        leg2.manifest) === 1)
+      assert(!orphan.exists)
+      assert(graft.engine.ViolationStore.latest(spark, vstore, 1L,
+          leg2.manifest).select("doc_id").as[String].collect().toSet
+        === Set("a2", "r1"))
     }
-    sc.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.graft.ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(l)
-    n.get
   }
 
   test("the runner caches nothing: no summary outlives its leg") {
-    val tmp = Files.createTempDirectory("graft-nocache").toString
-    val violFn = (df: org.apache.spark.sql.DataFrame) =>
-      graft.engine.Validator.violations(df, ruleSet, dims)
-    spark.catalog.clearCache()
-    val leg1 = ValidationRunner.runResumableWith(
-      spark, fixture, violFn, s"$tmp/manifest", 1L, Some(s"$tmp/v"))
-    val leg2 = ValidationRunner.runResumableWith(
-      spark, fixture, violFn, s"$tmp/manifest", 1L, Some(s"$tmp/v"))
-    assert(leg1.validatedPartitions.toSet === Set("A", "N", "R"))
-    assert(leg2.skippedPartitions.toSet === Set("A", "N", "R"))
-    assert(leg1.summary.count() === 3L && leg2.summary.count() === 3L)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "a validating or skipped leg left a cached frame behind")
+    withTempDir("graft-nocache") { tmp =>
+      val violFn = (df: org.apache.spark.sql.DataFrame) =>
+        graft.engine.Validator.violations(df, ruleSet, dims)
+      spark.catalog.clearCache()
+      val leg1 = ValidationRunner.runResumableWith(
+        spark, fixture, violFn, s"$tmp/manifest", 1L, Some(s"$tmp/v"))
+      val leg2 = ValidationRunner.runResumableWith(
+        spark, fixture, violFn, s"$tmp/manifest", 1L, Some(s"$tmp/v"))
+      assert(leg1.validatedPartitions.toSet === Set("A", "N", "R"))
+      assert(leg2.skippedPartitions.toSet === Set("A", "N", "R"))
+      assert(leg1.summary.count() === 3L && leg2.summary.count() === 3L)
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "a validating or skipped leg left a cached frame behind")
+    }
   }
 
   test("store frames build job-free; a skipped leg runs at most 3 jobs") {
-    val tmp = Files.createTempDirectory("graft-jobs").toString
-    val manifest = s"$tmp/manifest"
-    val vstore = s"$tmp/v"
-    // a parquet token table partitioned by source, like the engine's caches
-    fixture.write.partitionBy("source").parquet(s"$tmp/tok")
-    val tok = spark.read.parquet(s"$tmp/tok")
-    val violFn = (df: org.apache.spark.sql.DataFrame) =>
-      graft.engine.Validator.violations(df, ruleSet, dims)
-    // two generations: leg 1 validates A, leg 2 the rest
-    ValidationRunner.runResumableWith(spark, tok.where(col("source") === "A"),
-      violFn, manifest, 1L, Some(vstore))
-    ValidationRunner.runResumableWith(spark, tok, violFn, manifest, 1L,
-      Some(vstore))
-    val gens = new java.io.File(s"$vstore/snap=1").list()
-      .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong).sorted
-    assert(gens.length === 2)
+    withTempDir("graft-jobs") { tmp =>
+      val manifest = s"$tmp/manifest"
+      val vstore = s"$tmp/v"
+      // a parquet token table partitioned by source, like the engine's caches
+      fixture.write.partitionBy("source").parquet(s"$tmp/tok")
+      val tok = spark.read.parquet(s"$tmp/tok")
+      val violFn = (df: org.apache.spark.sql.DataFrame) =>
+        graft.engine.Validator.violations(df, ruleSet, dims)
+      // two generations: leg 1 validates A, leg 2 the rest
+      ValidationRunner.runResumableWith(spark, tok.where(col("source") === "A"),
+        violFn, manifest, 1L, Some(vstore))
+      ValidationRunner.runResumableWith(spark, tok, violFn, manifest, 1L,
+        Some(vstore))
+      val gens = new java.io.File(s"$vstore/snap=1").list()
+        .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong).sorted
+      assert(gens.length === 2)
 
-    val entries = Checkpoint.load(spark, manifest)
-    val built = jobsIn {
-      Checkpoint.read(spark, manifest)
-      gens.foreach(g =>
-        graft.engine.ViolationStore.generation(spark, vstore, 1L, g))
-      graft.engine.ViolationStore.latest(spark, vstore, 1L, entries)
-    }
-    assert(built === 0, s"building the frames started $built jobs")
+      val entries = Checkpoint.load(spark, manifest)
+      val built = jobsIn {
+        Checkpoint.read(spark, manifest)
+        gens.foreach(g =>
+          graft.engine.ViolationStore.generation(spark, vstore, 1L, g))
+        graft.engine.ViolationStore.latest(spark, vstore, 1L, entries)
+      }
+      assert(built === 0, s"building the frames started $built jobs")
 
-    var skipped: ValidationRunner.RunResult = null
-    val legJobs = jobsIn {
-      skipped = ValidationRunner.runResumableWith(spark, tok, violFn,
-        manifest, 1L, Some(vstore))
+      var skipped: ValidationRunner.RunResult = null
+      val legJobs = jobsIn {
+        skipped = ValidationRunner.runResumableWith(spark, tok, violFn,
+          manifest, 1L, Some(vstore))
+      }
+      assert(skipped.skippedPartitions.toSet === Set("A", "N", "R"))
+      // the census aggregate (two stages under AQE) + one manifest collect
+      assert(legJobs <= 3, s"a skipped leg ran $legJobs jobs")
     }
-    assert(skipped.skippedPartitions.toSet === Set("A", "N", "R"))
-    // the census aggregate (two stages under AQE) + one manifest collect
-    assert(legJobs <= 3, s"a skipped leg ran $legJobs jobs")
   }
 
   test("manifest records per-partition lineage + metrics") {
-    val dir = Files.createTempDirectory("graft-manifest3").toString + "/manifest"
-    ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
-    val m = Checkpoint.read(spark, dir).collect()
-    assert(m.length === 3)
-    assert(m.forall(_.getAs[String]("status") == "ok"))
-    val a = m.find(_.getAs[String]("partition") == "A").get
-    assert(a.getAs[Long]("n_rows") === 2L)
-    assert(a.getAs[Long]("n_violations") === 1L)
-    assert(a.getAs[Long]("snapshot_id") === 1L)
+    withTempDir("graft-manifest3") { tmp =>
+      val dir = s"$tmp/manifest"
+      ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
+      val m = Checkpoint.read(spark, dir).collect()
+      assert(m.length === 3)
+      assert(m.forall(_.getAs[String]("status") == "ok"))
+      val a = m.find(_.getAs[String]("partition") == "A").get
+      assert(a.getAs[Long]("n_rows") === 2L)
+      assert(a.getAs[Long]("n_violations") === 1L)
+      assert(a.getAs[Long]("snapshot_id") === 1L)
+    }
   }
 }

@@ -16,25 +16,26 @@ class LifecycleSpec extends SparkSpec {
   test("JSON ingest: corrupt lines become parse violations, rest parse clean") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
-    Seq(
-      """{"doc_id":"d1","tokens":[1,2],"n_tok":2,"source":"A"}""",
-      """{"doc_id":"d2","tokens":[""",                      // corrupt, id salvageable
-      """not even json""",                                  // corrupt, no id
-      """{"doc_id":"d3","n_tok":1,"source":"N"}"""          // valid, tokens absent
-    ).toDF("value").coalesce(1).write.mode("overwrite").text(dir)
+    withTempDir("graft_json") { dir =>
+      Seq(
+        """{"doc_id":"d1","tokens":[1,2],"n_tok":2,"source":"A"}""",
+        """{"doc_id":"d2","tokens":[""",                      // corrupt, id salvageable
+        """not even json""",                                  // corrupt, no id
+        """{"doc_id":"d3","n_tok":1,"source":"N"}"""          // valid, tokens absent
+      ).toDF("value").coalesce(1).write.mode("overwrite").text(dir)
 
-    val df = JsonIngest.read(spark, dir)
-    val valid = JsonIngest.validRows(df)
-    assert(valid.count() === 2)
-    assert(valid.where(col("doc_id") === "d3").select("tokens")
-      .first().isNullAt(0))
+      val df = JsonIngest.read(spark, dir)
+      val valid = JsonIngest.validRows(df)
+      assert(valid.count() === 2)
+      assert(valid.where(col("doc_id") === "d3").select("tokens")
+        .first().isNullAt(0))
 
-    val pv = JsonIngest.parseViolations(df)
-      .select("doc_id", "rule_id", "severity")
-      .as[(String, String, String)].collect().toSet
-    assert(pv === Set(
-      ("d2", "parse", "fatal"), ("<unparseable>", "parse", "fatal")))
+      val pv = JsonIngest.parseViolations(df)
+        .select("doc_id", "rule_id", "severity")
+        .as[(String, String, String)].collect().toSet
+      assert(pv === Set(
+        ("d2", "parse", "fatal"), ("<unparseable>", "parse", "fatal")))
+    }
   }
 
   test("JSON fixture corpus: parse violations at exactly key % 113 == 0") {
@@ -146,75 +147,109 @@ class LifecycleSpec extends SparkSpec {
 
   test("Validate entry point: routed run, resume skip, persisted report") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_validate").toString
-    val rulesJson =
-      """{ "ruleSets": {
-        |    "default": [
-        |      {"type":"notNull","id":"nn","column":"tokens","severity":"fatal"},
-        |      {"type":"lengthConsistency","id":"lc","arrayColumn":"tokens","lengthColumn":"n_tok"},
-        |      {"type":"referential","id":"rf","column":"source","dimension":"allowed"}
-        |    ]},
-        |  "routing": {}, "defaultRuleSet": "default" }""".stripMargin
-    val dimsJson = """{"valueSets": {"allowed": ["A", "N", "R"]}}"""
-    val tok = TokenTable.tokens(spark, sf0001)
+    withTempDir("graft_validate") { tmp =>
+      val rulesJson =
+        """{ "ruleSets": {
+          |    "default": [
+          |      {"type":"notNull","id":"nn","column":"tokens","severity":"fatal"},
+          |      {"type":"lengthConsistency","id":"lc","arrayColumn":"tokens","lengthColumn":"n_tok"},
+          |      {"type":"referential","id":"rf","column":"source","dimension":"allowed"}
+          |    ]},
+          |  "routing": {}, "defaultRuleSet": "default" }""".stripMargin
+      val dimsJson = """{"valueSets": {"allowed": ["A", "N", "R"]}}"""
+      val tok = TokenTable.tokens(spark, sf0001)
 
-    val first = graft.tools.Validate.run(spark, tok, rulesJson,
-      Some(dimsJson), s"$tmp/manifest", snapshotId = 7L,
-      reportDir = Some(s"$tmp/reports"))
-    assert(first.validated.nonEmpty && first.skipped.isEmpty)
-    assert(first.reportPath.exists(_.contains("report_snap=7")))
-    val firstRows = first.summary.orderBy("source")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      val first = graft.tools.Validate.run(spark, tok, rulesJson,
+        Some(dimsJson), s"$tmp/manifest", snapshotId = 7L,
+        reportDir = Some(s"$tmp/reports"))
+      assert(first.validated.nonEmpty && first.skipped.isEmpty)
+      assert(first.reportPath.exists(_.contains("report_snap=7")))
+      val firstRows = first.summary.orderBy("source")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
-    // re-submission at the same snapshot: everything skips, summary
-    // reconstructs from the manifest identically
-    val second = graft.tools.Validate.run(spark, tok, rulesJson,
-      Some(dimsJson), s"$tmp/manifest", snapshotId = 7L, reportDir = None)
-    assert(second.validated.isEmpty)
-    assert(second.skipped.toSet === first.validated.toSet)
-    val secondRows = second.summary.orderBy("source")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(secondRows === firstRows)
+      // re-submission at the same snapshot: everything skips, summary
+      // reconstructs from the manifest identically
+      val second = graft.tools.Validate.run(spark, tok, rulesJson,
+        Some(dimsJson), s"$tmp/manifest", snapshotId = 7L, reportDir = None)
+      assert(second.validated.isEmpty)
+      assert(second.skipped.toSet === first.validated.toSet)
+      val secondRows = second.summary.orderBy("source")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(secondRows === firstRows)
 
-    // the persisted artifact reloads as the latest report
-    val rep = graft.report.ReportOps.latestReport(spark, s"$tmp/reports")
-    assert(rep.count() > 0)
-    assert(rep.columns.toSeq === Seq("category", "severity_rank", "color",
-      "severity", "rule_id", "detail_generic", "cnt"))
+      // the persisted artifact reloads as the latest report
+      val rep = graft.report.ReportOps.latestReport(spark, s"$tmp/reports")
+      assert(rep.count() > 0)
+      assert(rep.columns.toSeq === Seq("category", "severity_rank", "color",
+        "severity", "rule_id", "detail_generic", "cnt"))
+    }
+  }
+
+  test("Validate's JSON line keeps a NULL source null and escapes quotes") {
+    import spark.implicits._
+    import org.json4s._
+    withTempDir("graft_validate_json") { tmp =>
+      val tok = Seq[(String, Seq[Int], Int, String)](
+          ("d1", Seq(1), 1, null), ("d2", Seq(1), 2, "A"),
+          ("d3", Seq(1), 1, "q\"x"))
+        .toDF("doc_id", "tokens", "n_tok", "source")
+      val rulesJson =
+        """{ "ruleSets": {
+          |    "default": [
+          |      {"type":"lengthConsistency","id":"lc","arrayColumn":"tokens","lengthColumn":"n_tok"}
+          |    ]},
+          |  "routing": {}, "defaultRuleSet": "default" }""".stripMargin
+      val out = graft.tools.Validate.run(spark, tok, rulesJson, None,
+        s"$tmp/manifest", 1L, None)
+      val line = org.json4s.jackson.JsonMethods.parse(
+        graft.tools.Validate.runLine(out))
+      assert((line \ "validated") === JInt(3))
+      assert((line \ "report") === JNothing)
+      val summary = (line \ "summary").children
+      assert(summary.map(_.asInstanceOf[JObject].obj.map(_._1)).distinct ===
+        List(List("source", "n_rows", "n_violations", "pass")))
+      val rows = summary.map(r =>
+        (r \ "source", r \ "n_rows", r \ "n_violations", r \ "pass"))
+      assert(rows === List(
+        (JNull, JInt(1), JInt(0), JBool(true)),
+        (JString("A"), JInt(1), JInt(1), JBool(false)),
+        (JString("q\"x"), JInt(1), JInt(0), JBool(true))))
+    }
   }
 
   test("Validate --prune reclaims superseded violation generations") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vprune").toString
-    val manifest = s"$tmp/manifest"
-    val rulesJson =
-      """{ "ruleSets": {
-        |    "default": [
-        |      {"type":"notNull","id":"nn","column":"tokens","severity":"fatal"},
-        |      {"type":"lengthConsistency","id":"lc","arrayColumn":"tokens","lengthColumn":"n_tok"}
-        |    ]},
-        |  "routing": {}, "defaultRuleSet": "default" }""".stripMargin
-    val tok = TokenTable.tokens(spark, sf0001)
-    // leg 1 validates only A → generation 1 covers {A}; the manifest is
-    // then lost (simulated coordinator reset) so the re-run re-validates
-    // EVERYTHING → generation 2 covers {A, N, R, …} and generation 1 is
-    // fully superseded
-    val out1 = graft.tools.Validate.run(spark,
-      tok.where(col("source") === "A"), rulesJson, None, manifest, 7L, None)
-    assert(out1.validated === Seq("A") && out1.pruned === 0)
-    graft.sources.Fs.delete(spark, manifest)
-    val out2 = graft.tools.Validate.run(spark, tok, rulesJson, None,
-      manifest, 7L, None, pruneSuperseded = true)
-    assert(out2.validated.contains("A"))
-    assert(out2.pruned === 1, "superseded generation not reclaimed")
-    // the surviving store still reconstructs the full violation set
-    val stored = graft.engine.ViolationStore.latest(
-      spark, s"${manifest}_violations", 7L,
-      graft.engine.Checkpoint.load(spark, manifest))
-    val live = Validator.violations(tok,
-      RuleSet("rr", Seq(NotNullRule("nn", "tokens", "fatal"),
-        LengthConsistencyRule("lc", "tokens", "n_tok"))),
-      Map.empty)
-    assert(stored.count() === live.count())
-    assert(stored.count() > 0)
+    withTempDir("graft_vprune") { tmp =>
+      val manifest = s"$tmp/manifest"
+      val rulesJson =
+        """{ "ruleSets": {
+          |    "default": [
+          |      {"type":"notNull","id":"nn","column":"tokens","severity":"fatal"},
+          |      {"type":"lengthConsistency","id":"lc","arrayColumn":"tokens","lengthColumn":"n_tok"}
+          |    ]},
+          |  "routing": {}, "defaultRuleSet": "default" }""".stripMargin
+      val tok = TokenTable.tokens(spark, sf0001)
+      // leg 1 validates only A → generation 1 covers {A}; the manifest is
+      // then lost (simulated coordinator reset) so the re-run re-validates
+      // EVERYTHING → generation 2 covers {A, N, R, …} and generation 1 is
+      // fully superseded
+      val out1 = graft.tools.Validate.run(spark,
+        tok.where(col("source") === "A"), rulesJson, None, manifest, 7L, None)
+      assert(out1.validated === Seq("A") && out1.pruned === 0)
+      graft.sources.Fs.delete(spark, manifest)
+      val out2 = graft.tools.Validate.run(spark, tok, rulesJson, None,
+        manifest, 7L, None, pruneSuperseded = true)
+      assert(out2.validated.contains("A"))
+      assert(out2.pruned === 1, "superseded generation not reclaimed")
+      // the surviving store still reconstructs the full violation set
+      val stored = graft.engine.ViolationStore.latest(
+        spark, s"${manifest}_violations", 7L,
+        graft.engine.Checkpoint.load(spark, manifest))
+      val live = Validator.violations(tok,
+        RuleSet("rr", Seq(NotNullRule("nn", "tokens", "fatal"),
+          LengthConsistencyRule("lc", "tokens", "n_tok"))),
+        Map.empty)
+      assert(stored.count() === live.count())
+      assert(stored.count() > 0)
+    }
   }
 }

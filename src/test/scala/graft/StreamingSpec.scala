@@ -106,31 +106,31 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-stream-ckpt").toString
-    val mem = MemoryStream[In]
-    val out = StreamingValidation.uniqueViolationStream(mem.toDF())
-    val seen = new scala.collection.mutable.ArrayBuffer[(String, String)]()
-    def run(): Unit = {
-      val q = out.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.DetailedViolation], _: Long) =>
-          seen.synchronized {
-            seen ++= batch.collect().map(v => (v.doc_id, v.detail))
+    withTempDir("graft-stream-ckpt") { ckpt =>
+      val mem = MemoryStream[In]
+      val out = StreamingValidation.uniqueViolationStream(mem.toDF())
+      val seen = new scala.collection.mutable.ArrayBuffer[(String, String)]()
+      def run(): Unit = {
+        val q = out.writeStream
+          .outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[graft.model.DetailedViolation], _: Long) =>
+            seen.synchronized {
+              seen ++= batch.collect().map(v => (v.doc_id, v.detail))
+            }
+            ()
           }
-          ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+          .start()
+        q.processAllAvailable()
+        q.stop()
+      }
+      mem.addData(In("k", Seq(1), 1, "A"))
+      run() // first occurrence: no violation, but state (count=1) checkpointed
+      assert(seen.isEmpty)
+      mem.addData(In("k", Seq(2), 1, "N"))
+      run() // restart from the checkpoint: restored state makes this count 2
+      assert(seen.toSeq === Seq(("k", "doc_id occurs 2 times")))
     }
-    mem.addData(In("k", Seq(1), 1, "A"))
-    run() // first occurrence: no violation, but state (count=1) checkpointed
-    assert(seen.isEmpty)
-    mem.addData(In("k", Seq(2), 1, "N"))
-    run() // restart from the checkpoint: restored state makes this count 2
-    assert(seen.toSeq === Seq(("k", "doc_id occurs 2 times")))
   }
 
   test("stateful uniqueness: file sink + checkpoint restart equals batch") {
@@ -142,30 +142,30 @@ class StreamingSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import graft.model.TokenRow
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-stream-fsink").toString
-    val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
-    Seq(TokenRow("dup", Array(1), 1, "N"), TokenRow("a", Array(1), 1, "A"))
-      .toDF.repartition(2).write.mode("append").parquet(in)
-    val leg1 = StreamingValidation.runUniqueToFileSink(
-      spark, in, ckpt, out, maxFilesPerTrigger = 1)
-    assert(leg1.count() === 0) // 'dup' seen once: state built, nothing fires
-    // the second half arrives after the kill: 'dup' recurs (cross-restart
-    // duplicate — only restored state can see it) plus a new same-leg pair
-    Seq(TokenRow("dup", Array(2), 1, "A"), TokenRow("c", Array(3), 1, "R"),
-        TokenRow("c", Array(4), 1, "A"))
-      .toDF.repartition(2).write.mode("append").parquet(in)
-    val fin = StreamingValidation.runUniqueToFileSink(
+    withTempDir("graft-stream-fsink") { base =>
+      val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
+      Seq(TokenRow("dup", Array(1), 1, "N"), TokenRow("a", Array(1), 1, "A"))
+        .toDF.repartition(2).write.mode("append").parquet(in)
+      val leg1 = StreamingValidation.runUniqueToFileSink(
         spark, in, ckpt, out, maxFilesPerTrigger = 1)
-      .as[(String, Long, String)].collect().toSet
-    val batch = graft.engine.Validator.uniqueViolations(
-        spark.read.parquet(in), graft.rules.UniqueRule("u", "doc_id"))
-      .select(col("doc_id"),
-        regexp_extract(col("detail"), "occurs ([0-9]+) times", 1)
-          .cast("bigint"), col("source"))
-      .as[(String, Long, String)].collect().toSet
-    assert(fin === batch)
-    assert(fin === Set(("dup", 2L, "A"), ("c", 2L, "A")))
+      assert(leg1.count() === 0) // 'dup' seen once: state built, nothing fires
+      // the second half arrives after the kill: 'dup' recurs (cross-restart
+      // duplicate — only restored state can see it) plus a new same-leg pair
+      Seq(TokenRow("dup", Array(2), 1, "A"), TokenRow("c", Array(3), 1, "R"),
+          TokenRow("c", Array(4), 1, "A"))
+        .toDF.repartition(2).write.mode("append").parquet(in)
+      val fin = StreamingValidation.runUniqueToFileSink(
+          spark, in, ckpt, out, maxFilesPerTrigger = 1)
+        .as[(String, Long, String)].collect().toSet
+      val batch = graft.engine.Validator.uniqueViolations(
+          spark.read.parquet(in), graft.rules.UniqueRule("u", "doc_id"))
+        .select(col("doc_id"),
+          regexp_extract(col("detail"), "occurs ([0-9]+) times", 1)
+            .cast("bigint"), col("source"))
+        .as[(String, Long, String)].collect().toSet
+      assert(fin === batch)
+      assert(fin === Set(("dup", 2L, "A"), ("c", 2L, "A")))
+    }
   }
 
   test("windowed sketch drift emits closed windows with correct verdicts") {
@@ -332,14 +332,15 @@ class StreamingSpec extends SparkSpec {
       _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))
 
   test("a failed bounded stream rethrows and leaves no sink view behind") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-bad")
-    java.nio.file.Files.write(dir.resolve("part-00000.parquet"),
-      "not a parquet file".getBytes("UTF-8"))
-    val before = graftViews()
-    intercept[StreamingQueryException] {
-      StreamingValidation.runUniqueAvailableNow(spark, dir.toString)
+    withTempDir("graft-stream-bad") { dir =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-00000.parquet"),
+        "not a parquet file".getBytes("UTF-8"))
+      val before = graftViews()
+      intercept[StreamingQueryException] {
+        StreamingValidation.runUniqueAvailableNow(spark, dir)
+      }
+      assert(graftViews() -- before === Set.empty[String])
     }
-    assert(graftViews() -- before === Set.empty[String])
   }
 
   test("bounded streams drop their sink view and unload their state stores") {

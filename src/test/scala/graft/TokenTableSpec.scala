@@ -8,6 +8,20 @@ import graft.sources.{Fs, TokenTable}
   */
 class TokenTableSpec extends SparkSpec {
 
+  /** Closed-form replica of the generator for one row — the per-row
+    * token-array-equality ground truth (BASELINE.json input_hint) checked
+    * against Spark's read-back of the same row.
+    */
+  private def expectedTokens(orderkey: Long, linenumber: Int,
+      quantity: Int): Option[Array[Int]] = {
+    val key = orderkey * 7 + linenumber
+    if (key % 107 == 0) None
+    else Some(Array.tabulate(quantity) { j =>
+      if (j == 0 && key % 109 == 0) (TokenTable.Vocab + key % 7).toInt
+      else ((key * 31 + j * 17) % TokenTable.Vocab).toInt
+    })
+  }
+
   test("token-array equality: Spark derivation matches closed form per row") {
     // the driver's synthetic lineitem has duplicate (orderkey, linenumber)
     // keys — compare only rows whose doc_id occurs exactly once on each side
@@ -24,7 +38,7 @@ class TokenTableSpec extends SparkSpec {
     li.foreach { case (docId, r) =>
       val (ok, ln, q) = (r.getLong(0), r.getInt(1), r.getDouble(2).toInt)
       if ((ok * 7 + ln) % 101 != 0) { // collapsed dup ids → skip
-        val expected = TokenTable.expectedTokens(ok, ln, q)
+        val expected = expectedTokens(ok, ln, q)
         tok.get(docId).foreach { got =>
           assert(got.map(_.toSeq) === expected.map(_.toSeq),
             s"token mismatch for $docId")
@@ -76,6 +90,27 @@ class TokenTableSpec extends SparkSpec {
     assert(fields("tokens") == "ARRAY<INT>")
     assert(fields("n_tok") == "INT")
     assert(fields("source") == "STRING")
+  }
+
+  test("building a frame over a warm token cache starts no job") {
+    val frames = Seq[(String, () => Unit)](
+      "tokens" -> (() => TokenTable.tokens(spark, sf0001)),
+      "tokensBaseline" -> (() => TokenTable.tokensBaseline(spark, sf0001)),
+      "tokensWide(4)" -> (() => TokenTable.tokensWide(spark, sf0001, 4)))
+    frames.foreach(_._2()) // warm every cache first
+    frames.foreach { case (name, build) =>
+      val n = jobsIn(build())
+      assert(n === 0, s"building $name over a warm cache started $n jobs")
+    }
+  }
+
+  test("the declared Schema is the schema every token cache stores") {
+    TokenTable.tokensBaseline(spark, sf0001)
+    TokenTable.tokensWide(spark, sf0001, 4) // reads (and builds) full too
+    Seq("full_v2", "even_v2", "wide4_v2").foreach { suffix =>
+      val inferred = spark.read.parquet(Fs.cacheDir(sf0001, suffix)).schema
+      assert(inferred === TokenTable.Schema, suffix)
+    }
   }
 
   test("cache directories: <root>/[<scope>/]<input dir tag>_<suffix>") {
