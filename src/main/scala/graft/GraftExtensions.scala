@@ -2,33 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.functions.KllQuantiles
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point — registers the engine's custom
   * Catalyst functions so they are first-class in SQL:
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * SELECT source, kll_quantiles(n_tok, 200, 0.5, 0.95) FROM tokens GROUP BY source
+  * SELECT doc_id, cosine_sim(embedding, query) FROM docs
   * }}}
   *
   * This is the supported extension surface (injectFunction), not a fork of
-  * the session builder: the aggregate resolves, optimizes, and codegens like
-  * any built-in, and Connect/classic sessions both pick it up from the conf.
+  * the session builder: the functions resolve, optimize, and codegen like
+  * any built-in, and Connect/classic sessions both pick them up from the
+  * conf. Quantile sketches need no registration: Spark's built-in
+  * `kll_sketch_*` functions serve SQL callers.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("kll_quantiles"),
-      new ExpressionInfo(
-        classOf[KllQuantiles].getName, "kll_quantiles",
-        "kll_quantiles(col, k, p1[, p2...]) - approximate quantiles of col " +
-          "at probabilities p1.. via a deterministic KLL sketch with " +
-          "parameter k (mergeable; O(k log n) space)."),
-      (children: Seq[Expression]) => GraftExtensions.buildKll(children)))
-
     ext.injectFunction((
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(
@@ -50,27 +42,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2, "cosine_sim(a, b) needs 2 arguments")
         graft.functions.CosineSim(children(0), children(1))
       }))
-  }
-}
-
-object GraftExtensions {
-  private[graft] def buildKll(children: Seq[Expression]): Expression = {
-    require(children.length >= 3,
-      "kll_quantiles(col, k, p1[, p2...]) needs at least 3 arguments")
-    val k = children(1) match {
-      case Literal(v: Int, _) => v
-      case Literal(v: Long, _) => v.toInt
-      case other => throw new IllegalArgumentException(
-        s"kll_quantiles: k must be an integer literal, got $other")
-    }
-    val ps = children.drop(2).map {
-      case Literal(v: Double, _) => v
-      case Literal(v: java.math.BigDecimal, _) => v.doubleValue()
-      case Literal(v: org.apache.spark.sql.types.Decimal, _) => v.toDouble
-      case Literal(v: Int, _) => v.toDouble
-      case other => throw new IllegalArgumentException(
-        s"kll_quantiles: probabilities must be numeric literals, got $other")
-    }
-    KllQuantiles(children.head, k, ps).toAggregateExpression()
   }
 }

@@ -98,8 +98,8 @@ object Queries {
     * r4 per VERDICT r3 #9): the exact per-source deltas (oracle-recomputed)
     * + a RANK-SPACE bracket — each snapshot's sketch quantile at p must lie
     * between the exact quantiles at p∓eps(k)
-    * ([[graft.engine.Drift.sketchRankBound]], eps = 6/k from the KLL
-    * guarantee, KllSpec-pinned at k=200) — replacing the old hand-tuned
+    * ([[graft.engine.Drift.sketchRankBound]], eps = 6/k above the KLL
+    * library's rank-error bound) — replacing the old hand-tuned
     * ±2.0 value-space slack; the bound now tightens automatically as k
     * grows.
     */
@@ -469,7 +469,7 @@ object Queries {
     val baseline = spark.read.parquet(path)
       .where(col("ts") < lit("2024-01-16 00:00:00").cast("timestamp"))
       .select(col("event_type").as("source"), col("value"))
-    val baseQs = graft.streaming.StreamingDrift.baselineQuantiles(
+    val baseQs = graft.engine.Drift.baselineQuantiles(
       baseline, "value", k = 2000, ps = Seq(0.5, 0.95))
     graft.streaming.StreamingDrift.runWindowedDriftAvailableNow(
         spark, path, graft.sources.EventSource.schema,
@@ -2238,8 +2238,8 @@ object Queries {
          |WHERE c.c_acctbal < 0
          |GROUP BY source ORDER BY source""".stripMargin,
 
-    // exact per-closed-window quantiles: the KLL sketch is loss-free below
-    // its compaction capacity (3k items), which holds for every
+    // exact per-closed-window quantiles: the KLL sketch is loss-free up to
+    // k items per group (k = 200 here), which holds for every
     // (1-day window, event_type) group at verify scale, so sketch output
     // == the rank-rule quantile value at ceil(p*n); emitted set = windows
     // closed by the final watermark max(ts) - 1h

@@ -2,18 +2,17 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.KllFunctions
 
 /** Distribution-drift checks: compare the current snapshot's per-source
   * distributions against a baseline snapshot (the formalization of the
   * reference's manual cross-run count comparison,
   * /root/reference/extraction/main.py:270-293 + report_visualizer.py:21-57).
   *
-  * Two paths:
+  * Paths:
   *  - [[exactQuantileDrift]]: exact `percentile` — the correctness anchor,
   *    DuckDB-oracle-comparable, viable at test scale.
-  *  - [[sketchQuantileDrift]]: deterministic KLL sketch
-  *    ([[graft.functions.KllQuantiles]]) — the 10^12-row path; partial
+  *  - [[sketchQuantileDrift]]: KLL sketch ([[sketchQuantiles]], Spark's
+  *    built-in `kll_sketch_*` functions) — the 10^12-row path; partial
   *    sketches merge at the exchange, no sort.
   *  - [[tokenHistogramDrift]]: L1 distance between normalized per-source
   *    token-bucket histograms (map-side explode + two-phase agg).
@@ -46,6 +45,26 @@ object Drift {
         (maxDelta > threshold).as("drifted"): _*)
   }
 
+  /** Approximate quantiles of `c` at probabilities `ps` as ONE aggregate
+    * column (`array<double>`, one entry per p), from Spark's built-in KLL
+    * sketch with parameter `k` (datasketches' `KllDoublesSketch`).
+    *
+    * A `TypedImperativeAggregate`: partial sketches are built map-side and
+    * merged at the exchange, so a group ships O(k log n) bytes instead of
+    * its rows. Up to k items per group the sketch holds every item and the
+    * quantile at p is exactly the item of rank ceil(p·n); above k,
+    * compaction is randomized, so two runs over the same data may differ
+    * within [[kllRankEps]].
+    *
+    * A group whose column is all NULL yields NaN per p (the unguarded
+    * built-in throws on the empty sketch).
+    */
+  def sketchQuantiles(c: Column, k: Int, ps: Seq[Double]): Column =
+    when(count(c) > 0,
+      kll_sketch_get_quantile_double(
+        kll_sketch_agg_double(c.cast("double"), k), lit(ps.toArray)))
+      .otherwise(array(ps.map(_ => lit(Double.NaN)): _*))
+
   /** KLL-sketch variant — same shape, approximate quantiles, mergeable
     * partials (the shape that scales; correctness anchored by the exact
     * variant in tests).
@@ -55,7 +74,7 @@ object Drift {
       k: Int, ps: Seq[Double], threshold: Double): DataFrame =
     sketchDriftFromQuantiles(
       current.groupBy("source")
-        .agg(KllFunctions.kllQuantiles(col(column), k, ps).as("cur_qs")),
+        .agg(sketchQuantiles(col(column), k, ps).as("cur_qs")),
       baseline, column, k, ps, threshold)
 
   /** Drift verdict from PRE-COMPUTED current-side sketch quantiles
@@ -68,24 +87,40 @@ object Drift {
   def sketchDriftFromQuantiles(
       curQs: DataFrame, baseline: DataFrame, column: String,
       k: Int, ps: Seq[Double], threshold: Double): DataFrame = {
-    val base = baseline.groupBy("source")
-      .agg(KllFunctions.kllQuantiles(col(column), k, ps).as("base_qs"))
     val joined = curQs.select(col("source"), col("cur_qs"))
-      .join(base, Seq("source"), "full_outer")
-    val deltas = ps.indices.map(i =>
-      abs(col("cur_qs")(i) - col("base_qs")(i)))
-    joined.select(
-      col("source"),
-      deltas.reduce((a, b) => greatest(a, b)).as("max_delta"),
-      (deltas.reduce((a, b) => greatest(a, b)) > threshold).as("drifted"))
+      .join(baselineQuantiles(baseline, column, k, ps), Seq("source"),
+        "full_outer")
+    joined.select(col("source") +: maxDeltaVerdict(ps, threshold): _*)
   }
 
-  /** Rank-space error budget of the deterministic KLL variant: KllSpec pins
-    * the observed rank error at k=200 below 0.03 on uniform and adversarial
-    * streams, and KLL rank error decays as O(1/k) (Karnin–Lang–Liberty
-    * Thm 1 — the k in the capacity schedule), so `6/k` reproduces the
-    * pinned point and TIGHTENS automatically as k grows — no hand-tuned
-    * value-space slack.
+  /** The baseline side of every sketch drift compare:
+    * (source, base_qs) — [[sketchQuantiles]] per source of `baseline`.
+    */
+  def baselineQuantiles(
+      baseline: DataFrame, column: String, k: Int,
+      ps: Seq[Double]): DataFrame =
+    baseline.groupBy("source")
+      .agg(sketchQuantiles(col(column), k, ps).as("base_qs"))
+
+  /** The drift verdict over a frame carrying `cur_qs` and `base_qs`:
+    * `max_delta` (the largest |cur − base| over the ps) and
+    * `drifted` (`max_delta > threshold`). A source missing from one side
+    * reads NULL in both.
+    */
+  def maxDeltaVerdict(ps: Seq[Double], threshold: Double): Seq[Column] = {
+    val maxDelta = ps.indices.map(i =>
+      abs(col("cur_qs")(i) - col("base_qs")(i)))
+      .reduce((a, b) => greatest(a, b))
+    Seq(maxDelta.as("max_delta"), (maxDelta > threshold).as("drifted"))
+  }
+
+  /** Rank-space error budget of the KLL sketch. The library's own
+    * single-rank bound (99% confidence,
+    * `KllSketch.getNormalizedRankError(k, false)`) reads 0.0790 at k=32,
+    * 0.0133 at k=200 and 0.00142 at k=2000; `6/k` (0.1875, 0.03, 0.003)
+    * stays above it at every k, decays as O(1/k) like the KLL bound
+    * (Karnin–Lang–Liberty Thm 1), and so TIGHTENS automatically as k
+    * grows — no hand-tuned value-space slack.
     */
   def kllRankEps(k: Int): Double = 6.0 / k
 
@@ -104,7 +139,7 @@ object Drift {
       integerValued: Boolean = false): DataFrame = {
     val eps = kllRankEps(k)
     val sk = df.groupBy("source")
-      .agg(KllFunctions.kllQuantiles(col(column), k, ps).as("sk"))
+      .agg(sketchQuantiles(col(column), k, ps).as("sk"))
     val exactAggs = ps.zipWithIndex.flatMap { case (p, i) =>
       val lo = math.max(0.0, p - eps)
       val hi = math.min(1.0, p + eps)
@@ -121,10 +156,6 @@ object Drift {
           .as(s"within_q$i")): _*)
   }
 
-  /** L1 distance between normalized per-source histograms of token values
-    * (bucketed by `bucketSize`). The explode is map-local; the aggregate is
-    * two-phase keyed by (source, bucket) then (source) — no row-level join.
-    */
   /** Population Stability Index over a bucketed numeric column — the
     * standard production drift score (sum over buckets of
     * `(p_cur − p_base) · ln(p_cur / p_base)`; rule of thumb: <0.1 stable,
@@ -173,6 +204,10 @@ object Drift {
         (col("psi") > threshold).as("drifted"))
   }
 
+  /** L1 distance between normalized per-source histograms of token values
+    * (bucketed by `bucketSize`). The explode is map-local; the aggregate is
+    * two-phase keyed by (source, bucket) then (source) — no row-level join.
+    */
   def tokenHistogramDrift(
       current: DataFrame, baseline: DataFrame, bucketSize: Int): DataFrame = {
     def hist(df: DataFrame, cName: String): DataFrame =

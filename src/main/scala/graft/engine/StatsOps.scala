@@ -53,13 +53,14 @@ object StatsOps {
     * drift compare ([[Drift.sketchDriftFromQuantiles]] then aggregates the
     * baseline side only) — at 100 TB a whole pass over the corpus.
     *
-    * WHERE it rides matters: fused into the numeric aggregate, the
-    * imperative KLL buffer forces that whole aggregate from the codegen'd
-    * HashAggregate into ObjectHashAggregate — measured at ×64 (38.4M
-    * rows), BOTH scaling levels ran ~9-14% SLOWER, more than the saved
-    * scan bought. The STRING min/max aggregate is already a
-    * non-codegen SortAggregate (var-width buffer), so the sketch rides
-    * there: the numeric side stays compiled and the drift scan still
+    * WHERE it rides matters: the sketch ([[Drift.sketchQuantiles]],
+    * Spark's built-in KLL) is a `TypedImperativeAggregate` with an object
+    * buffer. Fused into the numeric aggregate, it forces that whole
+    * aggregate from the codegen'd HashAggregate into ObjectHashAggregate —
+    * measured at ×64 (38.4M rows), BOTH scaling levels ran ~9-14% SLOWER,
+    * more than the saved scan bought. The STRING min/max aggregate is
+    * already a non-codegen SortAggregate (var-width buffer), so the sketch
+    * rides there: the numeric side stays compiled and the drift scan still
     * disappears.
     */
   def columnStatsWithQuantiles(tokens: DataFrame, k: Int,
@@ -69,8 +70,7 @@ object StatsOps {
       .groupBy("source").agg(
         min(col("doc_id")).as("min_doc_id"),
         max(col("doc_id")).as("max_doc_id"),
-        graft.functions.KllFunctions.kllQuantiles(col("n_tok"), k, ps)
-          .as("cur_qs"))
+        Drift.sketchQuantiles(col("n_tok"), k, ps).as("cur_qs"))
     numeric.join(strings, Seq("source"))
   }
 
@@ -150,7 +150,7 @@ object StatsOps {
 
   /** Exact per-source quantiles of n_tok (linear interpolation — same
     * algorithm as DuckDB's quantile_cont, so oracle-comparable). The sketch
-    * path for 100 TB is [[graft.functions.KllSketch]]; this exact variant is
+    * path for 100 TB is [[Drift.sketchQuantiles]]; this exact variant is
     * the correctness anchor.
     */
   def lengthQuantiles(tokens: DataFrame, ps: Seq[Double]): DataFrame = {

@@ -147,7 +147,8 @@ object Validator {
     * corpus scan per referential rule in every composed violations plan.
     */
   private def valueSetRule(rule: ReferentialRule, values: Seq[Any]): Rule =
-    ValueSetRule(rule.id, rule.column, values, rule.dimension, rule.severity)
+    ValueSetRule(rule.id, rule.column, values, rule.dimension, rule.severity,
+      rule.appliesTo)
 
   /** Referential violations against a SMALL dimension (the reference's
     * value-set membership check, SURVEY.md §2 row 10).
@@ -443,14 +444,17 @@ object Validator {
         } ++
         defaultSet.rowRules.map(_ -> gate(Nil, true)) ++
         refs.collect { case (r, g, Some(values)) => valueSetRule(r, values) -> g }
-    def rowsOf(g: Option[Column]): DataFrame = g.map(src.where).getOrElse(src)
+    // the rows a dataset rule sees: its carriers' gate, then its own
+    // source restriction (the row rules' RuleCompiler gate)
+    def rowsOf(r: Rule, g: Option[Column]): DataFrame =
+      (g ++ r.appliesTo.map(col("source") === _)).foldLeft(src)(_ where _)
     val bigRefs = refs.collect { case (r, g, None) =>
-      referentialViolations(rowsOf(g), r, dims(r.dimension))
+      referentialViolations(rowsOf(r, g), r, dims(r.dimension))
     }
     // the set name keys the aggregate only where routed sets carry the
     // rule (the default slice alone is one set)
     val uniq = pooled(_.uniqueRules).map { case (u, gis, inDefault) =>
-      uniqueViolationsPer(rowsOf(gate(gis, inDefault)), u,
+      uniqueViolationsPer(rowsOf(u, gate(gis, inDefault)), u,
         if (gis.isEmpty) Nil else Seq(col("_set")))
     }
     (Seq(rowPass(src, rowRules)) ++ bigRefs ++ uniq).reduce(_ unionByName _)

@@ -1,37 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.functions.KllFunctions
+import graft.engine.Drift
 
 /** Streaming distribution-drift monitor (north-star: "token-distribution
   * drift via streaming t-digest/KLL sketches compared against a baseline
   * snapshot").
   *
   * Event-time windowed KLL sketches per (window, source), compared against a
-  * static baseline-quantile table via broadcast join. The watermark bounds
-  * the sketch state: closed windows are emitted (append mode) and their
-  * state dropped, so state size is O(open windows × sources × k) — constant
-  * in stream length, which is what makes this viable over an unbounded
-  * 10^12-sequence feed.
+  * static baseline-quantile table ([[graft.engine.Drift.baselineQuantiles]],
+  * computed in batch) via broadcast join. The watermark bounds the sketch
+  * state: closed windows are emitted (append mode) and their state dropped,
+  * so state size is O(open windows × sources × k) — constant in stream
+  * length, which is what makes this viable over an unbounded 10^12-sequence
+  * feed.
   *
   * The batch anchors are [[graft.engine.Drift.exactQuantileDrift]] (exact,
-  * oracle-checked) and [[graft.engine.Drift.sketchQuantileDrift]] (same KLL
-  * aggregate, bounded snapshots); this is the same sketch aggregate lifted
-  * into a windowed streaming plan — partial sketches merge in the state
-  * store exactly as they merge at a batch exchange.
+  * oracle-checked) and [[graft.engine.Drift.sketchQuantileDrift]]; this is
+  * the same sketch aggregate ([[graft.engine.Drift.sketchQuantiles]]) and
+  * the same verdict ([[graft.engine.Drift.maxDeltaVerdict]]) lifted into a
+  * windowed streaming plan — partial sketches merge in the state store
+  * exactly as they merge at a batch exchange.
   */
 object StreamingDrift {
-
-  /** Per-source baseline quantiles of `column` from a bounded snapshot
-    * (computed in batch, broadcast into the stream): (source, base_qs).
-    */
-  def baselineQuantiles(
-      baseline: DataFrame, column: String, k: Int,
-      ps: Seq[Double]): DataFrame =
-    baseline.groupBy("source")
-      .agg(KllFunctions.kllQuantiles(col(column), k, ps).as("base_qs"))
 
   /** Windowed drift over a streaming token frame with an event-time column.
     * Output (append mode, emitted as windows close):
@@ -44,17 +37,12 @@ object StreamingDrift {
     val agg = stream
       .withWatermark(eventCol, watermarkDur)
       .groupBy(window(col(eventCol), windowDur), col("source"))
-      .agg(KllFunctions.kllQuantiles(col(column), k, ps).as("cur_qs"))
-    val deltas: Seq[Column] = ps.indices.map(i =>
-      abs(col("cur_qs")(i) - col("base_qs")(i)))
-    val maxDelta = deltas.reduce((a, b) => greatest(a, b))
+      .agg(Drift.sketchQuantiles(col(column), k, ps).as("cur_qs"))
     agg.join(broadcast(baselineQs), Seq("source"), "left")
-      .select(
+      .select(Seq(
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
-        col("source"),
-        maxDelta.as("max_delta"),
-        (maxDelta > threshold).as("drifted"))
+        col("source")) ++ Drift.maxDeltaVerdict(ps, threshold): _*)
   }
 
   /** One-shot windowed drift over a parquet event directory as a bounded

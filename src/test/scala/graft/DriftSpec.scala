@@ -40,24 +40,50 @@ class DriftSpec extends SparkSpec {
 
   test("fused stats+sketch equals the standalone sketch drift") {
     // the bench full pass rides the drift sketch on the stats aggregate —
-    // the verdict from the fused frame must equal sketchQuantileDrift
-    // exactly (same deterministic sketches, one fewer scan)
+    // the fused frame must give the standalone path's verdicts, with one
+    // fewer scan. Above k items the two sketches compact independently
+    // (randomized), so their quantiles are compared through the rank
+    // bracket, not for equality.
+    val ps = Seq(0.5, 0.95)
     val cur = mk("A", 1 to 800).toDF.unionByName(mk("N", 1 to 300).toDF)
     val base = mk("A", 1 to 400).toDF
     val fusedStats = graft.engine.StatsOps
-      .columnStatsWithQuantiles(cur, 200, Seq(0.5, 0.95))
+      .columnStatsWithQuantiles(cur, 200, ps)
     // source N is absent from the baseline: max_delta is null on BOTH
     // paths (full-outer join semantics) — extract null-safely
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-      (r.getString(0),
-        if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-        if (r.isNullAt(2)) None else Some(r.getBoolean(2)))).toSet
+      r.getString(0) ->
+        (if (r.isNullAt(1)) None else Some(r.getDouble(1)),
+          if (r.isNullAt(2)) None else Some(r.getBoolean(2)))).toMap
     val viaFused = rows(Drift.sketchDriftFromQuantiles(
-      fusedStats, base, "n_tok", 200, Seq(0.5, 0.95), 10.0))
+      fusedStats, base, "n_tok", 200, ps, 10.0))
     val standalone = rows(Drift.sketchQuantileDrift(
-      cur, base, "n_tok", 200, Seq(0.5, 0.95), 10.0))
-    assert(viaFused === standalone)
-    assert(viaFused.exists(_._2.isDefined))
+      cur, base, "n_tok", 200, ps, 10.0))
+    assert(viaFused.keySet === Set("A", "N"))
+    assert(standalone.keySet === viaFused.keySet)
+    assert(viaFused("N") === ((None, None)))
+    assert(standalone("N") === ((None, None)))
+    assert(viaFused("A")._1.isDefined && standalone("A")._1.isDefined)
+    assert(viaFused("A")._2 === Some(true))
+    assert(standalone("A")._2 === Some(true))
+    // both paths' current-side quantiles lie inside the rank bracket of
+    // Drift.sketchRankBound: between the exact quantiles at p∓6/k
+    val eps = Drift.kllRankEps(200)
+    val bracket = cur.groupBy("source").agg(
+      expr(s"floor(percentile(n_tok, ${0.5 - eps}))").as("lo0"),
+      expr(s"ceil(percentile(n_tok, ${0.5 + eps}))").as("hi0"),
+      expr(s"floor(percentile(n_tok, ${0.95 - eps}))").as("lo1"),
+      expr(s"ceil(percentile(n_tok, ${math.min(1.0, 0.95 + eps)}))")
+        .as("hi1"))
+    val standaloneQs = cur.groupBy("source")
+      .agg(Drift.sketchQuantiles(col("n_tok"), 200, ps).as("cur_qs"))
+    for (qs <- Seq(fusedStats.select("source", "cur_qs"), standaloneQs)) {
+      val within = qs.join(bracket, Seq("source")).select(col("source"),
+        col("cur_qs")(0).between(col("lo0"), col("hi0")) &&
+          col("cur_qs")(1).between(col("lo1"), col("hi1")))
+        .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      assert(within === Map("A" -> true, "N" -> true))
+    }
     // and the stats columns still match the unfused stats
     val plain = graft.engine.StatsOps.columnStats(cur)
       .select("source", "n_rows", "min_n_tok", "max_n_tok").collect()

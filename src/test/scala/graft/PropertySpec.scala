@@ -218,8 +218,8 @@ class PropertySpec extends AnyFunSuite {
     Seq((50, 2), (173, 3), (400, 8), (311, 5)).foreach { case (n, parts) =>
       val xs = Seq.tabulate(n)(i => ((i * 2654435761L) % 1000).toDouble)
       val df = xs.toDF("x").repartition(parts)
-      val approx = df.agg(graft.functions.KllFunctions
-          .kllQuantiles(col("x"), 200, Seq(0.5)))
+      val approx = df.agg(graft.engine.Drift
+          .sketchQuantiles(col("x"), 200, Seq(0.5)))
         .first().getSeq[Double](0).head
       val sorted = xs.sorted
       val rank = sorted.count(_ <= approx)

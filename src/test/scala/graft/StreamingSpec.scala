@@ -175,7 +175,7 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[TimedIn]
     // baseline: n_tok uniform around 10 for source A
     val baseline = Seq.tabulate(50)(i => In(s"b$i", Seq(1), 10, "A")).toDF()
-    val baseQs = StreamingDrift.baselineQuantiles(
+    val baseQs = graft.engine.Drift.baselineQuantiles(
       baseline, "n_tok", k = 200, ps = Seq(0.5))
     val out = StreamingDrift.windowedSketchDrift(
       mem.toDF(), "ts", "10 minutes", "5 minutes", baseQs, "n_tok",

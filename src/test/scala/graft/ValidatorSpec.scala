@@ -84,6 +84,36 @@ class ValidatorSpec extends SparkSpec {
     assert(got === Set("a"))
   }
 
+  test("appliesTo restricts dataset rules: unique, small and big dimension") {
+    val rs = RuleSet("scoped", Seq(
+      UniqueRule("uniq_a", "doc_id", appliesTo = Some("A")),
+      ReferentialRule("ref_small_a", "doc_id", "docs_small",
+        appliesTo = Some("A")),
+      ReferentialRule("ref_big_a", "doc_id", "docs_big",
+        appliesTo = Some("A"))))
+    val df = Seq(
+      TokenRow("1", Array(1), 1, "A"),
+      TokenRow("1", Array(1), 1, "A"),        // duplicate in A: fires
+      TokenRow("900000", Array(1), 1, "A"),   // in neither dim: fires twice
+      TokenRow("2", Array(1), 1, "B"),
+      TokenRow("2", Array(1), 1, "B"),        // duplicate in B: exempt
+      TokenRow("900001", Array(1), 1, "B")    // in neither dim: exempt
+    ).toDF
+    // the small dimension compiles into the row pass; the big one (past
+    // the 10k-value collect limit) stays an anti-join
+    val dims = Map(
+      "docs_small" -> Seq("1", "2", "3").toDF("doc_id"),
+      "docs_big" -> spark.range(1, 20001)
+        .select(col("id").cast("string").as("doc_id")))
+    val got = Validator.violations(df, rs, dims)
+      .select("doc_id", "rule_id", "source")
+      .as[(String, String, String)].collect().toSet
+    assert(got === Set(
+      ("1", "uniq_a", "A"),
+      ("900000", "ref_small_a", "A"),
+      ("900000", "ref_big_a", "A")))
+  }
+
   test("routed dispatch: each source validated by its routed set only") {
     val routing = RuleSetLoader.parse(
       """{ "ruleSets": {
