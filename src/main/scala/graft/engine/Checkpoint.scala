@@ -3,7 +3,6 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{ManifestEntry, SourceSummary}
-import graft.rules.RuleSet
 
 /** Checkpoint manifest + resumable validation runs (north-star resumability;
   * the reference reruns from scratch each time and only timestamps its
@@ -70,7 +69,7 @@ object Checkpoint {
     * resume, or a re-run at the same snapshot. Highest `run_ts` wins, then
     * the larger `n_rows`. Error rows (zeroed metrics) never count.
     */
-  private[engine] def latestOk(entries: Seq[ManifestEntry], snapshotId: Long)
+  private[graft] def latestOk(entries: Seq[ManifestEntry], snapshotId: Long)
       : Seq[ManifestEntry] =
     entries
       .filter(e => e.snapshot_id == snapshotId && e.status == "ok")
@@ -91,19 +90,12 @@ object Checkpoint {
       .write.mode(SaveMode.Append).parquet(manifestPath)
   }
 
-  /** Per-partition summary reconstructed from the manifest at a snapshot
-    * ([[latestOk]]), as a driver-local frame.
-    */
-  def summaryAt(spark: SparkSession, manifestPath: String,
-      snapshotId: Long): DataFrame =
-    summaryFrame(spark, latestOk(load(spark, manifestPath), snapshotId))
-
   /** Manifest entries as a driver-local frame with the columns of
     * [[SourceSummary]]. The NULL-source partition, keyed in the manifest
     * by [[SnapshotDiff.NullSourceSentinel]], reads back as a NULL source,
     * the same value the table holds.
     */
-  private[engine] def summaryFrame(spark: SparkSession,
+  private[graft] def summaryFrame(spark: SparkSession,
       es: Seq[ManifestEntry]): DataFrame = {
     import spark.implicits._
     es.map { e =>
@@ -135,26 +127,11 @@ object ValidationRunner {
       manifest: Seq[ManifestEntry] = Nil)
 
   /** Validate all partitions not yet marked ok in the manifest at this
-    * snapshot, append their metrics, and return the per-partition summary.
-    *
-    * Error containment (reference behavior, main.py:225-263): a partition
-    * whose validation throws is recorded in the manifest with
-    * status="error" and the run continues.
-    */
-  def runResumable(
-      spark: SparkSession,
-      tokens: DataFrame,
-      ruleSet: RuleSet,
-      dims: Map[String, DataFrame],
-      manifestPath: String,
-      snapshotId: Long): RunResult =
-    runResumableWith(spark, tokens,
-      df => Validator.violations(df, ruleSet, dims), manifestPath, snapshotId)
-
-  /** Same lifecycle with a CALLER-SUPPLIED violations pipeline (routed
-    * dispatch, custom rule vocabularies) — resume-by-anti-join, batched
-    * fast path, per-partition containment fallback, manifest bookkeeping
-    * all identical; only the validation plan differs.
+    * snapshot with the caller's violations pipeline `violationsOf` (e.g.
+    * `Validator.violations` under a routing), append their metrics, and
+    * return the per-partition summary: resume-by-anti-join, a batched fast
+    * path, a per-partition containment fallback and the manifest
+    * bookkeeping.
     *
     * The bookkeeping rides on rows the driver collects anyway: one census
     * aggregate over `tokens` gives the partition list and every

@@ -9,18 +9,19 @@ import graft.rules._
   * Design (SURVEY.md §3.1 "Spark equivalent"): one declarative job —
   *
   * {{{
-  * scan(tokens) → single codegen pass evaluating ALL row rules
-  *              → explode(filter(array(when(...)))) violation rows
-  *   ∪ broadcast left_anti join (referential rules)
+  * scan(tokens) → single codegen pass evaluating ALL row rules and the
+  *                small-dimension referential rules (NOT IN predicates)
+  *              → explode(concat(when(...))) violation rows
+  *   ∪ sort-merge left_anti join (referential rules, dimension > 10,000)
   *   ∪ two-phase hash aggregate (uniqueness rules)
   * → dedup/count aggregate → per-source summaries
   * }}}
   *
   * The reference's 4-service HTTP chain (mapper → marshal → blaze → termite,
   * /root/reference/docker-compose.yml:3-105) collapses into Catalyst
-  * expression evaluation plus one BroadcastExchange. Every row rule is
-  * evaluated in ONE scan (no per-rule passes): at 100 TB the scan dominates,
-  * so rule count must not multiply I/O.
+  * expression evaluation. Every row rule is evaluated in ONE scan (no
+  * per-rule passes): at 100 TB the scan dominates, so rule count must not
+  * multiply I/O.
   */
 object Validator {
 
@@ -56,7 +57,7 @@ object Validator {
     * Output: (doc_id, rule_id, detail, severity, source).
     */
   private def rowPass(
-      df: DataFrame, rules: Seq[(Rule, Option[Column])]): DataFrame = {
+      df: DataFrame, rules: Seq[(CompiledRowRule, Option[Column])]): DataFrame = {
     // The hits array is a CONCAT of per-rule conditional sub-arrays (empty
     // when the rule passes), not `array(when…)` + a higher-order `filter`:
     // every HigherOrderFunction is CodegenFallback, and ONE such expression
@@ -67,9 +68,8 @@ object Validator {
     // (asserted by WideRoutingSpec at 400 rule sets / 1200 gated rules).
     val hitType = "struct<rule_id:string,detail:string,severity:string>"
     val noHit = array().cast(s"array<$hitType>")
-    def hitsOf(rs: Seq[(Rule, Option[Column])]): Column =
-      concat(rs.map { case (rule, gate) =>
-        val r = RuleCompiler.compileRow(rule)
+    def hitsOf(rs: Seq[(CompiledRowRule, Option[Column])]): Column =
+      concat(rs.map { case (r, gate) =>
         val violated = gate.map(_ && r.violated).getOrElse(r.violated)
         when(violated, array(struct(
           lit(r.id).as("rule_id"),
@@ -120,10 +120,17 @@ object Validator {
         col("source"))
   }
 
-  /** Values a small dimension may hold before the predicate compilation
-    * ([[referentialViolations]]) falls back to the broadcast anti-join.
-    * Collecting up to this many values costs what the broadcast build
-    * would have collected anyway.
+  /** Values a dimension may hold and still compile to a `NOT IN`
+    * predicate in the shared row pass; a larger one compiles to a
+    * sort-merge anti-join ([[violations]]). Collecting up to this many
+    * values costs what a broadcast build would collect anyway.
+    *
+    * Why a predicate and not a join: an anti-join cannot prune anything
+    * (dynamic partition pruning does not apply to anti-joins), while the
+    * static predicate prunes PARTITIONS when the checked column is the
+    * partition key and pushes to row-group stats otherwise. Measured at
+    * 38.4M rows / 8 threads: 0.12 s vs 3.1 s for the anti-join, whose cost
+    * was flat from 2 to 8 threads (it reads everything).
     */
   private val SmallDimMaxValues = 10000
 
@@ -141,67 +148,21 @@ object Validator {
     if (values.length <= SmallDimMaxValues) Some(values.toSeq) else None
   }
 
-  /** The small-dim membership check as a fusable ROW rule (round 7): the
-    * compiled predicate+detail are identical to [[referentialViolations]]'s
-    * small-dim leg, but riding the shared single-scan row pass saves one
-    * corpus scan per referential rule in every composed violations plan.
+  /** Referential violations of the rows `df` against a LARGE dimension
+    * (its first column): the rows whose key the dimension lacks, a NULL key
+    * included. The anti-join shuffles BOTH sides on the key: a sort-merge
+    * (or shuffled-hash under AQE) join, never a broadcast — the `merge`
+    * hint pins that, so a misestimated dimension size can't flip the plan
+    * into collecting a TB-scale table to the driver and shipping it to
+    * every executor. AQE skew-join splitting handles hot FK values.
     */
-  private def valueSetRule(rule: ReferentialRule, values: Seq[Any]): Rule =
-    ValueSetRule(rule.id, rule.column, values, rule.dimension, rule.severity,
-      rule.appliesTo)
-
-  /** Referential violations against a SMALL dimension (the reference's
-    * value-set membership check, SURVEY.md §2 row 10).
-    *
-    * A value set is driver-small by definition — a broadcast join collects
-    * it to the driver anyway — so the membership check compiles to a
-    * STATIC `NOT IN` predicate instead of a broadcast anti-join. The
-    * difference at scale is pruning: an anti-join cannot prune anything
-    * (dynamic partition pruning does not apply to anti-joins), while the
-    * static predicate prunes PARTITIONS when the checked column is the
-    * partition key and pushes to row-group stats otherwise. Measured at
-    * 38.4M rows / 8 threads: 0.12 s vs 3.1 s for the anti-join — and the
-    * anti-join's cost was flat from 2 to 8 threads (it reads everything).
-    *
-    * NULL keys are violations (a null can't be in any value set) — the
-    * `isNull ||` term matches the anti-join's null semantics exactly.
-    * Dimensions larger than [[SmallDimMaxValues]] fall back to the
-    * broadcast anti-join; truly large dimensions belong to
-    * [[referentialViolationsBigDim]].
-    */
-  def referentialViolations(
-      df: DataFrame, rule: ReferentialRule, dim: DataFrame): DataFrame = {
-    val base = smallDimValues(dim) match {
-      case Some(values) =>
-        df.where(col(rule.column).isNull ||
-          !col(rule.column).isin(values: _*))
-      case None =>
-        val dimCol = dim.columns.head
-        df.join(broadcast(dim), df(rule.column) === dim(dimCol), "left_anti")
-    }
-    base.select(col("doc_id"), lit(rule.id).as("rule_id"),
-      concat(lit(s"${rule.column}='"), col(rule.column),
-        lit(s"' not in ${rule.dimension}")).as("detail"),
-      lit(rule.severity).as("severity"), col("source"))
-  }
-
-  /** Referential violations against a LARGE dimension — the shuffle-join
-    * path (SURVEY.md §2 row 10 at dimension sizes where a broadcast would
-    * OOM the executors). The anti-join shuffles BOTH sides on the key: a
-    * sort-merge (or shuffled-hash under AQE) join, never a broadcast — the
-    * `merge` hint pins that so a misestimated dimension size can't flip the
-    * plan into a driver-side collect of a TB-scale table. AQE skew-join
-    * splitting handles hot FK values.
-    */
-  def referentialViolationsBigDim(
-      df: DataFrame, rule: ReferentialRule, dim: DataFrame): DataFrame = {
-    val dimCol = dim.columns.head
-    df.join(dim.hint("merge"), df(rule.column) === dim(dimCol), "left_anti")
+  private def antiJoinViolations(
+      df: DataFrame, rule: ReferentialRule, dim: DataFrame): DataFrame =
+    df.join(dim.hint("merge"), df(rule.column) === dim(dim.columns.head),
+        "left_anti")
       .select(col("doc_id"), lit(rule.id).as("rule_id"),
-        concat(lit(s"${rule.column}="), col(rule.column).cast("string"),
-          lit(s" not in ${rule.dimension}")).as("detail"),
+        RuleCompiler.membershipDetail(rule).as("detail"),
         lit(rule.severity).as("severity"), col("source"))
-  }
 
   /** Uniqueness violations: two-phase hash aggregate on the key.
     *
@@ -254,8 +215,8 @@ object Validator {
 
   /** Full pass of ONE rule set → detailed violations
     * (doc_id, rule_id, detail, severity, source): the one-set routing
-    * (no routed family), so it compiles to exactly one row pass plus one
-    * aggregate per unique rule and one anti-join per big-dimension
+    * (no routed family), so it compiles to at most one row pass plus one
+    * aggregate per unique rule and one anti-join per large-dimension
     * referential rule.
     */
   def violations(
@@ -296,15 +257,18 @@ object Validator {
     * gates: a single rule set compiles to its plain one-set plan.
     *
     * Dataset-level rules collapse per DISTINCT rule across clusters and the
-    * default set: a small-dimension referential rule becomes a
-    * [[graft.rules.ValueSetRule]] in the shared row pass (the value set is
-    * collected at plan time either way, and fusing saves one corpus scan
-    * per referential rule), a large one keeps a broadcast
-    * anti-join over its carriers' rows, and a unique rule runs ONE
-    * [[uniqueViolations]] aggregate over its carriers' rows with the set
-    * name as an extra grouping key — one shuffle however many sets carry
-    * it. Fusion interleaves referential hits with row-rule hits, so the
-    * frame's row order is unspecified; every consumer aggregates or sorts.
+    * default set. Each referenced dimension is collected once per call
+    * (at most [[SmallDimMaxValues]] + 1 values). A referential rule over a
+    * dimension of at most [[SmallDimMaxValues]] values compiles to a
+    * membership predicate in the shared row pass
+    * ([[graft.rules.RuleCompiler.compileMembership]]; fusing saves one
+    * corpus scan per referential rule); over a larger one, to a
+    * `merge`-hinted anti-join over its carriers' rows. A unique rule runs
+    * ONE [[uniqueViolations]] aggregate over its carriers' rows with the
+    * set name as an extra grouping key — one shuffle however many sets
+    * carry it. Fusion interleaves referential hits with row-rule hits, so
+    * the frame's row order is unspecified; every consumer aggregates or
+    * sorts.
     */
   def violations(
       df: DataFrame, routing: RuleSetLoader.Routing,
@@ -431,25 +395,32 @@ object Validator {
         (r, by.flatten, by.contains(None))
       }
     }
-    val refs = pooled(_.referentialRules).map { case (r, gis, inDefault) =>
-      (r, gate(gis, inDefault), smallDimValues(dims(r.dimension)))
-    }
+    val refs = pooled(_.referentialRules)
+    // one collect per referenced dimension, however many rules name it
+    val dimValues: Map[String, Option[Seq[Any]]] =
+      refs.map(_._1.dimension).distinct
+        .map(d => d -> smallDimValues(dims(d))).toMap
 
-    val rowRules: Seq[(Rule, Option[Column])] =
-      compiled.flatMap(c => c.shared.rowRules.map(_ -> gate(Seq(c.gi), false))) ++
+    val rowRules: Seq[(CompiledRowRule, Option[Column])] =
+      (compiled.flatMap(c => c.shared.rowRules.map(_ -> gate(Seq(c.gi), false))) ++
         paramCols.map { case (g, t) =>
           // null bounds self-gate
           (ColumnBoundsRule(t.id, t.column, loCol(g, t.id), hiCol(g, t.id),
             t.severity, t.appliesTo): Rule) -> None
         } ++
-        defaultSet.rowRules.map(_ -> gate(Nil, true)) ++
-        refs.collect { case (r, g, Some(values)) => valueSetRule(r, values) -> g }
+        defaultSet.rowRules.map(_ -> gate(Nil, true)))
+        .map { case (r, g) => RuleCompiler.compileRow(r) -> g } ++
+        refs.flatMap { case (r, gis, inDefault) =>
+          dimValues(r.dimension).map(values =>
+            RuleCompiler.compileMembership(r, values) -> gate(gis, inDefault))
+        }
     // the rows a dataset rule sees: its carriers' gate, then its own
     // source restriction (the row rules' RuleCompiler gate)
     def rowsOf(r: Rule, g: Option[Column]): DataFrame =
       (g ++ r.appliesTo.map(col("source") === _)).foldLeft(src)(_ where _)
-    val bigRefs = refs.collect { case (r, g, None) =>
-      referentialViolations(rowsOf(r, g), r, dims(r.dimension))
+    val bigRefs = refs.collect {
+      case (r, gis, inDefault) if dimValues(r.dimension).isEmpty =>
+        antiJoinViolations(rowsOf(r, gate(gis, inDefault)), r, dims(r.dimension))
     }
     // the set name keys the aggregate only where routed sets carry the
     // rule (the default slice alone is one set)
@@ -457,7 +428,10 @@ object Validator {
       uniqueViolationsPer(rowsOf(u, gate(gis, inDefault)), u,
         if (gis.isEmpty) Nil else Seq(col("_set")))
     }
-    (Seq(rowPass(src, rowRules)) ++ bigRefs ++ uniq).reduce(_ unionByName _)
+    // a row pass with no rules would scan the corpus to emit nothing
+    val datasetPasses = bigRefs ++ uniq
+    (if (rowRules.isEmpty && datasetPasses.nonEmpty) datasetPasses
+     else rowPass(src, rowRules) +: datasetPasses).reduce(_ unionByName _)
   }
 
   /** Ranked duplicate rows via a window function — the alternative
@@ -521,10 +495,10 @@ object Validator {
     * the reference's containment policy (HTTP/validation failures append a
     * processing issue and the run continues, main.py:225-263).
     *
-    * Each rule is probed alone against the frame (driver-side analysis;
-    * a referential probe also resolves its dimension), then the healthy
-    * subset runs through ONE [[violations]] pass — containment costs no
-    * extra corpus passes.
+    * Each rule is probed alone by building its one-rule [[violations]]
+    * frame (driver-side analysis; a referential probe also resolves and
+    * collects its dimension), then the healthy subset runs through ONE
+    * [[violations]] pass — containment costs no extra corpus passes.
     */
   def violationsContained(
       df: DataFrame, ruleSet: RuleSet,
@@ -537,16 +511,10 @@ object Validator {
 
     def probe(rule: Rule): Option[Exception] =
       try {
-        rule match {
-          case r: ReferentialRule =>
-            referentialViolations(df, r, dims(r.dimension))
-          case r: UniqueRule => uniqueViolations(df, r)
-          case r => df.select(RuleCompiler.compileRow(r).violated)
-        }
+        violations(df, RuleSet(ruleSet.name, Seq(rule)), dims)
         None
       } catch { case e: Exception => Some(e) }
-    val probed = (ruleSet.rowRules ++ ruleSet.referentialRules ++
-      ruleSet.uniqueRules).map(r => r -> probe(r))
+    val probed = ruleSet.rules.map(r => r -> probe(r))
     val healthy = RuleSet(ruleSet.name, probed.collect { case (r, None) => r })
     (violations(df, healthy, dims) +:
       probed.collect { case (r, Some(e)) => errorRow(r.id, e) })

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * /root/reference/maps/validation_mapping.json).
   *
   * Row-level rules compile to Catalyst `Column` predicates evaluated in a
-  * single whole-stage-codegen pass; dataset-level rules (uniqueness,
-  * referential) compile to aggregate / broadcast-join plans in
-  * [[graft.engine.Validator]].
+  * single whole-stage-codegen pass; dataset-level rules compile in
+  * [[graft.engine.Validator.violations]]: uniqueness to an aggregate,
+  * referential to a predicate in the same pass (small dimension) or a
+  * sort-merge anti-join (large dimension).
   */
 sealed trait Rule {
   def id: String
@@ -91,25 +92,15 @@ final case class ConditionalRule(
 
 /** Value-set membership (reference "not in the value set",
   * test_profiles.py:183-192): `column` must appear in the dimension named
-  * `dimension` (resolved by the engine — a small dimension compiles to a
-  * static predicate fused into the row pass, a large one to an anti-join).
+  * `dimension`, resolved by [[graft.engine.Validator.violations]]. A
+  * dimension of at most 10,000 values is collected once and compiles to a
+  * `NOT IN` predicate in the shared row pass
+  * ([[RuleCompiler.compileMembership]]); a larger one compiles to a
+  * `merge`-hinted left-anti join, never a broadcast. A NULL key violates on
+  * both paths, and both emit the same detail.
   */
 final case class ReferentialRule(
     id: String, column: String, dimension: String,
-    severity: String = "error", appliesTo: Option[String] = None) extends Rule
-
-/** A [[ReferentialRule]] whose small dimension has been RESOLVED to its
-  * literal value list (engine-internal, round 7): compiles to the same
-  * null-is-violation `NOT IN` predicate the standalone membership check
-  * uses, but as a ROW rule — so it rides the single-scan codegen pass
-  * with every other row rule instead of paying its own scan of the corpus
-  * per referential rule. Not part of the user-facing config vocabulary
-  * (the loader never produces it), and deliberately NOT in
-  * [[RuleSet.rowRules]]: only [[graft.engine.Validator]] constructs it,
-  * from an already-collected dimension.
-  */
-final case class ValueSetRule(
-    id: String, column: String, values: Seq[Any], dimension: String,
     severity: String = "error", appliesTo: Option[String] = None) extends Rule
 
 /** Uniqueness of a key column (north-star rule over doc_id), or of a
@@ -220,17 +211,25 @@ object RuleCompiler {
       CompiledRowRule(id, sev,
         gate(rule, col(whenCol) === lit(whenVal) && compiled.violated),
         concat(lit(s"when $whenCol='$whenVal': "), compiled.detail))
-    case ValueSetRule(id, c, values, dimName, sev, _) =>
-      // identical predicate AND detail to the standalone membership check
-      // (Validator.referentialViolations): NULL keys are violations, and a
-      // NULL key's concat-detail is NULL — byte-for-byte the anti-join
-      // form's output, now evaluated in the shared row-rule scan
-      CompiledRowRule(id, sev,
-        gate(rule, col(c).isNull || !col(c).isin(values: _*)),
-        concat(lit(s"$c='"), col(c), lit(s"' not in $dimName")))
     case other =>
       throw new IllegalArgumentException(s"not a row-level rule: $other")
   }
+
+  /** A referential rule over its dimension's collected non-null `values`,
+    * as a row rule for the shared pass. A NULL key violates: it can be in
+    * no value set, exactly as under the anti-join form.
+    */
+  def compileMembership(rule: ReferentialRule, values: Seq[Any]): CompiledRowRule =
+    CompiledRowRule(rule.id, rule.severity,
+      gate(rule, col(rule.column).isNull || !col(rule.column).isin(values: _*)),
+      membershipDetail(rule))
+
+  /** The detail of a referential violation, `col='v' not in dim`, on both
+    * the predicate and the anti-join path (NULL for a NULL key).
+    */
+  def membershipDetail(rule: ReferentialRule): Column =
+    concat(lit(s"${rule.column}='"), col(rule.column).cast("string"),
+      lit(s"' not in ${rule.dimension}"))
 }
 
 /** JSON rule-set loader — mirrors the shape of the reference's
@@ -250,10 +249,7 @@ object RuleSetLoader {
   final case class Routing(
       ruleSets: Map[String, RuleSet],
       routing: Map[String, String],
-      defaultRuleSet: String) {
-    def forSource(source: String): RuleSet =
-      ruleSets(routing.getOrElse(source, defaultRuleSet))
-  }
+      defaultRuleSet: String)
 
   private def str(v: JValue, f: String): String =
     (v \ f) match { case JString(s) => s; case x => x.values.toString }

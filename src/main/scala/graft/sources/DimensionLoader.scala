@@ -13,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Inline JSON (`{"valueSets": {"name": ["A","N"], ...}}`) for small
   * enumerations — each becomes a 1-column local-relation DataFrame that
-  * the referential check compiles into a static predicate (no scan, no
-  * shuffle). A LARGE code system is any DataFrame (a parquet scan) handed
-  * to [[graft.engine.Validator.referentialViolationsBigDim]]'s shuffle-join
-  * path (a 10⁸-code system must never be collected or broadcast).
+  * [[graft.engine.Validator.violations]] compiles into a static predicate
+  * (no scan, no shuffle). A LARGE code system is any DataFrame (a parquet
+  * scan) in the same map: above 10,000 values the compiler plans a
+  * sort-merge anti-join against it (a 10⁸-code system must never be
+  * collected or broadcast).
   */
 object DimensionLoader {
   import org.json4s._

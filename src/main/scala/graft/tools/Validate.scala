@@ -66,15 +66,37 @@ object Validate {
         */
       bucketed: Option[String] = None)
 
-  def parseArgs(argv: Array[String]): Args = {
-    val m = argv.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
+  /** Every flag `main` reads; each takes exactly one value. */
+  private val Flags = Set("tokens", "rules", "dims", "manifest", "snapshot",
+    "report", "violations", "prune", "pipeline", "expect", "metrics", "runid",
+    "sla", "drift", "bucketed", "trend")
+
+  /** `--flag value` pairs. An unknown flag, a flag without a value (last,
+    * or followed by another flag) and a stray value fail with an
+    * `IllegalArgumentException` that names it: a typo'd `--snapshto 42`
+    * must not validate snapshot 0.
+    */
+  private def flags(argv: Array[String]): Map[String, String] = {
+    def bad(msg: String) = throw new IllegalArgumentException(msg)
+    def isFlag(a: String) = a.startsWith("--")
+    argv.indices.filter(_ % 2 == 0).map { i =>
+      val k = argv(i)
+      if (!isFlag(k)) bad(s"expected a --flag, got '$k'")
+      if (!Flags(k.stripPrefix("--"))) bad(s"unknown flag $k")
+      if (i + 1 >= argv.length || isFlag(argv(i + 1))) bad(s"flag $k needs a value")
+      k.stripPrefix("--") -> argv(i + 1)
     }.toMap
+  }
+
+  def parseArgs(argv: Array[String]): Args = {
+    val m = flags(argv)
+    def required(k: String) =
+      m.getOrElse(k, throw new IllegalArgumentException(s"missing flag --$k"))
     Args(
-      tokens = m("tokens"),
-      rules = m("rules"),
+      tokens = required("tokens"),
+      rules = required("rules"),
       dims = m.get("dims"),
-      manifest = m("manifest"),
+      manifest = required("manifest"),
       snapshot = m.getOrElse("snapshot", "0").toLong,
       report = m.get("report"),
       violations = m.get("violations"),
@@ -223,18 +245,19 @@ object Validate {
       .trend(spark, metricsDir).orderBy("run_id", "rule_id"))))
 
   def main(argv: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     // trend-only verb: `Validate --trend <metricsDir>` reads the metrics
     // table and prints the run-over-run trend — no corpus, no rules
-    val ti = argv.indexOf("--trend")
-    if (ti >= 0) {
-      val cpusT = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-      val spark = graft.Sessions.local(cpusT, "graft-trend")
-      try println(trendLine(spark, argv(ti + 1)))
-      finally spark.stop()
-      return
+    flags(argv).get("trend") match {
+      case Some(metricsDir) =>
+        val spark = graft.Sessions.local(cpus, "graft-trend")
+        try println(trendLine(spark, metricsDir))
+        finally spark.stop()
+      case None => validate(parseArgs(argv), cpus)
     }
-    val args = parseArgs(argv)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+  }
+
+  private def validate(args: Args, cpus: Int): Unit = {
     val spark = graft.Sessions.local(cpus, "graft-validate")
     val failed =
       try {

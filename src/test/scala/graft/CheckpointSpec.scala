@@ -12,6 +12,23 @@ class CheckpointSpec extends SparkSpec {
   private def dims = Map("allowed_sources" -> TokenTable.allowedDim(spark))
   private val ruleSet = RuleSet.default(50000)
 
+  /** A resumable run of one rule set. */
+  private def runResumable(spark: org.apache.spark.sql.SparkSession,
+      tokens: org.apache.spark.sql.DataFrame, ruleSet: RuleSet,
+      dims: Map[String, org.apache.spark.sql.DataFrame], manifestPath: String,
+      snapshotId: Long): ValidationRunner.RunResult =
+    ValidationRunner.runResumableWith(spark, tokens,
+      df => graft.engine.Validator.violations(df, ruleSet, dims),
+      manifestPath, snapshotId)
+
+  /** The per-partition summary reconstructed from the manifest at a
+    * snapshot (latest ok generation per partition).
+    */
+  private def summaryAt(spark: org.apache.spark.sql.SparkSession,
+      manifestPath: String, snapshotId: Long) =
+    Checkpoint.summaryFrame(spark,
+      Checkpoint.latestOk(Checkpoint.load(spark, manifestPath), snapshotId))
+
   private def fixture = Seq(
     TokenRow("a1", Array(1, 2), 2, "A"),
     TokenRow("a2", Array(1), 2, "A"), // length violation
@@ -22,12 +39,12 @@ class CheckpointSpec extends SparkSpec {
   test("first run validates all partitions; second run skips them") {
     withTempDir("graft-manifest") { tmp =>
       val dir = s"$tmp/manifest"
-      val r1 = ValidationRunner.runResumable(
+      val r1 = runResumable(
         spark, fixture, ruleSet, dims, dir, snapshotId = 1L)
       assert(r1.validatedPartitions.toSet === Set("A", "N", "R"))
       assert(r1.skippedPartitions.isEmpty)
 
-      val r2 = ValidationRunner.runResumable(
+      val r2 = runResumable(
         spark, fixture, ruleSet, dims, dir, snapshotId = 1L)
       assert(r2.validatedPartitions.isEmpty)
       assert(r2.skippedPartitions.toSet === Set("A", "N", "R"))
@@ -46,12 +63,12 @@ class CheckpointSpec extends SparkSpec {
       // pre-mark partition A as done at snapshot 7
       Checkpoint.append(spark, dir, Seq(
         graft.model.ManifestEntry("A", 7L, "ok", 2L, 1L, 0L)))
-      val r = ValidationRunner.runResumable(
+      val r = runResumable(
         spark, fixture, ruleSet, dims, dir, snapshotId = 7L)
       assert(r.validatedPartitions.toSet === Set("N", "R"))
       assert(r.skippedPartitions.toSet === Set("A"))
       // different snapshot → everything pending again
-      val r2 = ValidationRunner.runResumable(
+      val r2 = runResumable(
         spark, fixture, ruleSet, dims, dir, snapshotId = 8L)
       assert(r2.validatedPartitions.toSet === Set("A", "N", "R"))
     }
@@ -65,9 +82,9 @@ class CheckpointSpec extends SparkSpec {
         graft.model.ManifestEntry("A", 1L, "error:Boom", 0L, 0L, 0L),
         graft.model.ManifestEntry("N", 1L, "error:Boom", 0L, 0L, 0L)))
       // successful resume validates everything
-      ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
+      runResumable(spark, fixture, ruleSet, dims, dir, 1L)
       // all-done call reconstructs from the manifest: one ok row per partition
-      val r = ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
+      val r = runResumable(spark, fixture, ruleSet, dims, dir, 1L)
       assert(r.validatedPartitions.isEmpty)
       val rows = r.summary.collect()
         .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getBoolean(3)))
@@ -92,7 +109,7 @@ class CheckpointSpec extends SparkSpec {
         fixture.write.parquet(fdir)
         val poisoned = spark.read.parquet(fdir)
           .withColumn("n_tok", boom(col("source"), col("n_tok")))
-        val r = ValidationRunner.runResumable(
+        val r = runResumable(
           spark, poisoned, ruleSet, dims, dir, snapshotId = 2L)
         // R failed and is attributed; A and N completed and are checkpointed
         val m = Checkpoint.read(spark, dir).collect()
@@ -121,7 +138,7 @@ class CheckpointSpec extends SparkSpec {
         runTs = Long.MaxValue / 2)
       Checkpoint.append(spark, dir, Seq(
         graft.model.ManifestEntry("A", 1L, "ok", 2L, 1L, 0L))) // auto-stamped
-      val s = Checkpoint.summaryAt(spark, dir, 1L).collect()
+      val s = summaryAt(spark, dir, 1L).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       assert(s === Seq(("A", 2L, 1L)))
     }
@@ -138,13 +155,13 @@ class CheckpointSpec extends SparkSpec {
       val r = Checkpoint.read(spark, dir)
       assert(r.columns.contains("run_ts"))
       // the latest-generation window must not throw on the defaulted column
-      val s = Checkpoint.summaryAt(spark, dir, 1L).collect()
+      val s = summaryAt(spark, dir, 1L).collect()
         .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
       assert(s === Set(("A", 2L, 1L), ("N", 1L, 0L)))
       // and a NEW append (which stamps run_ts) must coexist with the old rows
       Checkpoint.append(spark, dir, Seq(
         graft.model.ManifestEntry("A", 1L, "ok", 3L, 0L, 0L)))
-      val s2 = Checkpoint.summaryAt(spark, dir, 1L).collect()
+      val s2 = summaryAt(spark, dir, 1L).collect()
         .map(x => (x.getString(0), x.getLong(1), x.getLong(2))).toSet
       assert(s2 === Set(("A", 3L, 0L), ("N", 1L, 0L)))
     }
@@ -437,7 +454,7 @@ class CheckpointSpec extends SparkSpec {
   test("manifest records per-partition lineage + metrics") {
     withTempDir("graft-manifest3") { tmp =>
       val dir = s"$tmp/manifest"
-      ValidationRunner.runResumable(spark, fixture, ruleSet, dims, dir, 1L)
+      runResumable(spark, fixture, ruleSet, dims, dir, 1L)
       val m = Checkpoint.read(spark, dir).collect()
       assert(m.length === 3)
       assert(m.forall(_.getAs[String]("status") == "ok"))

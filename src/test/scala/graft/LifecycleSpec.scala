@@ -217,6 +217,25 @@ class LifecycleSpec extends SparkSpec {
     }
   }
 
+  test("Validate's flags: parsed in pairs; unknown or unpaired flags fail by name") {
+    import graft.tools.Validate
+    val base = Array("--tokens", "t", "--rules", "r.json", "--manifest", "m")
+    val a = Validate.parseArgs(base ++ Array("--snapshot", "42", "--sla", "true"))
+    assert((a.tokens, a.rules, a.manifest, a.snapshot, a.sla, a.dims) ===
+      ("t", "r.json", "m", 42L, true, None))
+    def rejects(argv: Array[String], flag: String): Unit = {
+      val e = intercept[IllegalArgumentException](Validate.parseArgs(argv))
+      assert(e.getMessage.contains(flag), e.getMessage)
+    }
+    rejects(base ++ Array("--snapshto", "42"), "--snapshto") // typo
+    rejects(base :+ "--report", "--report")                 // last, no value
+    rejects(Array("--tokens", "--rules", "r.json"), "--tokens") // no value
+    rejects(base.drop(2), "--tokens")                        // missing
+    // a bare --trend fails before any session starts
+    val e = intercept[IllegalArgumentException](Validate.main(Array("--trend")))
+    assert(e.getMessage.contains("--trend"), e.getMessage)
+  }
+
   test("Validate --prune reclaims superseded violation generations") {
     withTempDir("graft_vprune") { tmp =>
       val manifest = s"$tmp/manifest"

@@ -647,9 +647,8 @@ class MultimodalSpec extends SparkSpec {
     assert(dims.keySet === Set("colors", "codes"))
     val df = Seq(("d1", Array(1), 1, "red"), ("d2", Array(2), 1, "green"))
       .toDF("doc_id", "tokens", "n_tok", "source")
-    val v = graft.engine.Validator.referentialViolations(
-      df, graft.rules.ReferentialRule("ref_color", "source", "colors"),
-      dims("colors"))
+    val v = graft.engine.Validator.violations(df, graft.rules.RuleSet("colors",
+      Seq(graft.rules.ReferentialRule("ref_color", "source", "colors"))), dims)
     assert(v.select("doc_id").as[String].collect().toSeq === Seq("d2"))
     intercept[IllegalArgumentException] {
       graft.sources.DimensionLoader.parse(spark,

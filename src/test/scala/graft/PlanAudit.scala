@@ -30,6 +30,18 @@ class PlanAuditSpec extends SparkSpec {
       "subset diff re-scans the corpus for the baseline leg")
   }
 
+  test("referential rules with a dimension under 10k values are one scan, no join") {
+    // both compile to a membership predicate in the one row pass: the
+    // loaded value set holds 2 values, the non-pending orders 9,912 at
+    // sf0.01 (the orders scan is a build-time collect, not in the plan)
+    for (q <- Seq(Queries.vRefLoadedDim(spark, sf001),
+        Queries.vRefBigDim(spark, sf001))) {
+      val plan = q.queryExecution.executedPlan.toString
+      assert(scans(q) === 1, plan.take(1500))
+      assert(!plan.contains("Join"), plan.take(1500))
+    }
+  }
+
   test("vocabulary-sized joins broadcast (LM scoring, PMI)") {
     // the per-word log-prob / unigram joins key the CORPUS-sized exploded
     // frame against vocabulary-sized tables — when the realized vocabulary

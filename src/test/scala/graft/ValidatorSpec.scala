@@ -140,17 +140,25 @@ class ValidatorSpec extends SparkSpec {
     assert(got === expected)
   }
 
+  /** `rule` alone through the one rule compiler. */
+  private def refViolations(df: org.apache.spark.sql.DataFrame,
+      rule: ReferentialRule, dim: org.apache.spark.sql.DataFrame) =
+    Validator.violations(df, RuleSet("ref", Seq(rule)),
+      Map(rule.dimension -> dim))
+
   test("small-dim referential compiles to a pushable predicate; null key violates") {
     import graft.sources.TokenTable
     val df = Seq(
       TokenRow("ok", Array(1), 1, "A"),
       TokenRow("bad", Array(1), 1, "nope"),
       TokenRow("nul", Array(1), 1, null)).toDF
-    val v = Validator.referentialViolations(df,
+    val v = refViolations(df,
       ReferentialRule("ref_source", "source", "allowed_sources"),
       TokenTable.allowedDim(spark))
     // null keys are violations, same as the anti-join semantics
     assert(v.select("doc_id").as[String].collect().toSet === Set("bad", "nul"))
+    assert(v.where(col("doc_id") === "bad").select("detail").as[String]
+      .collect().toSeq === Seq("source='nope' not in allowed_sources"))
     // and the plan is a predicate, not a join (pruning-capable at the scan)
     val plan = v.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), plan.take(1200))
@@ -166,26 +174,44 @@ class ValidatorSpec extends SparkSpec {
       TokenRow("bad", Array(1), 1, "nope")).toDF
     val dimWithNull = Seq(Some("A"), Some("N"), Some("R"), None)
       .toDF("allowed_source")
-    val v = Validator.referentialViolations(df,
+    val v = refViolations(df,
       ReferentialRule("ref_source", "source", "allowed_sources"), dimWithNull)
     assert(v.select("doc_id").as[String].collect().toSet === Set("bad"))
   }
 
   test("big-dimension referential: shuffle join, never broadcast") {
-    // dimension too big to broadcast in production: the merge hint must pin
-    // a sort-merge join regardless of the optimizer's size estimate
-    val dim = spark.range(0, 1000).select(col("id").as("allowed_key"))
-    val df = fixture.withColumn("okey", lit(5000L)) // nothing allowed
-    val rule = ReferentialRule("ref_big", "okey", "allowed_key")
-    val v = Validator.referentialViolationsBigDim(df, rule, dim)
+    // above 10,000 values the dimension is too big for a literal predicate:
+    // the merge hint must pin a sort-merge join regardless of the
+    // optimizer's size estimate
+    val dim = spark.range(0, 20000).select(col("id").as("allowed_key"))
+    val df = fixture.withColumn("okey", lit(50000L)) // nothing allowed
+    val rule = ReferentialRule("ref_big", "okey", "allowed_keys")
+    val v = refViolations(df, rule, dim)
     val plan = v.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan.take(1500))
     assert(!plan.contains("BroadcastExchange"), plan.take(1500))
     assert(v.count() === fixture.count()) // every row violates
+    // the same detail as the predicate form
+    assert(v.select("detail").distinct().as[String].collect().toSeq ===
+      Seq("okey='50000' not in allowed_keys"))
     // and allowed keys produce no violations
-    val ok = Validator.referentialViolationsBigDim(
-      fixture.withColumn("okey", lit(7L)), rule, dim)
+    val ok = refViolations(fixture.withColumn("okey", lit(7L)), rule, dim)
     assert(ok.count() === 0)
+  }
+
+  test("a dimension above 10k values is collected once per violations call") {
+    val dim = spark.range(0, 20000).select(col("id").as("allowed_key"))
+    val df = fixture.withColumn("okey", lit(7L))
+    val rules = RuleSet("two_refs", Seq(
+      ReferentialRule("ref_a", "okey", "allowed_keys"),
+      ReferentialRule("ref_b", "okey", "allowed_keys", severity = "warning")))
+    // the compiler's collect is a limit-collect, which can take more than
+    // one job: count the jobs of one such collect of the same dimension
+    val oneCollect = jobsIn(dim.limit(10001).collect())
+    val build = jobsIn(Validator.violations(df, rules,
+      Map("allowed_keys" -> dim)))
+    assert(oneCollect >= 1)
+    assert(build === oneCollect, s"$build build jobs vs $oneCollect per collect")
   }
 
   test("rule-set JSON loader round-trips routing and rules") {
@@ -200,8 +226,8 @@ class ValidatorSpec extends SparkSpec {
         | "routing": {"A": "strict"},
         | "defaultRuleSet": "default"}""".stripMargin
     val routing = RuleSetLoader.parse(json)
-    assert(routing.forSource("A").name == "strict")
-    assert(routing.forSource("Z").name == "default")
+    assert(routing.routing === Map("A" -> "strict"))
+    assert(routing.defaultRuleSet == "default")
     assert(routing.ruleSets("default").rules.size == 5)
     assert(routing.ruleSets("strict").rules.head ==
       RangeRule("rg", "n_tok", 1, 10, "warning", None))
