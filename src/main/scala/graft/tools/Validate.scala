@@ -79,7 +79,7 @@ object Validate {
   private def flags(argv: Array[String]): Map[String, String] = {
     def bad(msg: String) = throw new IllegalArgumentException(msg)
     def isFlag(a: String) = a.startsWith("--")
-    argv.indices.filter(_ % 2 == 0).map { i =>
+    (argv.indices by 2).map { i =>
       val k = argv(i)
       if (!isFlag(k)) bad(s"expected a --flag, got '$k'")
       if (!Flags(k.stripPrefix("--"))) bad(s"unknown flag $k")
